@@ -75,15 +75,9 @@ def refresh_rollup(
         .drop(PARTITION_COL)
     )
     fresh = with_partition_col(hourly_rollup(base_slice), "hour_bucket")
-    sess = fresh.sparkSession
-    prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        distribute_for_write(fresh, PARTITION_COL).write.mode("overwrite").partitionBy(
-            PARTITION_COL
-        ).parquet(rollup_path)
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    distribute_for_write(fresh, PARTITION_COL).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(PARTITION_COL).parquet(rollup_path)
 
 
 def rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:

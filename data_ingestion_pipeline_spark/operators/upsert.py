@@ -9,11 +9,17 @@ equivalent built here:
 - **table layout**: parquet partitioned by a day-derived column
   (``p_date``) — the analog of hypertable chunks; time-range
   predicates prune partitions at scan time.
+- **write layout**: partitioned writes cluster their rows by the
+  partition column first (``distribute_for_write``), so a commit
+  emits O(touched partitions) files whatever the input partitioning.
+  Only an explicit argument opts out
+  (``versioned.commit_version_partitioned(cluster=False)``); the
+  shape of the caller's plan never does.
 - **upsert**: MERGE-as-rewrite. Updates touch only the partitions
-  their keys fall in; with
-  ``spark.sql.sources.partitionOverwriteMode=dynamic``, an
-  ``overwrite`` write replaces exactly those partitions and leaves
-  the rest of the table untouched. At 100 TB the rewrite cost is
+  their keys fall in; an ``overwrite`` write with the writer option
+  ``partitionOverwriteMode=dynamic`` replaces exactly those
+  partitions and leaves the rest of the table untouched (the
+  session conf is never changed). At 100 TB the rewrite cost is
   proportional to the touched partitions (a day of data), not the
   table.
 - **determinism**: the merged content of a touched partition is
@@ -54,67 +60,31 @@ def with_partition_col(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df.withColumn(PARTITION_COL, F.date_format(F.col(ts_col), "yyyy-MM-dd"))
 
 
-_CALLER_LAYOUT_NODES = frozenset(
-    {"Repartition", "RepartitionByExpression", "RebalancePartitions"}
-)
-_LAYOUT_TRANSPARENT_NODES = frozenset({"Project", "SubqueryAlias", "WithColumns"})
-
-
-def caller_partitioned(df: DataFrame) -> bool:
-    """True when the caller explicitly chose a partitioning for this
-    frame — a repartition/coalesce/rebalance at the top of the logical
-    plan (looking through projections such as with_partition_col's
-    withColumn). Writers honor that layout instead of re-distributing:
-    callers control file layout (e.g. a test committing repartition(4)
-    to create a multi-file partition, or a pipeline pre-clustering for
-    a downstream reader)."""
-    try:
-        node = df._jdf.queryExecution().logical()
-        for _ in range(16):
-            name = node.getClass().getSimpleName()
-            if name in _CALLER_LAYOUT_NODES:
-                return True
-            if name in _LAYOUT_TRANSPARENT_NODES:
-                node = node.children().apply(0)
-                continue
-            return False
-    except Exception:
-        return False
-    return False
-
-
 def distribute_for_write(df: DataFrame, *cols: str) -> DataFrame:
     """Cluster rows by the layout column(s) before a partitionBy
     write — Iceberg's write.distribution-mode=hash (guide §6:
     partitioned writes from N input partitions otherwise emit
     O(N × distinct values) small files; clustering first emits
-    O(distinct values)).
+    O(distinct values)). The only place that knows the distribution
+    policy; it applies to every frame, whatever its input layout.
 
-    Uses a REBALANCE hint rather than repartition(col): AQE both
-    coalesces small partitions AND splits skewed ones
+    With AQE on in the frame's own session it is a REBALANCE hint:
+    AQE both coalesces small partitions AND splits skewed ones
     (spark.sql.adaptive.optimizeSkewsInRebalancePartitions, default
     on), so a hot partition value still writes through many tasks at
     advisory-sized chunks instead of one giant file — plain
     repartition(col) caps write parallelism at the distinct-value
-    count (guide §2.2/§2.5). Skipped entirely when the caller already
-    repartitioned/coalesced explicitly: caller-chosen file layout wins.
+    count (guide §2.2/§2.5).
 
-    REBALANCE only resolves under AQE; in a stateful streaming drain
-    Spark clones the session with AQE force-disabled ("Disabling AQE
-    since AQE is not supported in stateful workloads") and the hint
-    would be SILENTLY dropped — no distribution at all, O(input
-    partitions × values) small files per micro-batch. There we fall
-    back to the plain hash repartition: without AQE no skew split
-    exists anyway, and micro-batches are small by construction."""
-    if caller_partitioned(df):
-        return df
-    try:
-        aqe = str(
-            df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
-        ).lower() == "true"
-    except Exception:
-        aqe = True
-    if not aqe:
+    Without AQE it is a plain hash repartition(cols). REBALANCE only
+    resolves under AQE: with AQE off the hint analyses to its bare
+    child, so no distribution at all. A stateful streaming drain runs
+    foreachBatch on a CLONED session with AQE force-disabled
+    ("Disabling AQE since AQE is not supported in stateful
+    workloads"), which is why the conf is read from df.sparkSession,
+    not from the caller's session. Without AQE no skew split exists
+    anyway, and micro-batches are small by construction."""
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true").lower() != "true":
         return df.repartition(*[F.col(c) for c in cols])
     return df.hint("rebalance", *cols)
 
@@ -208,36 +178,27 @@ def upsert_into_table(
     merged = updates.unionByName(
         base.join(updates.select(keys).distinct(), on=keys, how="left_anti")
     )
-    # inside foreachBatch the micro-batch DataFrame belongs to a CLONED
-    # SparkSession with isolated confs — the overwrite-mode conf must be
-    # set on the session that executes the write (merged inherits it
-    # from `updates`), not the outer one the caller passed
-    sess = merged.sparkSession
-    prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # the merge plan reads `path` and the overwrite writes to
-        # `path`: localCheckpoint materializes the merged partitions
-        # to executor block storage (cutting the lineage back to the
-        # input files) so the overwrite never overlaps its own input
-        # — ONE parquet write per merge, not a staging double-write.
-        #
-        # Durability note (deliberate non-goal): dynamic partition
-        # overwrite is not transactional — a crash between the delete
-        # and the rewrite of a touched partition loses that
-        # partition's base rows, and checkpoint replay then merges
-        # against the corrupted base. The reference has the same
-        # window only per-row (mid-transaction Postgres aborts roll
-        # back). A table format with atomic commits (Delta/Iceberg)
-        # is the production answer; plain parquet is the environment
-        # constraint here.
-        merged = distribute_for_write(  # same §6 rule as above
-            with_partition_col(merged, ts_col), PARTITION_COL
-        ).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(path)
-        merged.unpersist()
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the merge plan reads `path` and the overwrite writes to `path`:
+    # localCheckpoint materializes the merged partitions to executor
+    # block storage (cutting the lineage back to the input files) so
+    # the overwrite never overlaps its own input — ONE parquet write
+    # per merge, not a staging double-write.
+    #
+    # Durability note (deliberate non-goal): dynamic partition
+    # overwrite is not transactional — a crash between the delete and
+    # the rewrite of a touched partition loses that partition's base
+    # rows, and checkpoint replay then merges against the corrupted
+    # base. The reference has the same window only per-row
+    # (mid-transaction Postgres aborts roll back). A table format with
+    # atomic commits (Delta/Iceberg) is the production answer; plain
+    # parquet is the environment constraint here.
+    merged = distribute_for_write(  # same §6 rule as above
+        with_partition_col(merged, ts_col), PARTITION_COL
+    ).localCheckpoint(eager=True)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(PARTITION_COL).parquet(path)
+    merged.unpersist()
 
 
 def upsert_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

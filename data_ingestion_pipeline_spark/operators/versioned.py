@@ -404,6 +404,54 @@ def _attempt_data_dir(path: str, v: int) -> str:
     return os.path.join(path, "data", f"v{v}-{uuid.uuid4().hex[:8]}")
 
 
+def _write_version_files(
+    path: str,
+    v: int,
+    df: DataFrame,
+    partition_col: str | None = None,
+    cluster: bool = True,
+) -> dict[str, str | None]:
+    """The one versioned file writer: df lands constraint-guarded in a
+    fresh attempt directory for version v (partitionBy(partition_col)
+    when given) and the written files come back as a sorted
+    {relpath: partition value} map. A partitioned write is clustered
+    by distribute_for_write (below the guard, so the guard filters the
+    distributed rows) unless the caller passes cluster=False to keep
+    its own layout."""
+    data_dir = _attempt_data_dir(path, v)
+    if partition_col and cluster:
+        df = distribute_for_write(df, partition_col)
+
+    def write(g: DataFrame) -> None:
+        w = g.write.mode("overwrite")
+        (w.partitionBy(partition_col) if partition_col else w).parquet(data_dir)
+
+    _guarded_write(df, path, write)
+    return {
+        f: _partition_of(f, partition_col) if partition_col else None
+        for f in _walk_rel_parquet(data_dir, path)
+    }
+
+
+def _maintain_indexes(
+    spark: SparkSession,
+    path: str,
+    v: int,
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None = None,
+) -> None:
+    """Post-publish write-time index maintenance: refresh the min/max
+    index of each stats column and the bloom index of each bloom
+    column (both incremental — only this commit's new files' footers
+    are read). The commit is already durable, so any failure surfaces
+    as IndexMaintenanceError, never the raw error."""
+    for build, cols in ((build_column_stats, stats_cols), (build_bloom_index, bloom_cols)):
+        for col in cols or ():
+            try:
+                build(spark, path, col)
+            except Exception as e:  # noqa: BLE001 — commit already durable
+                raise IndexMaintenanceError(v, e) from e
+
 
 def commit_version(
     spark: SparkSession,
@@ -446,16 +494,7 @@ def commit_version(
     """
     _occ_check(path, expected_current)
     v = current_version(path) + 1
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        df, path, lambda g: g.write.mode("overwrite").parquet(data_dir)
-    )
-    rel_dir = os.path.relpath(data_dir, path)
-    files = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
+    files = list(_write_version_files(path, v, df))
     # schema rides in every manifest so an empty commit (zero part
     # files) stays readable via _empty_snapshot; committed_at backs
     # AS-OF-timestamp time travel (wall clock — an audit attribute,
@@ -467,19 +506,7 @@ def commit_version(
          "schema": df.schema.json(), "committed_at": time.time()},
         expected_current,
     )
-    for col in stats_cols or ():
-        try:
-            build_column_stats(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
-    # `bloom_cols` is the point-lookup twin of stats_cols: write-time
-    # bloom maintenance (incremental, same carry/harvest split), same
-    # post-publish failure contract
-    for col in bloom_cols or ():
-        try:
-            build_bloom_index(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
+    _maintain_indexes(spark, path, v, stats_cols, bloom_cols)
     return v
 
 
@@ -3545,9 +3572,6 @@ def _partition_of(relpath: str, col: str = PART_COL) -> str | None:
     return None
 
 
-_distribute_for_write = distribute_for_write
-
-
 def commit_version_clustered(
     spark: SparkSession,
     path: str,
@@ -3566,20 +3590,11 @@ def commit_version_clustered(
 
     _occ_check(path, expected_current)
     v = current_version(path) + 1
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        _distribute_for_write(df, partition_col),
-        path,
-        lambda g: g.write.partitionBy(partition_col)
-        .mode("overwrite")
-        .parquet(data_dir),
-    )
-    files = _walk_rel_parquet(data_dir, path)
-    partitions = {f: _partition_of(f, partition_col) for f in files}
+    partitions = _write_version_files(path, v, df, partition_col)
     _publish_manifest(
         path,
         v,
-        {"version": v, "files": files, "partitions": partitions,
+        {"version": v, "files": list(partitions), "partitions": partitions,
          "partition_col": partition_col,
          "schema": df.schema.json(),
          "committed_at": time.time(),
@@ -3605,6 +3620,7 @@ def commit_version_partitioned(
     meta: dict | None = None,
     expected_current: int | None = None,
     dv=_DV_UNSET,
+    cluster: bool = True,
 ) -> int:
     """Commit df day-partitioned, carrying over untouched files from
     an earlier snapshot BY REFERENCE: the manifest lists `carried`
@@ -3626,7 +3642,11 @@ def commit_version_partitioned(
     a caller that really wants the DV gone materializes first
     (materialize_deletes) or commits without carried files. DV rows
     naming rewritten files never match (see _read_files_as_snapshot), so
-    inheriting is always sound."""
+    inheriting is always sound.
+
+    The new rows are clustered by day before the write (one file per
+    touched day at small scale); `cluster=False` writes df's own
+    partitioning instead, for a caller that wants that layout."""
     from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
 
     _occ_check(path, expected_current)
@@ -3637,16 +3657,10 @@ def commit_version_partitioned(
             else None
         )
     v = current_version(path) + 1
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        _distribute_for_write(with_partition_col(df, ts_col), PART_COL),
-        path,
-        lambda g: g.write.partitionBy(PART_COL)
-        .mode("overwrite")
-        .parquet(data_dir),
+    new_files = _write_version_files(
+        path, v, with_partition_col(df, ts_col), PART_COL, cluster
     )
-    new_files = _walk_rel_parquet(data_dir, path)
-    files = sorted(list(carried or []) + new_files)
+    files = sorted([*(carried or []), *new_files])
     partitions = {f: _partition_of(f) for f in files}
     _publish_manifest(
         path,
@@ -3722,17 +3736,9 @@ def append_version_clustered(
     _occ_check(path, expected_current)
     prior = _manifest(path) if current_version(path) > 0 else {"files": [], "partitions": {}}
     v = prior.get("version", 0) + 1
-    data_dir = _attempt_data_dir(path, v)
     cons_at_write = table_constraints(path)
-    _guarded_write(
-        _distribute_for_write(df, partition_col),
-        path,
-        lambda g: g.write.partitionBy(partition_col)
-        .mode("overwrite")
-        .parquet(data_dir),
-    )
-    new_files = _walk_rel_parquet(data_dir, path)
-    new_parts = {f: _partition_of(f, partition_col) for f in new_files}
+    new_parts = _write_version_files(path, v, df, partition_col)
+    new_files = list(new_parts)
 
     base = prior
     exp = expected_current
@@ -3783,16 +3789,7 @@ def append_version_clustered(
                 )
             base = cur
             exp = None  # the rebase races again under the lock's guard
-    for col in stats_cols or ():
-        try:
-            build_column_stats(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
-    for col in bloom_cols or ():
-        try:
-            build_bloom_index(spark, path, col)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(v, e) from e
+    _maintain_indexes(spark, path, v, stats_cols, bloom_cols)
     return v
 
 
@@ -4369,9 +4366,10 @@ def _compact_unpartitioned(
 
 def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: commit events day-partitioned but pre-shuffled
-    into 6 tasks — every day partition lands ~6 small files, the
-    streaming-sink debris pattern — then OPTIMIZE-compact (one output
-    file per day at this scale) and return the CURRENT snapshot, which
+    into 6 tasks and written unclustered — every day partition lands
+    ~6 small files, the streaming-sink debris pattern — then
+    OPTIMIZE-compact (one output file per day at this scale) and
+    return the CURRENT snapshot, which
     must be row-identical to the pre-compaction table (file-count
     shrinkage and carried-file reuse are pinned in
     tests/test_versioned.py)."""
@@ -4385,7 +4383,7 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    commit_version_partitioned(spark, path, ev.repartition(6))
+    commit_version_partitioned(spark, path, ev.repartition(6), cluster=False)
     compact_files(spark, path)
     return read_version(spark, path).select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -6390,11 +6388,7 @@ def zorder_cluster_incremental(
         expected_current,
         prev=m,
     )
-    for c in cols:
-        try:
-            build_column_stats(spark, path, c)
-        except Exception as e:  # noqa: BLE001 — commit already durable
-            raise IndexMaintenanceError(nv, e) from e
+    _maintain_indexes(spark, path, nv, cols)
     return nv
 
 
@@ -6973,15 +6967,9 @@ def identity_column_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
     for parity in (0, 1):
         half = ev.filter(F.col("event_id") % 2 == parity)
         hwm = identity_high_water(path, "row_id")
-        tagged = (
-            assign_identity(half, "row_id", ["event_id"], start=hwm)
-            .withColumn("p_shard", F.col("event_type"))
-            # ids are already deterministic (pure rank of the data),
-            # so re-shuffling for WRITE LAYOUT is safe: one exchange
-            # on the shard key turns 32 partitions × 5 shards = 160
-            # tiny files per append into 5 right-sized ones
-            .repartition(F.col("p_shard"))
-        )
+        tagged = assign_identity(
+            half, "row_id", ["event_id"], start=hwm
+        ).withColumn("p_shard", F.col("event_type"))
         # partitionBy strips the cluster column from the data files —
         # shard on a DERIVED copy so event_type itself stays readable
         # (the build_ivfpq_index pattern)

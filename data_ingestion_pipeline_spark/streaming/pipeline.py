@@ -45,6 +45,7 @@ under ANY file/batch ordering.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -82,6 +83,49 @@ FEED_COLS = [f.name for f in FEED_SCHEMA.fields]
 # Bump when the feed layout/content rule changes — invalidates cached
 # feed dirs built by earlier code.
 _FEED_VERSION = "v1:4+2:mod5"
+_FEED_MARKER = "_FEED_COMPLETE"
+
+
+def _feed_is_current(feed_dir: str, key: str) -> bool:
+    """True when feed_dir holds a completed build for `key` that still
+    replays in write order. The file stream source replays files by
+    modification time (millisecond resolution), so a copy that reset
+    the mtimes (`cp -r`) would replay the feed in copy order: reuse
+    requires every file of each recorded write to be strictly newer,
+    in ms, than every file of the write before it. Anything else —
+    no marker, another key, a missing file, mtimes out of order — is
+    a miss, and the caller rebuilds."""
+    try:
+        with open(os.path.join(feed_dir, _FEED_MARKER)) as fh:
+            marker = json.load(fh)
+        if marker["key"] != key:
+            return False
+        ms = [
+            [os.stat(os.path.join(feed_dir, n)).st_mtime_ns // 1_000_000 for n in w]
+            for w in marker["writes"]
+        ]
+    except (OSError, ValueError, KeyError, TypeError):
+        return False
+    ms = [w for w in ms if w]
+    return all(max(a) < min(b) for a, b in zip(ms, ms[1:]))
+
+
+def _write_feed(feed_dir: str, key: str, writes: list[DataFrame]) -> None:
+    """Rebuild feed_dir: append each frame as its own write, in order
+    (sequential appends give each write strictly newer mtimes, which
+    is the replay order), then mark the build complete with `key` and
+    the file names of every write. A crashed half-build has no marker
+    and is rebuilt."""
+    shutil.rmtree(feed_dir, ignore_errors=True)
+    seen: set[str] = set()
+    names = []
+    for df in writes:
+        df.write.mode("append").parquet(feed_dir)
+        new = {n for n in os.listdir(feed_dir) if n.endswith(".parquet")} - seen
+        names.append(sorted(new))
+        seen |= new
+    with open(os.path.join(feed_dir, _FEED_MARKER), "w") as fh:
+        json.dump({"key": key, "writes": names}, fh)
 
 
 def build_feed(
@@ -96,24 +140,29 @@ def build_feed(
     within-batch dropDuplicates.
 
     The feed is a pure function of (sf_dir, version) over read-only
-    testdata, so a completed build is REUSED across invocations — a
-    marker file written after the last append makes completion
-    atomic-enough (a crashed half-build has no marker and is rebuilt).
+    testdata, so a completed build is REUSED across invocations
+    (_feed_is_current / _write_feed).
     """
-    marker = os.path.join(feed_dir, "_FEED_COMPLETE")
     key = f"{_FEED_VERSION}:{sf_dir}:{with_dups}"
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            if fh.read() == key:
-                return
-    shutil.rmtree(feed_dir, ignore_errors=True)
+    if _feed_is_current(feed_dir, key):
+        return
     ev = load_table(spark, sf_dir, "events").select(*FEED_COLS)
-    ev.repartition(4).write.mode("overwrite").parquet(feed_dir)
+    writes = [ev.repartition(4)]
     if with_dups:
-        dups = ev.filter(F.col("event_id") % 5 == 0)
-        dups.repartition(2).write.mode("append").parquet(feed_dir)
-    with open(marker, "w") as fh:
-        fh.write(key)
+        writes.append(ev.filter(F.col("event_id") % 5 == 0).repartition(2))
+    _write_feed(feed_dir, key, writes)
+
+
+def _ordered_slices(df: DataFrame, n: int, *order: str) -> list[DataFrame]:
+    """df cut into n contiguous ranges of `order`, one single-file
+    write each, first range first."""
+    from pyspark.sql import Window as W
+
+    sliced = df.withColumn("_slice", F.ntile(n).over(W.orderBy(*order)))
+    return [
+        sliced.filter(F.col("_slice") == k).drop("_slice").coalesce(1)
+        for k in range(1, n + 1)
+    ]
 
 
 def build_ordered_feed(
@@ -130,27 +179,10 @@ def build_ordered_feed(
     a production stream gets its order from the source itself, and a
     batch backfill would repartitionByRange instead.
     """
-    from pyspark.sql import Window as W
-
-    marker = os.path.join(feed_dir, "_FEED_COMPLETE")
     key = f"{_FEED_VERSION}:ordered{n_files}:{sf_dir}"
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            if fh.read() == key:
-                return
-    shutil.rmtree(feed_dir, ignore_errors=True)
-    ev = load_table(spark, sf_dir, "events").select(*FEED_COLS)
-    sliced = ev.withColumn(
-        "_slice", F.ntile(n_files).over(W.orderBy("ts", "event_id"))
-    )
-    for k in range(1, n_files + 1):
-        # sequential appends → strictly increasing mtimes → the file
-        # stream source replays the slices in time order
-        sliced.filter(F.col("_slice") == k).drop("_slice").coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-    with open(marker, "w") as fh:
-        fh.write(key)
+    if not _feed_is_current(feed_dir, key):
+        ev = load_table(spark, sf_dir, "events").select(*FEED_COLS)
+        _write_feed(feed_dir, key, _ordered_slices(ev, n_files, "ts", "event_id"))
 
 
 def build_ordered_feed_with_sentinel(
@@ -169,29 +201,20 @@ def build_ordered_feed_with_sentinel(
     watermark past every real row's window; real deployments do
     exactly this with heartbeat/punctuation events on idle partitions.
     The sentinel rows are filtered from the join output by user_id."""
-    marker = os.path.join(feed_dir, "_FEED_COMPLETE")
     key = f"{_FEED_VERSION}:ordered-sentinel:{sf_dir}"
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            if fh.read() == key:
-                return
-    shutil.rmtree(feed_dir, ignore_errors=True)
-    build_ordered_feed(spark, sf_dir, feed_dir)
-    os.remove(os.path.join(feed_dir, "_FEED_COMPLETE"))
-    mx = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max("ts").alias("m"))
-        .filter(F.col("m").isNotNull())
-    )
+    if _feed_is_current(feed_dir, key):
+        return
+    ev = load_table(spark, sf_dir, "events").select(*FEED_COLS)
+    mx = ev.agg(F.max("ts").alias("m")).filter(F.col("m").isNotNull())
     sent = mx.selectExpr(
         "stack(2,"
         " -1L, m + INTERVAL 240 HOURS, -1L, 'click',    0.0D,"
         " -2L, m + INTERVAL 244 HOURS, -1L, 'purchase', 0.0D)"
         " AS (event_id, ts, user_id, event_type, value)"
     ).select(*FEED_COLS)
-    sent.coalesce(1).write.mode("append").parquet(feed_dir)
-    with open(marker, "w") as fh:
-        fh.write(key)
+    _write_feed(
+        feed_dir, key, [*_ordered_slices(ev, 4, "ts", "event_id"), sent.coalesce(1)]
+    )
 
 
 def prewarm_feeds(spark: SparkSession, sf_dir: str) -> None:
@@ -1315,27 +1338,16 @@ def build_doc_feed(spark: SparkSession, sf_dir: str, feed_dir: str) -> None:
     Sequential appends give strictly increasing mtimes, which is the
     file source's replay order (same technique as build_ordered_feed).
     Same reuse-marker protocol as build_feed."""
-    from pyspark.sql import Window as W
-
-    marker = os.path.join(feed_dir, "_FEED_COMPLETE")
     key = f"{_FEED_VERSION}:docs-v2-ordered:{sf_dir}"
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            if fh.read() == key:
-                return
-    shutil.rmtree(feed_dir, ignore_errors=True)
+    if _feed_is_current(feed_dir, key):
+        return
     docs = load_table(spark, sf_dir, "documents").select(*DOC_FEED_COLS)
-    sliced = docs.withColumn("_slice", F.ntile(4).over(W.orderBy("doc_id")))
-    for k in range(1, 5):
-        sliced.filter(F.col("_slice") == k).drop("_slice").coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
     recrawl = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
         "doc_id", F.col("doc_id") + DOC_DUP_ID_OFFSET
     )
-    recrawl.repartition(2).write.mode("append").parquet(feed_dir)
-    with open(marker, "w") as fh:
-        fh.write(key)
+    _write_feed(
+        feed_dir, key, [*_ordered_slices(docs, 4, "doc_id"), recrawl.repartition(2)]
+    )
 
 
 def corpus_ingest_batch(spark: SparkSession, table: str, bdf: DataFrame) -> None:
@@ -1608,13 +1620,9 @@ def build_cdc_feed(spark: SparkSession, sf_dir: str, feed_dir: str) -> None:
     in order (build_ordered_feed's established construction); every
     stage has unique keys, so each micro-batch satisfies MERGE
     cardinality by construction."""
-    marker = os.path.join(feed_dir, "_FEED_COMPLETE")
     key = f"{_FEED_VERSION}:cdc3:{sf_dir}"
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            if fh.read() == key:
-                return
-    shutil.rmtree(feed_dir, ignore_errors=True)
+    if _feed_is_current(feed_dir, key):
+        return
     ev = load_table(spark, sf_dir, "events").select(*FEED_COLS)
     b = F.col("event_id") % 4
     stages = [
@@ -1630,10 +1638,7 @@ def build_cdc_feed(spark: SparkSession, sf_dir: str, feed_dir: str) -> None:
             ev.filter(b == 3).withColumn("_change_type", F.lit("insert"))
         ),
     ]
-    for st in stages:
-        st.coalesce(1).write.mode("append").parquet(feed_dir)
-    with open(marker, "w") as fh:
-        fh.write(key)
+    _write_feed(feed_dir, key, [st.coalesce(1) for st in stages])
 
 
 CDC_FEED_SCHEMA = T.StructType(

@@ -71,6 +71,46 @@ def test_upsert_replay_idempotent(spark):
     assert once == twice
 
 
+def test_ordered_feed_reuse_requires_replay_order(spark, tmp_path):
+    """The file stream source replays an ordered feed by file mtime. A
+    cached feed whose mtimes no longer follow its write order (a
+    `cp -r` copy resets them in copy order) must be rebuilt, not
+    reused: reversed mtimes would replay the slices newest first."""
+    import glob
+    import time
+
+    from data_ingestion_pipeline_spark.streaming.pipeline import (
+        build_ordered_feed,
+    )
+
+    feed = str(tmp_path / "feed")
+
+    def by_replay_order() -> list[str]:
+        return sorted(
+            glob.glob(f"{feed}/*.parquet"), key=lambda f: os.stat(f).st_mtime_ns
+        )
+
+    def replays_in_time_order() -> bool:
+        spans = [
+            spark.read.parquet(f).agg(F.min("ts"), F.max("ts")).first()
+            for f in by_replay_order()
+        ]
+        spans = [sp for sp in spans if sp[0] is not None]
+        return all(a[1] <= b[0] for a, b in zip(spans, spans[1:]))
+
+    build_ordered_feed(spark, SF_TEST, feed)
+    assert len(by_replay_order()) == 4
+    assert replays_in_time_order()
+
+    now = time.time()
+    for i, f in enumerate(by_replay_order()):  # first written → newest
+        os.utime(f, (now - 60 * i, now - 60 * i))
+    assert not replays_in_time_order()  # precondition: order broken
+
+    build_ordered_feed(spark, SF_TEST, feed)
+    assert replays_in_time_order()
+
+
 def test_late_data_accepted_and_upsert_collapses(spark):
     """Late-data semantics with a SHORT watermark horizon:
 

@@ -97,19 +97,21 @@ def test_distribute_for_write_layout(spark, tmp_path):
 
     - many-small-inputs: a 32-partition input collapses to ~1 file per
       day instead of O(partitions × days) small files;
+    - engine-internal layout: a spread_scan-widened frame (a
+      repartition at the top of its plan) is clustered like any other
+      input — its partitioning is not caller layout;
     - one-hot-partition: a skewed day SPLITS across multiple write
       tasks (AQE optimizeSkewsInRebalancePartitions) instead of
       funneling through one task / one giant file — the failure mode
-      plain repartition(PART_COL) bakes in;
-    - caller layout wins: an explicit caller repartition is honored
-      verbatim (the compaction fixtures rely on controlling file
-      counts), so no hash distribution is injected on top of it.
+      plain repartition(PART_COL) bakes in.
     """
-    from data_ingestion_pipeline_spark.operators.upsert import (
-        caller_partitioned,
-        distribute_for_write,
-        write_time_partitioned,
-    )
+    from data_ingestion_pipeline_spark.operators.upsert import distribute_for_write
+    from data_ingestion_pipeline_spark.sources.tables import spread_scan
+
+    def max_files_per_day(table: str) -> int:
+        days = glob.glob(f"{table}/p_date=*")
+        assert days
+        return max(len(glob.glob(f"{d}/*.parquet")) for d in days)
 
     ev = load_table(spark, SF_TEST, "events").select(*FEED_COLS)
 
@@ -117,50 +119,117 @@ def test_distribute_for_write_layout(spark, tmp_path):
     # both coalesce and skew-split it), never a plain hash repartition
     planned = distribute_for_write(ev.withColumn("d", F.to_date("ts")), "d")
     assert "rebalance" in planned._jdf.queryExecution().analyzed().toString().lower()
-    # caller layout is detected through projections and honored
-    assert caller_partitioned(ev.repartition(4))
-    assert caller_partitioned(ev.repartition(4).withColumn("d", F.to_date("ts")))
-    assert not caller_partitioned(ev)
-    assert distribute_for_write(ev.repartition(4), "d") is not None
 
     # many-small-inputs: 32 input partitions, files/day must not be 32
-    t1 = str(tmp_path / "fanin")
-    write_time_partitioned(ev.repartition(32), t1)  # caller layout: honored
-    days = glob.glob(f"{t1}/p_date=*")
-    assert days
-    per_day_explicit = max(
-        len(glob.glob(f"{d}/*.parquet")) for d in days
-    )
-    assert per_day_explicit >= 4  # caller's wide layout survives
+    t1 = str(tmp_path / "collapsed")
+    write_time_partitioned(ev.repartition(32), t1)
+    assert max_files_per_day(t1) <= 2  # collapsed by the rebalance
 
-    t2 = str(tmp_path / "collapsed")
-    wide = ev.repartition(32).localCheckpoint()  # strips caller layout
-    assert not caller_partitioned(wide)
-    write_time_partitioned(wide, t2)
-    per_day = max(
-        len(glob.glob(f"{d}/*.parquet")) for d in glob.glob(f"{t2}/p_date=*")
-    )
-    assert per_day <= 2  # collapsed by the rebalance, not O(input parts)
+    # spread_scan widens the small scan to the session's parallelism
+    # with a repartition at the top of the plan; the write still
+    # clusters by day
+    spread = spread_scan(spark, ev, f"{SF_TEST}/events.parquet")
+    assert spread.rdd.getNumPartitions() > 2  # precondition: widened
+    t2 = str(tmp_path / "spread")
+    write_time_partitioned(spread, t2)
+    assert max_files_per_day(t2) <= 2
 
     # one-hot-partition: with a small advisory size the hot day must
-    # write through >1 task (AQE splits the skewed rebalance output)
-    prev = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", None)
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-    try:
-        t3 = str(tmp_path / "skew")
-        hot = wide.withColumn(
-            "ts", F.lit("2024-01-05 00:00:00").cast("timestamp")
-        )
-        write_time_partitioned(hot, t3)
-        hot_files = glob.glob(f"{t3}/p_date=2024-01-05/*.parquet")
-        assert len(hot_files) > 1, "hot day must split across write tasks"
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        else:
-            spark.conf.set(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", prev
-            )
+    # write through >1 task (AQE splits the skewed rebalance output);
+    # the advisory size is set on a separate session so it cannot
+    # leak into later tests
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    t3 = str(tmp_path / "skew")
+    hot = (
+        load_table(s2, SF_TEST, "events")
+        .select(*FEED_COLS)
+        .repartition(32)
+        .withColumn("ts", F.lit("2024-01-05 00:00:00").cast("timestamp"))
+    )
+    write_time_partitioned(hot, t3)
+    hot_files = glob.glob(f"{t3}/p_date=2024-01-05/*.parquet")
+    assert len(hot_files) > 1, "hot day must split across write tasks"
+
+
+def test_stateful_foreach_batch_write_keeps_distribution(spark, tmp_path):
+    """A stateful drain runs foreachBatch on a cloned session with AQE
+    off, where a REBALANCE hint analyses to its bare child (no
+    distribution at all). The write distribution planned inside such a
+    micro-batch must still be the hash repartition on the partition
+    column, never a silently dropped hint, and the batch's write lands
+    one file per day."""
+    import re
+
+    from data_ingestion_pipeline_spark.operators.upsert import (
+        PARTITION_COL,
+        distribute_for_write,
+        with_partition_col,
+    )
+    from data_ingestion_pipeline_spark.streaming.pipeline import FEED_SCHEMA
+
+    feed = str(tmp_path / "feed")
+    load_table(spark, SF_TEST, "events").select(*FEED_COLS).limit(200).coalesce(
+        1
+    ).write.parquet(feed)
+    out = str(tmp_path / "out")
+    plans = []
+
+    def sink(bdf, _batch_id):
+        planned = distribute_for_write(with_partition_col(bdf), PARTITION_COL)
+        plans.append(planned._jdf.queryExecution().analyzed().toString())
+        planned.write.mode("append").partitionBy(PARTITION_COL).parquet(out)
+
+    query = (
+        spark.readStream.schema(FEED_SCHEMA)
+        .parquet(feed)
+        .withWatermark("ts", "1 day")
+        .dropDuplicatesWithinWatermark(["user_id", "ts"])
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    # one data batch (one feed file), then availableNow's no-data
+    # batch that advances the watermark
+    assert plans
+    for plan in plans:
+        assert re.search(rf"RepartitionByExpression \[{PARTITION_COL}#", plan), plan
+    days = glob.glob(f"{out}/{PARTITION_COL}=*")
+    assert days
+    for day in days:
+        assert len(glob.glob(f"{day}/*.parquet")) == 1, day
+
+
+def test_clustered_writers_land_one_file_per_partition(spark, tmp_path):
+    """On small input every clustered writer emits one file per
+    partition value, whatever the input partitioning: a clustered
+    append to a versioned table, and a rollup refresh — which also
+    leaves the session's partition-overwrite conf untouched (dynamic
+    overwrite is a writer option)."""
+    import collections
+
+    from data_ingestion_pipeline_spark.operators import rollup as R
+    from data_ingestion_pipeline_spark.operators import versioned as V
+
+    ev = load_table(spark, SF_TEST, "events").select(*FEED_COLS).repartition(16)
+
+    path = str(tmp_path / "appended")
+    os.makedirs(path)
+    V.append_version_clustered(spark, path, ev, "event_type")
+    per_part = collections.Counter(V._manifest(path)["partitions"].values())
+    assert len(per_part) > 1 and set(per_part.values()) == {1}
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(conf)
+    base, roll = str(tmp_path / "base"), str(tmp_path / "roll")
+    write_time_partitioned(ev, base)
+    days = [TOUCHED_DAY, UNTOUCHED_DAY]
+    R.refresh_rollup(spark, base, roll, days)
+    assert spark.conf.get(conf) == mode
+    for day in days:
+        assert len(glob.glob(f"{roll}/p_date={day}/*.parquet")) == 1, day
 
 
 def test_upsert_after_empty_create_heals_layout(spark, tmp_path):

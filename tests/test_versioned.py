@@ -1039,7 +1039,7 @@ def test_compaction_binpacks_and_preserves_rows(spark, tmp_path):
     # a single file so min_files=2 excludes it
     lone_day = F.to_date("ts") == F.lit("2024-01-03").cast("date")
     versioned.commit_version_partitioned(
-        spark, path, ev.filter(~lone_day).repartition(4)
+        spark, path, ev.filter(~lone_day).repartition(4), cluster=False
     )
     m1 = versioned._manifest(path)
     lone = ev.filter(lone_day).coalesce(1)
@@ -1167,7 +1167,7 @@ def test_vacuum_after_compaction_reclaims_replaced_files(spark, tmp_path):
     ev = _events(spark)
     lone_day = F.to_date("ts") == F.lit("2024-01-03").cast("date")
     versioned.commit_version_partitioned(
-        spark, path, ev.filter(~lone_day).repartition(4)
+        spark, path, ev.filter(~lone_day).repartition(4), cluster=False
     )
     versioned.upsert_version_cow(
         spark, path, ev.filter(lone_day).coalesce(1), ["event_id"]
@@ -1206,7 +1206,8 @@ def test_compaction_carries_meta_and_survives_torn_run(spark, tmp_path):
     os.makedirs(path)
     ev = _events(spark)
     versioned.commit_version_partitioned(
-        spark, path, ev.repartition(4), meta={"batch_id": 7, "model": "m1"}
+        spark, path, ev.repartition(4), meta={"batch_id": 7, "model": "m1"},
+        cluster=False,
     )
     before = sorted(map(tuple, versioned.read_version(spark, path).collect()))
 
@@ -1323,9 +1324,10 @@ def test_incremental_maintenance_after_compaction_drops_removed_files(
     path = str(tmp_path / "cmp")
     os.makedirs(path)
     ev = _events(spark)
-    versioned.commit_version_clustered(
-        spark, path, ev.repartition(8), "event_type"
-    )
+    # two commits: every event_type partition holds two files
+    first = F.col("event_id") % 2 == 0
+    versioned.commit_version_clustered(spark, path, ev.filter(first), "event_type")
+    versioned.append_version_clustered(spark, path, ev.filter(~first), "event_type")
     versioned.build_column_stats(spark, path, "event_id")
     m1 = set(versioned._manifest(path)["files"])
     stats = versioned.compact_files(spark, path, target_bytes=1 << 30)
