@@ -40,6 +40,7 @@ import json
 import os
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1189,6 +1190,105 @@ def _tagged_scan(spark: SparkSession, path: str, m: dict) -> DataFrame:
     )
 
 
+def _read_dv(spark: SparkSession, path: str, m: dict) -> DataFrame | None:
+    """The snapshot's cumulative deletion vector as a (file, pos)
+    frame — the one sidecar read every DV consumer shares; None when
+    `m` carries no DV."""
+    if not m.get("dv"):
+        return None
+    return spark.read.schema("file string, pos bigint").parquet(
+        os.path.join(path, m["dv"]["sidecar"])
+    )
+
+
+def _anti_dv(tagged: DataFrame, dv: DataFrame) -> DataFrame:
+    """`tagged` (a tag=True scan) minus the rows `dv` soft-deletes."""
+    return tagged.join(
+        dv.select(
+            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
+        ),
+        ["__dv_file", "__dv_pos"],
+        "left_anti",
+    )
+
+
+def _live_files(m: dict) -> list[str]:
+    """m's files minus the DV's fully-dead ones (no live rows to scan)."""
+    dead = set(m.get("dv", {}).get("dead_files", []))
+    return [f for f in m["files"] if f not in dead]
+
+
+def _live_tagged(spark: SparkSession, path: str, m: dict) -> DataFrame | None:
+    """The live rows of m's files with (__dv_file, __dv_pos) identity:
+    dead files are not scanned and the prior DV is anti-joined out.
+    None when no file has live rows."""
+    live = _live_files(m)
+    if not live:
+        return None
+    tagged = _tagged_scan(spark, path, {**m, "files": live})
+    dv = _read_dv(spark, path, m)
+    return tagged if dv is None else _anti_dv(tagged, dv)
+
+
+def _publish_mor(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    images: DataFrame | None,
+    masked: DataFrame | None,
+    meta: dict,
+    expected_current: int | None,
+) -> int:
+    """The one merge-on-read commit over snapshot `m`, shared by
+    DELETE, UPDATE and MERGE. Publish order is (1) `images` (new row
+    images, may be None) land as fresh data files, (2) the DV sidecar
+    holding prior DV ∪ `masked` (tagged rows whose (__dv_file,
+    __dv_pos) go dark; None = no new deletes, m's DV pointer carries
+    unchanged and no sidecar is written), (3) the manifest naming
+    both. A crash between any two steps leaves the prior snapshot
+    intact and only vacuum-reclaimable orphans behind. The cumulative
+    count lands in the dv pointer and in meta["dv_rows"]; a sidecar
+    that is still empty commits WITHOUT a dv key, so readers never
+    pay the anti-join for nothing. Returns the published version."""
+    v = m["version"] + 1
+    new_files = _write_version_files(path, v, images) if images is not None else {}
+    files = sorted([*m["files"], *new_files])
+    dv = m.get("dv")
+    if masked is not None:
+        sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
+        sidecar_dir = os.path.join(os.path.abspath(path), sidecar_rel)
+        out = masked.select(
+            F.col("__dv_file").alias("file"),
+            F.col("__dv_pos").cast("bigint").alias("pos"),
+        )
+        prior = _read_dv(spark, path, m)
+        if prior is not None:
+            out = prior.unionByName(out)
+        out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
+            "overwrite"
+        ).parquet(sidecar_dir)
+        n_dv, dead_files = _dv_sidecar_stats(
+            spark, path, sidecar_dir, {**m, "files": files}
+        )
+        dv = None
+        if n_dv:
+            dv = {"sidecar": sidecar_rel, "rows": n_dv}
+            if dead_files:
+                dv["dead_files"] = dead_files
+    manifest = {
+        "version": v,
+        "files": files,
+        **{k: m[k] for k in ("partitions", "partition_col") if k in m},
+        "schema": m["schema"],
+        **({"project_schema": True} if m.get("project_schema") else {}),
+        "committed_at": time.time(),
+        "meta": {**meta, "dv_rows": dv["rows"] if dv else 0},
+        **({"dv": dv} if dv else {}),
+    }
+    _publish_manifest(path, v, manifest, expected_current, prev=m)
+    return v
+
+
 def delete_rows_dv(
     spark: SparkSession,
     path: str,
@@ -1201,7 +1301,8 @@ def delete_rows_dv(
     The commit writes ONE parquet sidecar (`_dv/v{N}-…`: file, pos)
     holding the cumulative deleted set — prior DV rows carry in, the
     new matches append — and publishes a manifest that references the
-    SAME data files (delta-encoded: O(1) manifest bytes). Matching
+    SAME data files (delta-encoded: O(1) manifest bytes); publish
+    order and crash story on _publish_mor. Matching
     runs over the DV-filtered snapshot, so re-deleting an
     already-deleted row is a no-op and the sidecar never holds
     duplicates. Cost: one predicate scan + O(total deleted) sidecar
@@ -1236,86 +1337,18 @@ def delete_rows_dv(
     if m["version"] == 0:
         raise ValueError("cannot delete from an empty table")
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    abs_root = os.path.abspath(path)
-    v = m["version"] + 1
-    sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
-    sidecar_dir = os.path.join(abs_root, sidecar_rel)
-
-    # prior dead files have no live rows: skip their scan entirely
-    prior_dead = set(m.get("dv", {}).get("dead_files", []))
-    live_files = [f for f in m["files"] if f not in prior_dead]
-    tagged = (
-        _tagged_scan(spark, path, {**m, "files": live_files})
-        if live_files
-        else None
-    )
-    prior_dv = (
-        spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(path, m["dv"]["sidecar"])
-        )
-        if m.get("dv")
-        else None
-    )
-    if tagged is not None and prior_dv is not None:
-        tagged = tagged.join(
-            prior_dv.select(
-                F.col("file").alias("__dv_file"),
-                F.col("pos").alias("__dv_pos"),
-            ),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        )
-    matched = (
-        tagged.filter(cond).select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").cast("bigint").alias("pos"),
-        )
+    tagged = _live_tagged(spark, path, m)
+    # always a real commit, even when nothing matches: the caller
+    # observed "delete ran" at a new version (_publish_mor drops the
+    # dv key when the cumulative set is still empty)
+    masked = (
+        tagged.filter(cond)
         if tagged is not None
-        else spark.createDataFrame([], "file string, pos bigint")
+        else spark.createDataFrame([], "__dv_file string, __dv_pos bigint")
     )
-    out = matched if prior_dv is None else prior_dv.unionByName(matched)
-    out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
-        "overwrite"
-    ).parquet(sidecar_dir)
-    n_dv, dead_files = _dv_sidecar_stats(spark, path, sidecar_dir, m)
-    if n_dv == 0:
-        # nothing was ever deleted: commit WITHOUT a dv key so readers
-        # never pay the anti-join for an empty sidecar (the orphan dir
-        # is vacuum-reclaimable); still a real commit — the caller
-        # observed "delete ran, matched nothing" at a new version
-        manifest = {
-            "version": v,
-            "files": m["files"],
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": m["schema"],
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            "meta": {**(meta or {}), "dv_rows": 0},
-        }
-        _publish_manifest(path, v, manifest, expected_current, prev=m)
-        return v
-    manifest = {
-        "version": v,
-        "files": m["files"],
-        **({"partitions": m["partitions"]} if "partitions" in m else {}),
-        **({"partition_col": m["partition_col"]} if "partition_col" in m else {}),
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {**(meta or {}), "dv_rows": n_dv},
-        "dv": {
-            "sidecar": sidecar_rel,
-            "rows": n_dv,
-            **({"dead_files": dead_files} if dead_files else {}),
-        },
-    }
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return v
+    return _publish_mor(
+        spark, path, m, None, masked, meta or {}, expected_current
+    )
 
 
 def _dv_sidecar_stats(
@@ -1410,10 +1443,8 @@ def update_rows_mor(
     no DV entries by construction and old images anti-join out
     through the one shared read path.
 
-    Publish order inside the commit: updated-image files land first,
-    then the DV sidecar, then the manifest naming both — a crash
-    between any two leaves the prior snapshot intact and only
-    vacuum-reclaimable orphans behind. Schema is invariant
+    Updated images, DV extension and manifest publish through
+    _publish_mor (order and crash story there). Schema is invariant
     (assignments replace values, never add columns — this engine's
     evolve_schema is the metadata-only DDL for that). Repeated
     updates are plain UPDATE semantics: a second run re-matches rows
@@ -1433,120 +1464,33 @@ def update_rows_mor(
             "update_rows_mor supports unpartitioned snapshots; use "
             "upsert_version_cow for partition-granular updates"
         )
+    # assignment targets checked before any Spark job runs
+    data_cols, _ = _validate_merge_spec(
+        _manifest_read_schema(m), [("update", assignments, None)], False
+    )
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    abs_root = os.path.abspath(path)
-    v = m["version"] + 1
-
-    prior_dead = set(m.get("dv", {}).get("dead_files", []))
-    live_files = [f for f in m["files"] if f not in prior_dead]
-    prior_dv = (
-        spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(path, m["dv"]["sidecar"])
-        )
-        if m.get("dv")
-        else None
-    )
-    tagged = (
-        _tagged_scan(spark, path, {**m, "files": live_files})
-        if live_files
-        else None
-    )
-    if tagged is not None and prior_dv is not None:
-        tagged = tagged.join(
-            prior_dv.select(
-                F.col("file").alias("__dv_file"),
-                F.col("pos").alias("__dv_pos"),
-            ),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
-        )
+    tagged = _live_tagged(spark, path, m)
     if tagged is None:
-        return m["version"]  # empty table: nothing to update
+        return m["version"]  # no live rows: nothing to update
     # matched feeds TWO writes (updated images + DV extension); the
     # barrier stops the predicate scan from running twice and pins
     # one consistent match set under both
     matched = tagged.filter(cond).localCheckpoint(eager=True)
     n_matched = matched.count()  # over checkpointed blocks: metadata-cheap
+    meta = {**(meta or {}), "updated_rows": n_matched}
     if n_matched == 0:
         # nothing matched: still a real commit (the caller observed
         # "update ran, matched nothing" at a new version), carrying
         # files AND the prior DV pointer untouched — no sidecar, no
         # data write, no orphans
-        _publish_manifest(
-            path,
-            v,
-            {
-                "version": v,
-                "files": m["files"],
-                "schema": m["schema"],
-                **({"project_schema": True} if m.get("project_schema") else {}),
-                "committed_at": time.time(),
-                "meta": {**(meta or {}), "updated_rows": 0},
-                **({"dv": m["dv"]} if m.get("dv") else {}),
-            },
-            expected_current,
-            prev=m,
-        )
-        return v
-
-    data_cols = [c for c in matched.columns if not c.startswith("__dv_")]
-    for col_name in assignments:
-        if col_name not in data_cols:
-            raise ValueError(f"assignment to unknown column {col_name!r}")
-    updated = matched.select(
-        *[
-            (
-                (
-                    F.expr(assignments[c])
-                    if isinstance(assignments[c], str)
-                    else assignments[c]
-                ).alias(c)
-                if c in assignments
-                else F.col(c)
-            )
-            for c in data_cols
-        ]
-    )
-    data_dir = _attempt_data_dir(path, v)
-    _guarded_write(
-        updated, path, lambda g: g.write.mode("overwrite").parquet(data_dir)
-    )
-    rel_dir = os.path.relpath(data_dir, path)
-    new_files = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-
-    sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
-    sidecar_dir = os.path.join(abs_root, sidecar_rel)
-    masked = matched.select(
-        F.col("__dv_file").alias("file"),
-        F.col("__dv_pos").cast("bigint").alias("pos"),
-    )
-    out = masked if prior_dv is None else prior_dv.unionByName(masked)
-    out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
-        "overwrite"
-    ).parquet(sidecar_dir)
-    files = sorted(list(m["files"]) + new_files)
-    n_dv, dead_files = _dv_sidecar_stats(
-        spark, path, sidecar_dir, {**m, "files": files}
-    )
-    manifest = {
-        "version": v,
-        "files": files,
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {**(meta or {}), "updated_rows": n_matched},
-        "dv": {
-            "sidecar": sidecar_rel,
-            "rows": n_dv,
-            **({"dead_files": dead_files} if dead_files else {}),
-        },
+        return _publish_mor(spark, path, m, None, None, meta, expected_current)
+    exprs = {
+        c: F.expr(e) if isinstance(e, str) else e for c, e in assignments.items()
     }
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return v
+    updated = matched.select(
+        *[exprs[c].alias(c) if c in exprs else F.col(c) for c in data_cols]
+    )
+    return _publish_mor(spark, path, m, updated, matched, meta, expected_current)
 
 
 def update_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1617,6 +1561,99 @@ def _merge_action_col(when_matched, matched_flag):
     return F.when(matched_flag, chain)
 
 
+def _merge_on(keys: list[str]) -> F.Column:
+    """The match condition: t.k = s.k for every merge key."""
+    return reduce(
+        lambda a, b: a & b, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
+    )
+
+
+def _merge_assign_cols(when_matched, col_type: dict) -> list[F.Column]:
+    """Every update clause i's assignments as `__u{i}_{c}` columns,
+    cast to the target column's type."""
+    return [
+        F.expr(e).cast(col_type[c]).alias(f"__u{i}_{c}")
+        for i, (op, assigns, _c) in enumerate(when_matched)
+        if op == "update"
+        for c, e in assigns.items()
+    ]
+
+
+def _merge_insert_cols(
+    insert_not_matched, data_cols: list[str], col_type: dict
+) -> list[F.Column]:
+    """The NOT MATCHED image as `__i_{c}` columns: the source column
+    of the same name (insert_not_matched=True) or the dict's
+    per-column `s.`-expression, cast to the target column's type."""
+    return [
+        (
+            F.expr(insert_not_matched[c])
+            if isinstance(insert_not_matched, dict)
+            else F.col(f"s.{c}")
+        ).cast(col_type[c]).alias(f"__i_{c}")
+        for c in data_cols
+    ]
+
+
+def _merge_stats(when_matched, rid: F.Column, matched=None) -> list[F.Column]:
+    """The aggregates both merge paths fold into their ONE stats job
+    over the pinned join output: per-clause routed-row counts
+    (`__n_a{i}`) plus modifying rows vs distinct modified target rows
+    (`rid` names a target row) — more rows than rids means two source
+    rows modified one target row. `matched` restricts every count to
+    matched rows (COW's full-outer output also holds unmatched ones)."""
+    act = F.col("__action")
+
+    def only(c: F.Column) -> F.Column:
+        return c if matched is None else matched & c
+
+    mod = only(act.isNotNull())
+    return [
+        *[
+            F.coalesce(F.sum(F.when(only(act == i), 1)), F.lit(0)).alias(
+                f"__n_a{i}"
+            )
+            for i in range(len(when_matched))
+        ],
+        F.coalesce(F.sum(F.when(mod, 1)), F.lit(0)).alias("__n_mod_rows"),
+        F.count_distinct(F.when(mod, rid)).alias("__n_mod_rids"),
+    ]
+
+
+def _merge_counts(st, when_matched) -> tuple[list[int], int, int]:
+    """(per-clause counts, rows updated, rows deleted) from the
+    _merge_stats row, refusing a source-cardinality violation."""
+    if st["__n_mod_rows"] > st["__n_mod_rids"]:
+        raise MergeCardinalityError(
+            "multiple source rows matched and attempted to modify "
+            "the same target row; deduplicate the source on the "
+            "merge keys first"
+        )
+    n_a = [st[f"__n_a{i}"] for i in range(len(when_matched))]
+
+    def total(kind: str) -> int:
+        return sum(n for (op, _a, _c), n in zip(when_matched, n_a) if op == kind)
+
+    return n_a, total("update"), total("delete")
+
+
+def _merge_update_images(
+    flat: DataFrame, when_matched, n_a: list[int], data_cols: list[str]
+) -> list[DataFrame]:
+    """One new-image frame per update clause that routed rows: the
+    clause's `__u{i}_{c}` values over the target row's other columns."""
+    return [
+        flat.filter(F.col("__action") == i).select(
+            *[
+                (F.col(f"__u{i}_{c}") if c in assigns else F.col(c)).alias(c)
+                for c in data_cols
+            ]
+        )
+        for i, (op, assigns, _c) in enumerate(when_matched)
+        if op == "update" and n_a[i]
+    ]
+
+
 def merge_into_mor(
     spark: SparkSession,
     path: str,
@@ -1668,10 +1705,9 @@ def merge_into_mor(
     that key's rows, not their files. Source cardinality is enforced:
     two source rows modifying the same target row raise
     MergeCardinalityError (checked over the pinned match set before
-    any write). Publish order: image files → DV sidecar → manifest,
-    so a crash leaves the prior snapshot intact and only
-    vacuum-reclaimable orphans. Unpartitioned snapshots only, same
-    rule and reason as update_rows_mor.
+    any write). The commit publishes through _publish_mor (image
+    files → DV sidecar → manifest; crash story there). Unpartitioned
+    snapshots only, same rule and reason as update_rows_mor.
 
     ``prune_on=<merge key>`` (r16) removes the last O(table) term —
     the full live-file SCAN feeding the match join (measured as the
@@ -1708,11 +1744,7 @@ def merge_into_mor(
     data_cols, col_type = _validate_merge_spec(
         target_schema, when_matched, insert_not_matched
     )
-    abs_root = os.path.abspath(path)
-    v = m["version"] + 1
-
-    prior_dead = set(m.get("dv", {}).get("dead_files", []))
-    live_files = [f for f in m["files"] if f not in prior_dead]
+    live_files = _live_files(m)
     n_live_before_prune = len(live_files)
     if prune_on is not None and live_files:
         if prune_on not in keys:
@@ -1740,36 +1772,20 @@ def merge_into_mor(
             )
             live_files = [f for f in live_files if f in cand]
     n_files_scanned = len(live_files)
-    prior_dv = (
-        spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(path, m["dv"]["sidecar"])
-        )
-        if m.get("dv")
-        else None
-    )
-    tagged = (
-        _tagged_scan(spark, path, {**m, "files": live_files})
-        if live_files
-        else None
-    )
-    if tagged is not None and prior_dv is not None:
-        tagged = tagged.join(
-            prior_dv.select(
-                F.col("file").alias("__dv_file"),
-                F.col("pos").alias("__dv_pos"),
-            ),
-            ["__dv_file", "__dv_pos"],
-            "left_anti",
+    tagged = _live_tagged(spark, path, {**m, "files": live_files})
+
+    def _inserts(src: DataFrame) -> DataFrame:
+        # the guarded NOT MATCHED images of `src` (aliased "s"), pinned
+        if insert_not_matched_cond:
+            src = src.filter(F.expr(insert_not_matched_cond))
+        return (
+            src.select(*_merge_insert_cols(insert_not_matched, data_cols, col_type))
+            .select(*[F.col(f"__i_{c}").alias(c) for c in data_cols])
+            .localCheckpoint(eager=True)
         )
 
-    def _ins_expr(c: str) -> F.Column:
-        e = (
-            F.expr(insert_not_matched[c])
-            if isinstance(insert_not_matched, dict)
-            else F.col(f"s.{c}")
-        )
-        return e.cast(col_type[c]).alias(f"__i_{c}")
-
+    masked = None
+    n_upd = n_del = 0
     if tagged is None:
         # every prior file is DV-dead: no row can match — the merge
         # degenerates to the insert clause over the whole source
@@ -1780,25 +1796,9 @@ def merge_into_mor(
             # version unchanged, matching zorder_cluster_incremental's
             # nothing-to-do behavior
             return m["version"]
-        ins_src = source.alias("s")
-        if insert_not_matched_cond:
-            ins_src = ins_src.filter(F.expr(insert_not_matched_cond))
-        images = (
-            ins_src
-            .select(*[_ins_expr(c) for c in data_cols])
-            .select(*[F.col(f"__i_{c}").alias(c) for c in data_cols])
-            .localCheckpoint(eager=True)
-        )
-        flat = None
-        counts: dict = {}
+        images = _inserts(source.alias("s"))
         n_ins = images.count()  # over checkpointed blocks: metadata-cheap
     else:
-        t = tagged.alias("t")
-        s = source.alias("s")
-        cond = None
-        for k in keys:
-            eq = F.col(f"t.{k}") == F.col(f"s.{k}")
-            cond = eq if cond is None else (cond & eq)
         # INNER join only — the matched set. An earlier revision used
         # one right_outer join to also carry unmatched-source rows,
         # but right-outer can only broadcast its LEFT side, i.e. the
@@ -1807,72 +1807,24 @@ def merge_into_mor(
         # the unmatched-source set is recovered below with a
         # broadcast anti-join against the (source-bounded) matched
         # key set — zero extra target scans.
-        joined = t.join(s, cond, "inner")
-        action = _merge_action_col(when_matched, F.lit(True))
-
-        proj = [F.col(f"t.{c}").alias(c) for c in data_cols]
-        proj += [
-            F.col("t.__dv_file").alias("__dv_file"),
-            F.col("t.__dv_pos").alias("__dv_pos"),
-            F.lit(True).alias("__matched"),
-            action.alias("__action"),
-        ]
-        for i, (op, assigns, _c) in enumerate(when_matched):
-            if op == "update":
-                for c, e in assigns.items():
-                    proj.append(F.expr(e).cast(col_type[c]).alias(f"__u{i}_{c}"))
+        joined = tagged.alias("t").join(source.alias("s"), _merge_on(keys), "inner")
         # one target scan + one source pass pinned under EVERY
         # downstream write (images, DV, counts) — same barrier
         # rationale as update_rows_mor
-        flat = joined.select(*proj).localCheckpoint(eager=True)
-
-        # ONE global aggregation replaces the former two jobs (the
-        # per-action counts collect and a separate per-position
-        # cardinality shuffle): conditional sums give every clause
-        # count, and modifying-row vs distinct-(file,pos) counts
-        # detect source-cardinality violations in the same pass.
-        modp = F.col("__action").isNotNull()
+        flat = joined.select(
+            *[F.col(f"t.{c}").alias(c) for c in data_cols],
+            F.col("t.__dv_file").alias("__dv_file"),
+            F.col("t.__dv_pos").alias("__dv_pos"),
+            _merge_action_col(when_matched, F.lit(True)).alias("__action"),
+            *_merge_assign_cols(when_matched, col_type),
+        ).localCheckpoint(eager=True)
+        # ONE global aggregation: every clause count plus the
+        # source-cardinality check
         st = flat.agg(
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col("__action") == i, 1)), F.lit(0)
-                ).alias(f"__n_a{i}")
-                for i in range(len(when_matched))
-            ],
-            F.coalesce(F.sum(F.when(modp, 1)), F.lit(0)).alias(
-                "__n_mod_rows"
-            ),
-            F.count_distinct(
-                F.when(modp, F.struct("__dv_file", "__dv_pos"))
-            ).alias("__n_mod_rids"),
+            *_merge_stats(when_matched, F.struct("__dv_file", "__dv_pos"))
         ).collect()[0]
-        counts = {
-            (True, i): st[f"__n_a{i}"]
-            for i in range(len(when_matched))
-            if st[f"__n_a{i}"]
-        }
-        if st["__n_mod_rows"] > st["__n_mod_rids"]:
-            raise MergeCardinalityError(
-                "multiple source rows matched and attempted to modify "
-                "the same target row; deduplicate the source on the "
-                "merge keys first"
-            )
-        image_parts = []
-        for i, (op, assigns, _c) in enumerate(when_matched):
-            if op != "update" or not counts.get((True, i)):
-                continue
-            image_parts.append(
-                flat.filter(F.col("__action") == i).select(
-                    *[
-                        (
-                            F.col(f"__u{i}_{c}")
-                            if c in assigns
-                            else F.col(c)
-                        ).alias(c)
-                        for c in data_cols
-                    ]
-                )
-            )
+        n_a, n_upd, n_del = _merge_counts(st, when_matched)
+        image_parts = _merge_update_images(flat, when_matched, n_a, data_cols)
         n_ins = 0
         if insert_not_matched:
             # NOT MATCHED = source minus the matched KEY set (bounded
@@ -1880,101 +1832,31 @@ def merge_into_mor(
             # second target scan). A null-keyed source row never
             # equals anything, so it stays unmatched and INSERTS —
             # Delta's NOT MATCHED semantics for null merge keys.
-            matched_keys = flat.select(
-                *[F.col(k) for k in keys]
-            ).distinct()
-            unmatched = source.join(
-                F.broadcast(matched_keys), on=keys, how="left_anti"
-            ).alias("s")
-            if insert_not_matched_cond:
-                unmatched = unmatched.filter(F.expr(insert_not_matched_cond))
-            ins_df = (
-                unmatched.select(*[_ins_expr(c) for c in data_cols])
-                .select(*[F.col(f"__i_{c}").alias(c) for c in data_cols])
-                .localCheckpoint(eager=True)
+            matched_keys = flat.select(*[F.col(k) for k in keys]).distinct()
+            ins_df = _inserts(
+                source.join(
+                    F.broadcast(matched_keys), on=keys, how="left_anti"
+                ).alias("s")
             )
             n_ins = ins_df.count()
             if n_ins:
                 image_parts.append(ins_df)
-        images = image_parts[0] if image_parts else None
-        for p in image_parts[1:]:
-            images = images.unionByName(p)
-
-    new_files: list[str] = []
-    if images is not None:
-        data_dir = _attempt_data_dir(path, v)
-        _guarded_write(
-            images,
-            path,
-            lambda g: g.write.mode("overwrite").parquet(data_dir),
+        images = (
+            reduce(DataFrame.unionByName, image_parts) if image_parts else None
         )
-        rel_dir = os.path.relpath(data_dir, path)
-        new_files = sorted(
-            os.path.join(rel_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
+        if n_upd or n_del:
+            masked = flat.filter(F.col("__action").isNotNull())
 
-    delete_idx = [
-        i for i, (op, _a, _c) in enumerate(when_matched) if op == "delete"
-    ]
-    update_idx = [
-        i for i, (op, _a, _c) in enumerate(when_matched) if op == "update"
-    ]
-    n_upd = sum(counts.get((True, i), 0) for i in update_idx)
-    n_del = sum(counts.get((True, i), 0) for i in delete_idx)
-    files = sorted(list(m["files"]) + new_files)
-
-    dv_pointer = m.get("dv")
-    if flat is not None and (n_upd or n_del):
-        sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
-        sidecar_dir = os.path.join(abs_root, sidecar_rel)
-        masked = flat.filter(
-            F.col("__matched") & F.col("__action").isNotNull()
-        ).select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").cast("bigint").alias("pos"),
+    merge_meta = {"updated": n_upd, "deleted": n_del, "inserted": n_ins}
+    if prune_on is not None:
+        merge_meta.update(
+            files_scanned=n_files_scanned,
+            files_pruned=n_live_before_prune - n_files_scanned,
         )
-        out = masked if prior_dv is None else prior_dv.unionByName(masked)
-        out.repartition(_index_shards(max(1, len(m["files"])))).write.mode(
-            "overwrite"
-        ).parquet(sidecar_dir)
-        n_dv, dead_files = _dv_sidecar_stats(
-            spark, path, sidecar_dir, {**m, "files": files}
-        )
-        dv_pointer = {
-            "sidecar": sidecar_rel,
-            "rows": n_dv,
-            **({"dead_files": dead_files} if dead_files else {}),
-        }
-
-    manifest = {
-        "version": v,
-        "files": files,
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {
-            **(meta or {}),
-            "merge": {
-                "updated": n_upd,
-                "deleted": n_del,
-                "inserted": n_ins,
-                **(
-                    {
-                        "files_scanned": n_files_scanned,
-                        "files_pruned": n_live_before_prune
-                        - n_files_scanned,
-                    }
-                    if prune_on is not None
-                    else {}
-                ),
-            },
-        },
-        **({"dv": dv_pointer} if dv_pointer else {}),
-    }
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return v
+    return _publish_mor(
+        spark, path, m, images, masked, {**(meta or {}), "merge": merge_meta},
+        expected_current,
+    )
 
 
 def merge_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3174,14 +3056,7 @@ def _read_files_as_snapshot(
             "required to resolve its sidecar"
         )
     tagged = _scan_with_renames(spark, m, files, path=path, tag=True)
-    dv = (
-        spark.read.schema("file string, pos bigint")
-        .parquet(os.path.join(path, m["dv"]["sidecar"]))
-        .select(
-            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-        )
-    )
-    return tagged.join(dv, ["__dv_file", "__dv_pos"], "left_anti").drop(
+    return _anti_dv(tagged, _read_dv(spark, path, m)).drop(
         "__dv_file", "__dv_pos"
     )
 
@@ -4639,6 +4514,37 @@ def read_version_pruned(
     return _read_files_as_snapshot(spark, m, files, path=path)
 
 
+def _touched_days(
+    spark: SparkSession, path: str, m: dict, frame: DataFrame, ts_col: str
+) -> tuple[DataFrame | None, list[str]]:
+    """(snapshot read of the days `frame` touches or None when it
+    touches no file, files of every other day) — the COW writers'
+    split. The day list is one distinct over `frame`'s `ts_col`
+    (partition METADATA, no table scan). The read is DV-filtered, so
+    rewritten days materialize their deletes while carried files keep
+    theirs via the carried DV pointer."""
+    from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
+
+    touched = {
+        str(r[0])
+        for r in with_partition_col(frame, ts_col)
+        .select(PART_COL)
+        .distinct()
+        .collect()
+    }
+    parts = m.get("partitions", {})
+    hit = [f for f in m["files"] if parts.get(f) in touched]
+    carried = [f for f in m["files"] if parts.get(f) not in touched]
+    base = (
+        _read_files_as_snapshot(
+            spark, m, [os.path.join(path, f) for f in hit], path=path
+        )
+        if hit
+        else None
+    )
+    return base, carried
+
+
 def upsert_version_cow(
     spark: SparkSession,
     path: str,
@@ -4654,30 +4560,15 @@ def upsert_version_cow(
     one day rewrites one day, while plain upsert_version rewrites the
     table. The touched-day list is partition METADATA (a distinct
     over the update batch, bounded by day count)."""
-    from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
-
     m = _manifest(path)
-    touched = {
-        str(r[0])
-        for r in with_partition_col(updates, ts_col)
-        .select(PART_COL)
-        .distinct()
-        .collect()
-    }
-    parts = m.get("partitions", {})
-    touched_files = [f for f in m["files"] if parts.get(f) in touched]
-    carried = [f for f in m["files"] if parts.get(f) not in touched]
-    if touched_files:
-        # DV-filtered read: rewritten partitions materialize their
-        # deletes; carried files keep theirs via the carried pointer
-        base = _read_files_as_snapshot(
-            spark, m, [os.path.join(path, f) for f in touched_files], path=path
-        )
-        merged = updates.unionByName(
+    base, carried = _touched_days(spark, path, m, updates, ts_col)
+    merged = (
+        updates
+        if base is None
+        else updates.unionByName(
             base.join(updates.select(keys).distinct(), on=keys, how="left_anti")
         )
-    else:
-        merged = updates
+    )
     return commit_version_partitioned(
         spark, path, merged, ts_col=ts_col, carried=carried, meta=meta,
         dv=m.get("dv"),
@@ -4715,8 +4606,6 @@ def merge_into_cow(
     error). Carried partitions keep their deletion-vector rows via
     the carried pointer; rewritten partitions materialize theirs
     (DV-filtered read), identical to upsert_version_cow."""
-    from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
-
     m = _manifest(path)
     if m["version"] == 0:
         raise ValueError("cannot merge into an empty table")
@@ -4730,63 +4619,32 @@ def merge_into_cow(
         target_schema, when_matched, insert_not_matched
     )
 
-    touched = {
-        str(r[0])
-        for r in with_partition_col(source, ts_col)
-        .select(PART_COL)
-        .distinct()
-        .collect()
-    }
-    parts = m.get("partitions", {})
-    touched_files = [f for f in m["files"] if parts.get(f) in touched]
-    carried = [f for f in m["files"] if parts.get(f) not in touched]
+    base, carried = _touched_days(spark, path, m, source, ts_col)
+    base = (base if base is not None else _empty_snapshot(spark, m)).withColumn(
+        "__rid", F.monotonically_increasing_id()
+    )
 
-    base = (
-        _read_files_as_snapshot(
-            spark, m, [os.path.join(path, f) for f in touched_files], path=path
-        )
-        if touched_files
-        else _empty_snapshot(spark, m)
-    ).withColumn("__rid", F.monotonically_increasing_id())
-
-    t = base.alias("t")
     # explicit source-presence marker: in the full-outer output,
     # "s.key IS NULL" cannot distinguish an unmatched TARGET row from
     # a NULL-KEYED source row — the marker can, so null-keyed source
     # rows correctly take the NOT MATCHED (insert) path, Delta's
     # null-merge-key semantics
     s = source.withColumn("__src_present", F.lit(1)).alias("s")
-    cond = None
-    for k in keys:
-        eq = F.col(f"t.{k}") == F.col(f"s.{k}")
-        cond = eq if cond is None else (cond & eq)
-    joined = t.join(s, cond, "full_outer")
+    joined = base.alias("t").join(s, _merge_on(keys), "full_outer")
 
     has_src = F.col("s.__src_present").isNotNull()
     matched_flag = F.col("t.__rid").isNotNull() & has_src
     action = _merge_action_col(when_matched, matched_flag)
 
-    def _ins_expr(c: str) -> F.Column:
-        e = (
-            F.expr(insert_not_matched[c])
-            if isinstance(insert_not_matched, dict)
-            else F.col(f"s.{c}")
-        )
-        return e.cast(col_type[c]).alias(f"__i_{c}")
-
     proj = [F.col(f"t.{c}").alias(c) for c in data_cols]
     proj += [
         F.col("t.__rid").alias("__rid"),
         matched_flag.alias("__matched"),
-        has_src.alias("__has_src"),
         action.alias("__action"),
     ]
-    for i, (op, assigns, _c) in enumerate(when_matched):
-        if op == "update":
-            for c, e in assigns.items():
-                proj.append(F.expr(e).cast(col_type[c]).alias(f"__u{i}_{c}"))
+    proj += _merge_assign_cols(when_matched, col_type)
     if insert_not_matched:
-        proj += [_ins_expr(c) for c in data_cols]
+        proj += _merge_insert_cols(insert_not_matched, data_cols, col_type)
         # full-outer join: unmatched TARGET rows also have
         # __matched == false, so insert eligibility must REQUIRE a
         # source side (the presence marker — a null-keyed source row
@@ -4802,22 +4660,13 @@ def merge_into_cow(
     # the cardinality check and the rewrite
     flat = joined.select(*proj).localCheckpoint(eager=True)
 
-    # ONE global aggregation over the checkpointed rows replaces the
-    # former two jobs (the flag-grouped counts collect and a separate
-    # per-__rid cardinality shuffle): conditional sums give every
-    # clause count, and comparing modifying-row vs distinct-__rid
-    # counts detects source-cardinality violations — and, separately,
+    # ONE global aggregation over the checkpointed rows: every clause
+    # count and the source-cardinality check (_merge_stats), plus
     # whether ANY target row matched more than once, which decides
     # below if the per-__rid collapse shuffle is needed at all.
-    mod = F.col("__matched") & F.col("__action").isNotNull()
     mat = F.col("__matched")
     st = flat.agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(mat & (F.col("__action") == i), 1)), F.lit(0)
-            ).alias(f"__n_a{i}")
-            for i in range(len(when_matched))
-        ],
+        *_merge_stats(when_matched, F.col("__rid"), mat),
         F.coalesce(
             F.sum(F.when((~mat) & F.col("__ins_ok"), 1)), F.lit(0)
         ).alias("__n_ins"),
@@ -4825,30 +4674,9 @@ def merge_into_cow(
         F.count_distinct(F.when(mat, F.col("__rid"))).alias(
             "__n_match_rids"
         ),
-        F.coalesce(F.sum(F.when(mod, 1)), F.lit(0)).alias("__n_mod_rows"),
-        F.count_distinct(F.when(mod, F.col("__rid"))).alias("__n_mod_rids"),
     ).collect()[0]
-    counts: dict = {
-        (True, i): st[f"__n_a{i}"]
-        for i in range(len(when_matched))
-        if st[f"__n_a{i}"]
-    }
+    n_a, n_upd, n_del = _merge_counts(st, when_matched)
     n_ins = st["__n_ins"] if insert_not_matched else 0
-    if st["__n_mod_rows"] > st["__n_mod_rids"]:
-        raise MergeCardinalityError(
-            "multiple source rows matched and attempted to modify "
-            "the same target row; deduplicate the source on the "
-            "merge keys first"
-        )
-
-    update_idx = [
-        i for i, (op, _a, _c) in enumerate(when_matched) if op == "update"
-    ]
-    delete_idx = [
-        i for i, (op, _a, _c) in enumerate(when_matched) if op == "delete"
-    ]
-    n_upd = sum(counts.get((True, i), 0) for i in update_idx)
-    n_del = sum(counts.get((True, i), 0) for i in delete_idx)
 
     # the touched partitions' NEW content: untouched target rows +
     # updated images (delete-routed rows drop out) + guarded inserts.
@@ -4883,27 +4711,14 @@ def merge_into_cow(
         kept = flat.filter(
             F.col("__rid").isNotNull() & F.col("__action").isNull()
         ).select(*[F.col(c) for c in data_cols])
-    parts_out = [kept]
-    for i in update_idx:
-        if counts.get((True, i)):
-            assigns = when_matched[i][1]
-            parts_out.append(
-                flat.filter(F.col("__action") == i).select(
-                    *[
-                        (F.col(f"__u{i}_{c}") if c in assigns else F.col(c)).alias(c)
-                        for c in data_cols
-                    ]
-                )
-            )
+    parts_out = [kept, *_merge_update_images(flat, when_matched, n_a, data_cols)]
     if insert_not_matched and n_ins:
         parts_out.append(
             flat.filter(~F.col("__matched") & F.col("__ins_ok")).select(
                 *[F.col(f"__i_{c}").alias(c) for c in data_cols]
             )
         )
-    merged = parts_out[0]
-    for p in parts_out[1:]:
-        merged = merged.unionByName(p)
+    merged = reduce(DataFrame.unionByName, parts_out)
 
     return commit_version_partitioned(
         spark,
@@ -5491,6 +5306,28 @@ def cdf_replica_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cdc_merge_spec(changes: DataFrame, keys: list[str]) -> tuple[DataFrame, dict]:
+    """(merge source, merge clauses) applying one CDF batch — the one
+    clause list both replica layouts use: update_postimage → update
+    the key's attributes, delete → delete, and only insert /
+    update_postimage rows insert (the NOT MATCHED AND guard)."""
+    attrs = [c for c in changes.columns if c not in keys and c != "_change_type"]
+    return changes.filter(F.col("_change_type") != "update_preimage"), {
+        "when_matched": [
+            (
+                "update",
+                {c: f"s.{c}" for c in attrs},
+                "s._change_type = 'update_postimage'",
+            ),
+            ("delete", None, "s._change_type = 'delete'"),
+        ],
+        "insert_not_matched": {c: f"s.{c}" for c in [*keys, *attrs]},
+        "insert_not_matched_cond": (
+            "s._change_type IN ('insert', 'update_postimage')"
+        ),
+    }
+
+
 def apply_changes_mor(
     spark: SparkSession,
     path: str,
@@ -5511,30 +5348,8 @@ def apply_changes_mor(
     yields an exactly-once replica. An unmatched postimage (replica
     missed the insert that preceded the update — a repair scenario)
     is also inserted."""
-    attrs = [
-        c for c in changes.columns
-        if c not in keys and c != "_change_type"
-    ]
-    src = changes.filter(F.col("_change_type") != "update_preimage")
-    return merge_into_mor(
-        spark,
-        path,
-        src,
-        keys,
-        when_matched=[
-            (
-                "update",
-                {c: f"s.{c}" for c in attrs},
-                "s._change_type = 'update_postimage'",
-            ),
-            ("delete", None, "s._change_type = 'delete'"),
-        ],
-        insert_not_matched={
-            c: f"s.{c}" for c in list(keys) + attrs
-        },
-        insert_not_matched_cond="s._change_type IN ('insert', 'update_postimage')",
-        meta=meta,
-    )
+    src, spec = _cdc_merge_spec(changes, keys)
+    return merge_into_mor(spark, path, src, keys, meta=meta, **spec)
 
 
 def apply_changes(
@@ -5554,29 +5369,9 @@ def apply_changes(
     m = _manifest(path)
     if "partitions" not in m:
         return apply_changes_mor(spark, path, changes, keys, meta=meta)
-    attrs = [
-        c for c in changes.columns if c not in keys and c != "_change_type"
-    ]
-    src = changes.filter(F.col("_change_type") != "update_preimage")
+    src, spec = _cdc_merge_spec(changes, keys)
     return merge_into_cow(
-        spark,
-        path,
-        src,
-        keys,
-        when_matched=[
-            (
-                "update",
-                {c: f"s.{c}" for c in attrs},
-                "s._change_type = 'update_postimage'",
-            ),
-            ("delete", None, "s._change_type = 'delete'"),
-        ],
-        insert_not_matched={c: f"s.{c}" for c in list(keys) + attrs},
-        insert_not_matched_cond=(
-            "s._change_type IN ('insert', 'update_postimage')"
-        ),
-        ts_col=ts_col,
-        meta=meta,
+        spark, path, src, keys, ts_col=ts_col, meta=meta, **spec
     )
 
 
@@ -5829,9 +5624,7 @@ def clone_table(
         # the clone's scan computes, for an external file, the
         # normalized ABSOLUTE source path (the dst-prefix strip never
         # matches) — re-key the (file, pos) rows to exactly that
-        dv_src = spark.read.schema("file string, pos bigint").parquet(
-            os.path.join(src_abs, m["dv"]["sidecar"])
-        )
+        dv_src = _read_dv(spark, src_abs, m)
         touched = [r.file for r in dv_src.select("file").distinct().collect()]
         pairs = []
         for f in touched:

@@ -3129,11 +3129,138 @@ def test_merge_mor_degenerate_noop_skips_version_bump(spark, tmp_path):
     )
     assert v == before
     assert versioned.current_version(path) == before
+    # an update over no live rows is the same no-op
+    v = versioned.update_rows_mor(spark, path, "value > 0", {"value": "0.0"})
+    assert v == before
+    assert versioned.current_version(path) == before
     # with an insert clause it still degenerates to a pure insert
     v2 = versioned.merge_into_mor(
         spark, path, ev, ["event_id"], insert_not_matched=True)
     assert v2 == before + 1
     assert versioned.read_version(spark, path).count() == ev.count()
+
+
+def test_update_mor_checks_assignments_before_any_job(spark, tmp_path):
+    """An assignment to a column the table lacks raises before any
+    Spark job runs and commits nothing — whether the predicate
+    matches no row or some rows."""
+    import pytest
+
+    path = str(tmp_path / "upd_bad")
+    os.makedirs(path)
+    versioned.commit_version(
+        spark, path, spark.range(20).select(
+            F.col("id").alias("k"), F.col("id").cast("double").alias("x")
+        ),
+    )
+    before = versioned.current_version(path)
+    sc = spark.sparkContext
+    for i, pred in enumerate(("k < 0", "k < 5")):
+        group = f"upd-bad-{i}"
+        sc.setJobGroup(group, "update_rows_mor with an unknown column")
+        try:
+            with pytest.raises(ValueError, match="unknown column"):
+                versioned.update_rows_mor(spark, path, pred, {"nope": "1"})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert versioned.current_version(path) == before
+
+
+def test_dv_invariant_across_delete_update_merge(spark, tmp_path):
+    """delete → update → three-clause merge → delete over overlapping
+    keys on a stats-indexed table (dead-file detection on). After each
+    commit the cumulative DV sidecar holds no duplicate (file, pos),
+    its row count is the manifest's dv.rows and meta["dv_rows"], every
+    dead file is fully masked, and the snapshot equals a plain-Python
+    replay. Deleting every row then leaves no live file, and an
+    update there is a no-op that keeps the current version."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "dv_inv")
+    os.makedirs(path)
+    # four files of ten contiguous keys each
+    base = spark.range(40).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("x")
+    )
+    versioned.commit_version(
+        spark, path, base.repartitionByRange(4, "k"), stats_cols=["k"]
+    )
+    ref = {k: float(k) for k in range(40)}
+
+    def check():
+        m = versioned._manifest(path)
+        got = {r.k: r.x for r in versioned.read_version(spark, path).collect()}
+        assert got == ref
+        if "dv" not in m:
+            assert m["meta"]["dv_rows"] == 0
+            return m
+        dv = spark.read.parquet(os.path.join(path, m["dv"]["sidecar"]))
+        n = dv.count()
+        assert n == dv.select("file", "pos").distinct().count()
+        assert n == m["dv"]["rows"] == m["meta"]["dv_rows"]
+        per_file = {
+            r.file: r.n
+            for r in dv.groupBy("file").agg(F.count("*").alias("n")).collect()
+        }
+        for f in m["dv"].get("dead_files", []):
+            rows = pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+            assert per_file[f] == rows
+        return m
+
+    versioned.delete_rows_dv(spark, path, F.col("k") < 10)
+    for k in range(10):
+        del ref[k]
+    m1 = check()
+    assert len(m1["dv"]["dead_files"]) == 1
+
+    # keys 5-9 are already deleted: only 10-14 match
+    versioned.update_rows_mor(
+        spark, path, "k >= 5 AND k < 15", {"x": F.col("x") + 100.0}
+    )
+    for k in range(10, 15):
+        ref[k] += 100.0
+    m = check()
+    assert m["meta"]["updated_rows"] == 5
+    images = set(m["files"]) - set(m1["files"])
+
+    src = spark.createDataFrame(
+        [(12, "u", 1012.0), (14, "d", 0.0), (20, "u", 1020.0),
+         (21, "d", 0.0), (50, "i", 50.5), (3, "i", 3.5), (25, "i", 0.0)],
+        "k long, op string, x double",
+    )
+    versioned.merge_into_mor(
+        spark, path, src, ["k"],
+        when_matched=[
+            ("update", {"x": "s.x"}, "s.op = 'u'"),
+            ("delete", None, "s.op = 'd'"),
+        ],
+        insert_not_matched=True,
+        insert_not_matched_cond="s.op = 'i'",
+        prune_on="k",
+    )
+    ref.update({12: 1012.0, 20: 1020.0, 50: 50.5, 3: 3.5})
+    del ref[14], ref[21]
+    m = check()
+    assert m["meta"]["merge"]["updated"] == 2
+    assert m["meta"]["merge"]["deleted"] == 2
+    assert m["meta"]["merge"]["inserted"] == 2
+
+    # kills the rest of keys 10-19: their original file and the
+    # update's image file go fully dead
+    versioned.delete_rows_dv(spark, path, "k >= 10 AND k < 20")
+    for k in range(10, 20):
+        ref.pop(k, None)
+    m = check()
+    dead = set(m["dv"]["dead_files"])
+    assert images <= dead and len(dead & set(m1["files"])) == 2
+
+    # an update matching nothing still commits, carrying the DV
+    v = versioned.update_rows_mor(spark, path, "k < 0", {"x": "0.0"})
+    m2 = check()
+    assert v == m["version"] + 1 and m2["dv"] == m["dv"]
+    assert m2["meta"]["updated_rows"] == 0
 
 
 # ---- r14: RENAME COLUMN ---------------------------------------------
