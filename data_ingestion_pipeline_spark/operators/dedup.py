@@ -830,26 +830,6 @@ _MINHASH_INDEX_PARAMS = {
 }
 
 
-def _minhash_index_params_of(path: str) -> dict | None:
-    """Stored index params via a newest-first history walk — not just
-    the current manifest's meta: a maintenance commit
-    (minhash_index_remove's DV delete, compaction) writes its own
-    meta, and a head-only read would make the index 'disappear'
-    after it (the ADVICE r15 meta-riding trap; appends merge prior
-    meta forward, so the walk is O(maintenance commits))."""
-    from data_ingestion_pipeline_spark.operators import versioned as V
-
-    try:
-        cur = V.current_version(path)
-    except FileNotFoundError:
-        return None
-    for v in range(cur, 0, -1):
-        meta = V.manifest_meta(path, v)
-        if "minhash_index" in meta:
-            return meta["minhash_index"]
-    return None
-
-
 def minhash_index_remove(spark: SparkSession, path: str, doc_ids) -> int:
     """Remove documents from the persisted band index (takedowns,
     re-crawled rewrites): ONE deletion-vector commit — position-keyed
@@ -870,27 +850,28 @@ def minhash_index_append(
     spark: SparkSession, path: str, docs: DataFrame
 ) -> int:
     """Create-or-extend the persisted band index with `docs`' band
-    rows — (doc_id, sig, band, bucket), clustered by a derived copy
-    of the band (p_band; partitionBy strips the cluster column, the
-    identity-entry pattern keeps `band` itself readable). The first
-    call creates v1; every later call is an APPEND-SHAPED commit:
-    prior index files carry by reference, write cost is O(batch)
-    regardless of index size. LSH params ride in manifest meta and a
-    mismatched probe/append refuses — bucket keys from different
-    (n_hashes, n_bands, shingle_k) are incomparable garbage."""
+    rows — (doc_id, sig, band, bucket), appended with no layout
+    column: each partition of the batch's band rows becomes one file.
+    No reader prunes on a band directory — the probe joins on the
+    (band, bucket) columns and removal is a DV delete on doc_id — so
+    clustering by band would write N_BANDS files per batch, and every
+    probe would pay to plan and open them. The
+    first call creates v1; every later call is an APPEND-SHAPED
+    commit: prior index files carry by reference, write cost is
+    O(batch) regardless of index size. LSH params ride in manifest
+    meta and a mismatched probe/append refuses — bucket keys from
+    different (n_hashes, n_bands, shingle_k) are incomparable
+    garbage."""
     from data_ingestion_pipeline_spark.operators import versioned as V
 
-    prior = _minhash_index_params_of(path)
+    prior = V.latest_meta(path, "minhash_index")
     if prior is not None and prior != _MINHASH_INDEX_PARAMS:
         raise ValueError(
             f"index at {path!r} was built with {prior}; engine is at "
             f"{_MINHASH_INDEX_PARAMS} — rebuild the index"
         )
-    bands = _minhash_band_rows(minhash_signatures(docs)).withColumn(
-        "p_band", F.col("band")
-    )
     return V.append_version_clustered(
-        spark, path, bands, "p_band",
+        spark, path, _minhash_band_rows(minhash_signatures(docs)), None,
         meta={"minhash_index": _MINHASH_INDEX_PARAMS},
     )
 
@@ -908,7 +889,7 @@ def minhash_index_probe(
     index-local too: no text column is ever read back."""
     from data_ingestion_pipeline_spark.operators import versioned as V
 
-    params = _minhash_index_params_of(path)
+    params = V.latest_meta(path, "minhash_index")
     if params != _MINHASH_INDEX_PARAMS:
         raise ValueError(
             f"index at {path!r} carries params {params}; engine is at "

@@ -268,25 +268,66 @@ def _vector_dim(emb: DataFrame) -> int:
     return int(row[0]) if row else 0
 
 
-def hamming_signatures(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """(vec_id, sig0..sig{w}): random-hyperplane signature packed into
-    ⌈n_planes/64⌉ longs.
+def _lsh_planes(
+    dim: int, n_sig: int, n_tables: int = 0, band_bits: int = 0
+) -> np.ndarray:
+    """The signature planes and the (salted) band planes side by side,
+    shape (dim, n_sig + n_tables·band_bits): one weight table, so one
+    GEMM yields both. Each output column depends only on its own
+    plane, and _project_bits is exact, so every bit equals the one a
+    separate signature or band projection would give."""
+    parts = [_plane_weights(n_sig, dim)]
+    if n_tables:
+        parts.append(_plane_weights(n_tables * band_bits, dim, salt="band"))
+    return np.hstack(parts)
 
-    Shape: ONE narrow mapInPandas pass — Arrow-batched numpy GEMM of
-    the quantized embeddings against the broadcast-by-closure weight
-    matrix. Signature computation is a dense matrix multiply, which
-    Spark SQL can only express as either an n·dim·planes row explosion
-    or n_planes separate SUM aggregates (the round-2 shape — its 128
-    aggregate columns blew the whole-stage-codegen budget and the
-    plan spent seconds compiling). A vectorized Arrow batch is the
-    canonical engine answer (MLlib does the same via BLAS); exactness
-    and partition-independence are preserved by integer-valued
-    float64 arithmetic (see _project_bits). No shuffle: signatures
-    are computed where the vectors already live.
-    """
-    n_words = (n_planes + 63) // 64
-    W = _plane_weights(n_planes, _vector_dim(emb))
-    schema = "vec_id bigint, " + ", ".join(f"sig{i} bigint" for i in range(n_words))
+
+def _hash_vectors(
+    E: np.ndarray, W: np.ndarray, n_sig: int, band_bits: int
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """The one projection-and-packing path: project E against
+    W = [signature planes | band planes] (see _lsh_planes) and return
+    the ⌈n_sig/64⌉ packed signature words plus the (n, T) int64 band
+    keys (T = 0 without band planes). Band packing is one
+    (n, T, b) × (b,) tensor contraction — bits·2ʲ sums are exact in
+    int64."""
+    bits = _project_bits(E, W)
+    band = bits[:, n_sig:].astype(np.int64)
+    if band_bits:
+        pack = 1 << np.arange(band_bits, dtype=np.int64)
+        band = band.reshape(len(E), -1, band_bits) @ pack
+    return _pack_words(bits[:, :n_sig]), band
+
+
+def _hash_pass(
+    emb: DataFrame,
+    dim: int,
+    n_sig: int,
+    n_tables: int = 0,
+    band_bits: int = 0,
+    keep_embedding: bool = False,
+) -> DataFrame:
+    """(vec_id[, embedding], sig0..sig{w-1}[, band_keys]) in ONE
+    narrow mapInPandas pass: an Arrow-batched numpy GEMM of the
+    quantized embeddings against the broadcast-by-closure weight
+    table (_hash_vectors). A dense matrix multiply is something Spark
+    SQL can only express as an n·dim·planes row explosion or one SUM
+    aggregate per plane (the round-2 shape — its 128 aggregate
+    columns blew the whole-stage-codegen budget); a vectorized Arrow
+    batch is the canonical engine answer (MLlib does the same via
+    BLAS). No shuffle: vectors are hashed where they already live.
+    `band_keys` is one array of T keys per vector, so n rows cross
+    the Arrow boundary instead of n·T long-format rows.
+    `keep_embedding` passes the embedding through under its input
+    type, so a caller needing vector and hashes together never joins
+    the batch back to its own hashes."""
+    W = _lsh_planes(dim, n_sig, n_tables, band_bits)
+    cols = ["vec_id bigint"]
+    if keep_embedding:
+        cols.append(f"embedding {emb.schema['embedding'].dataType.simpleString()}")
+    cols += [f"sig{i} bigint" for i in range((n_sig + 63) // 64)]
+    if n_tables:
+        cols.append("band_keys array<bigint>")
 
     def gen(batches):
         import pandas as pd
@@ -294,13 +335,37 @@ def hamming_signatures(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            bits = _project_bits(np.stack(pdf["embedding"].to_numpy()), W)
+            sigs, keys = _hash_vectors(
+                np.stack(pdf["embedding"].to_numpy()), W, n_sig, band_bits
+            )
             out = {"vec_id": pdf["vec_id"].to_numpy()}
-            for i, col in enumerate(_pack_words(bits)):
+            if keep_embedding:
+                out["embedding"] = pdf["embedding"].to_numpy()
+            for i, col in enumerate(sigs):
                 out[f"sig{i}"] = col
+            if n_tables:
+                out["band_keys"] = list(keys)
             yield pd.DataFrame(out)
 
-    return emb.select("vec_id", "embedding").mapInPandas(gen, schema)
+    return emb.select("vec_id", "embedding").mapInPandas(gen, ", ".join(cols))
+
+
+def _explode_bands(hashed: DataFrame) -> DataFrame:
+    """(vec_id, band_table, band_key) long format from a _hash_pass
+    frame: the T-way fan-out happens in the JVM (pos ≡ band_table),
+    so candidate generation is a plain equi-join on
+    (band_table, band_key)."""
+    return hashed.select(
+        "vec_id", F.posexplode("band_keys").alias("band_table", "band_key")
+    ).select("vec_id", F.col("band_table").cast("int"), "band_key")
+
+
+def hamming_signatures(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
+    """(vec_id, sig0..sig{w}): random-hyperplane signature packed into
+    ⌈n_planes/64⌉ longs, in one _hash_pass. Exactness and
+    partition-independence come from integer-valued float64
+    arithmetic (see _project_bits)."""
+    return _hash_pass(emb, _vector_dim(emb), n_planes)
 
 
 def ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,49 +703,9 @@ def _lsh_params(n: int, threshold: float) -> tuple[int, int]:
 def _band_keys(emb: DataFrame, n_tables: int, band_bits: int, dim: int) -> DataFrame:
     """(vec_id, band_table, band_key): for each vector, one packed
     b-bit hyperplane key per band table, all T·b planes drawn fresh
-    (salted) and projected in the same exact Arrow-batched GEMM as
-    hamming_signatures. Long format (T rows per vector) so candidate
-    generation is a plain equi-join on (band_table, band_key).
-
-    The Python stage emits ONE row per vector (vec_id, array of T
-    keys) and the T-way fan-out happens in the JVM via posexplode:
-    with T up to ~1000 tables, shipping n rows of packed arrays across
-    the Arrow boundary instead of n·T long-format rows cuts the
-    serialized row count three orders of magnitude for identical
-    output (pos ≡ the old tiled band_table index). Packing itself is
-    one (n, T, b) × (b,) tensor contraction — bits·2ʲ sums are exact
-    in int64 — replacing a T·b-iteration Python loop (guide §4.2).
-    """
-    W = _plane_weights(n_tables * band_bits, dim, salt="band")
-    pack = 1 << np.arange(band_bits, dtype=np.int64)
-    schema = "vec_id bigint, band_keys array<bigint>"
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bits = _project_bits(np.stack(pdf["embedding"].to_numpy()), W)
-            n = len(pdf)
-            keys = bits.reshape(n, n_tables, band_bits).astype(np.int64) @ pack
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "band_keys": list(keys),
-                }
-            )
-
-    return (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(gen, schema)
-        .select(
-            "vec_id",
-            F.posexplode("band_keys").alias("band_table", "band_key"),
-        )
-        .withColumn("band_table", F.col("band_table").cast("int"))
-        .select("vec_id", "band_table", "band_key")
-    )
+    (salted) and projected by the same exact GEMM as
+    hamming_signatures (_hash_pass with no signature planes)."""
+    return _explode_bands(_hash_pass(emb, dim, 0, n_tables, band_bits))
 
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1752,41 +1777,22 @@ def ann_ivfpq_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plus an O(candidates) vector fetch for the exact verify. Appends
 # carry every prior index file by reference (append_version_clustered)
 # so maintenance cost is O(batch) regardless of index size.
+#
+# Layout: both tables append with NO layout column, so each input
+# partition of a batch becomes one file per table. No reader prunes on
+# a directory here — the probe joins on the (band_table, band_key) and
+# vec_id columns and removal is a DV delete on vec_id — so directory
+# buckets would only multiply files, and file count is what the probe
+# pays for: each read plans and opens every file, and past Spark's
+# parallelPartitionDiscovery.threshold (32 paths) every read_version
+# first runs a distributed listing job with one task per file. Tables
+# written under a bucketed layout (p_table / p_bucket directories)
+# stay readable: leaf-file reads never infer the directory column, and
+# manifest partition tags are carried, not interpreted.
 
 _EMB_INDEX_BANDS = "bands"
 _EMB_INDEX_VECTORS = "vectors"
-_EMB_VEC_BUCKETS = 16  # vec-table cluster fan-out (balanced files)
-# Band-table DIRECTORY fan-out: cluster band rows by
-# pmod(band_table, 64), not raw band_table — the multi-table LSH
-# construction can run up to 1024 tables (MAX_BAND_TABLES), and one
-# partition directory per table exploded a toy-SF append into 1000+
-# tiny files (the probe joins on the (band_table, band_key) COLUMNS,
-# never on directory boundaries, so bucketing the layout key changes
-# file count and locality only — results are identical).
-_EMB_BAND_DIR_BUCKETS = 64
-
-
-def _emb_index_pinned(bands_path: str) -> dict | None:
-    """The pinned LSH parameterization, read by walking bands-table
-    history newest-first to the latest commit whose meta carries the
-    key — NOT just the current manifest: a maintenance commit
-    (embedding_index_remove's DV delete, compaction) writes its own
-    meta, and reading only the head would make the index 'disappear'
-    after its first removal (the exact meta-riding trap ADVICE r15
-    called on the CDF cursor; appends merge prior meta forward, so
-    the walk terminates at the newest append — O(maintenance
-    commits), not O(history))."""
-    from data_ingestion_pipeline_spark.operators import versioned as V
-
-    try:
-        cur = V.current_version(bands_path)
-    except FileNotFoundError:
-        return None
-    for v in range(cur, 0, -1):
-        meta = V.manifest_meta(bands_path, v)
-        if "embedding_lsh_index" in meta:
-            return meta["embedding_lsh_index"]
-    return None
+_EMB_INDEX_META = "embedding_lsh_index"
 
 
 def _emb_index_params(n: int, dim: int) -> dict:
@@ -1800,63 +1806,84 @@ def _emb_index_params(n: int, dim: int) -> dict:
     }
 
 
+def _emb_index_hash(emb: DataFrame, p: dict) -> DataFrame:
+    """A batch hashed ONCE under the pinned params `p`: (vec_id,
+    embedding, sig0, sig1, band_keys) from one _hash_pass, plus the
+    JVM fixed-point `nrm`, materialised by localCheckpoint so the
+    probe's candidate joins and verify lookup (or the append's two
+    writes) all read the same rows without re-running the Python
+    stage. Bits are identical to hamming_signatures and _band_keys
+    under the same params — embedding_near_dup_lsh stays the
+    reference."""
+    return _with_norm(
+        _hash_pass(
+            emb, p["dim"], p["n_planes"], p["n_tables"], p["band_bits"],
+            keep_embedding=True,
+        )
+    ).localCheckpoint(eager=True)
+
+
 def embedding_index_append(
     spark: SparkSession,
     path: str,
     emb: DataFrame,
     params: dict | None = None,
 ) -> int:
-    """Create-or-extend the persisted embedding band index at `path`
-    (two versioned tables under one root: `bands` = (vec_id,
-    band_table, band_key) clustered by pmod(band_table, 64) — see
-    _EMB_BAND_DIR_BUCKETS; `vectors` = (vec_id, embedding, nrm,
-    sig0, sig1) clustered by pmod(vec_id, 16)). The first call PINS the LSH parameterization —
-    explicit `params`, or derived from the first batch's size via
+    """Create-or-extend the persisted embedding band index at `path`:
+    two versioned tables under one root, `bands` = (vec_id,
+    band_table, band_key) and `vectors` = (vec_id, embedding, nrm,
+    sig0, sig1), both appended with no layout column (see the layout
+    note above) — the batch is hashed once (_emb_index_hash) and each
+    of its input partitions lands as one file per table.
+
+    The first call PINS the LSH parameterization — explicit `params`,
+    or derived from the first batch's size and dimension via
     _lsh_params — into the bands manifest meta; every later append
     re-reads the pinned params, so band keys stay comparable for the
     index's whole life (the hyperplane draws are deterministic in
     (n_planes, dim, salt), making probe and append reproducible on
-    any engine restart). A mismatched explicit `params` refuses:
-    band keys from different (bits, tables, dim) are incomparable
-    garbage — re-index under the new parameterization instead
-    (FAISS-retrain semantics, same contract as the minhash and
-    IVF-PQ indexes). Appends are O(batch): prior files carry by
-    reference in both tables."""
+    any engine restart). An empty first batch without `params` has
+    nothing to derive a parameterization from and refuses before any
+    write; with explicit `params` it creates an empty index. A
+    mismatched explicit `params` refuses: band keys from different
+    (bits, tables, dim) are incomparable garbage — re-index under the
+    new parameterization instead (FAISS-retrain semantics, same
+    contract as the minhash and IVF-PQ indexes). Appends are
+    O(batch): prior files carry by reference in both tables."""
     from data_ingestion_pipeline_spark.operators import versioned as V
 
     bands_path = os.path.join(path, _EMB_INDEX_BANDS)
     vecs_path = os.path.join(path, _EMB_INDEX_VECTORS)
-    os.makedirs(bands_path, exist_ok=True)
-    os.makedirs(vecs_path, exist_ok=True)
-
-    pinned = _emb_index_pinned(bands_path)
+    pinned = V.latest_meta(bands_path, _EMB_INDEX_META)
     if pinned is None:
-        pinned = params or _emb_index_params(emb.count(), _vector_dim(emb))
+        if params is None:
+            row = emb.agg(
+                F.count(F.lit(1)).alias("n"), F.max(F.size("embedding")).alias("dim")
+            ).first()
+            if not row["n"]:
+                raise ValueError(
+                    f"embedding_index_append: empty first batch for {path!r} "
+                    "cannot pin LSH params — pass params explicitly"
+                )
+            params = _emb_index_params(row["n"], row["dim"])
+        pinned = params
     elif params is not None and params != pinned:
         raise ValueError(
             f"index at {path!r} was pinned with {pinned}; got {params} "
             "— rebuild the index to re-parameterize"
         )
+    os.makedirs(bands_path, exist_ok=True)
+    os.makedirs(vecs_path, exist_ok=True)
 
-    ev = _with_norm(emb.select("vec_id", "embedding"))
-    bands = _band_keys(
-        ev, pinned["n_tables"], pinned["band_bits"], pinned["dim"]
-    ).withColumn(
-        "p_table", F.pmod(F.col("band_table"), F.lit(_EMB_BAND_DIR_BUCKETS))
-    )
+    hashed = _emb_index_hash(emb, pinned)
     V.append_version_clustered(
-        spark,
-        bands_path,
-        bands,
-        "p_table",
-        meta={"embedding_lsh_index": pinned},
+        spark, bands_path, _explode_bands(hashed), None,
+        meta={_EMB_INDEX_META: pinned},
     )
-    vecs = (
-        ev.join(hamming_signatures(ev), "vec_id")
-        .select("vec_id", "embedding", "nrm", "sig0", "sig1")
-        .withColumn("p_bucket", F.pmod(F.col("vec_id"), F.lit(_EMB_VEC_BUCKETS)))
+    return V.append_version_clustered(
+        spark, vecs_path,
+        hashed.select("vec_id", "embedding", "nrm", "sig0", "sig1"), None,
     )
-    return V.append_version_clustered(spark, vecs_path, vecs, "p_bucket")
 
 
 def embedding_index_remove(
@@ -1898,16 +1925,17 @@ def embedding_index_probe(
     batch operator (embedding_near_dup_lsh), with the standing corpus
     contributing ONLY stored rows:
 
-    1. CANDIDATES — the batch is band-keyed once under the PINNED
-       params; one equi-join on (band_table, band_key) against the
-       stored band rows (new-vs-index) plus the batch's self-join
-       (new-vs-new). Fan-out tracks bucket co-occupancy, never
-       index × batch; the indexed corpus is never re-hashed.
+    1. CANDIDATES — the batch is hashed once under the PINNED params
+       (_emb_index_hash: one Arrow pass yields its band keys and
+       signatures together); one equi-join on (band_table, band_key)
+       against the stored band rows (new-vs-index) plus the batch's
+       self-join (new-vs-new). Fan-out tracks bucket co-occupancy,
+       never index × batch; the indexed corpus is never re-hashed.
     2. COARSE — 16-byte signature Hamming ≤ NEAR_DUP_MAX_HAMMING;
        indexed signatures come from the vectors table via an
-       O(candidates) equi-join, batch signatures are computed fresh
-       (deterministic planes ⇒ identical to the ones stored at that
-       vector's own append).
+       O(candidates) equi-join, batch signatures come from the same
+       hash pass (deterministic planes ⇒ identical to the ones
+       stored at that vector's own append).
     3. EXACT — fixed-point cosine ≥ threshold, precision perfect by
        construction; the indexed side's vectors are fetched by the
        same O(candidates) join, so no full-index vector scan.
@@ -1921,14 +1949,12 @@ def embedding_index_probe(
 
     bands_path = os.path.join(path, _EMB_INDEX_BANDS)
     vecs_path = os.path.join(path, _EMB_INDEX_VECTORS)
-    pinned = _emb_index_pinned(bands_path)
+    pinned = V.latest_meta(bands_path, _EMB_INDEX_META)
     if pinned is None:
         raise ValueError(f"no embedding index at {path!r}")
 
-    ev = _with_norm(new_vecs.select("vec_id", "embedding"))
-    nb = _band_keys(
-        ev, pinned["n_tables"], pinned["band_bits"], pinned["dim"]
-    )
+    hashed = _emb_index_hash(new_vecs, pinned)
+    nb = _explode_bands(hashed)
     stored = V.read_version(spark, bands_path).select(
         "vec_id", "band_table", "band_key"
     )
@@ -1962,9 +1988,7 @@ def embedding_index_probe(
     # indexed vectors, fresh rows for the batch (batch rows win on
     # overlap — they are identical by determinism, so precedence is
     # cosmetic)
-    fresh = ev.join(hamming_signatures(ev), "vec_id").select(
-        "vec_id", "embedding", "nrm", "sig0", "sig1"
-    )
+    fresh = hashed.select("vec_id", "embedding", "nrm", "sig0", "sig1")
     stored_vecs = (
         V.read_version(spark, vecs_path)
         .select("vec_id", "embedding", "nrm", "sig0", "sig1")

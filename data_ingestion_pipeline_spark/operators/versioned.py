@@ -520,6 +520,22 @@ def manifest_meta(path: str, version: int | None = None) -> dict:
         return json.load(fh).get("meta", {})
 
 
+def latest_meta(path: str, key: str):
+    """``meta[key]`` of the newest commit that carries `key`, walking
+    the manifests newest-first; None when the table does not exist or
+    no commit carries it. Not just the head manifest: a maintenance
+    commit (a DV delete, compaction) writes its own meta, and a
+    head-only read would make a value pinned by an append disappear
+    after the first such commit. Appends merge prior meta forward, so
+    the walk stops at the newest append — O(maintenance commits), not
+    O(history)."""
+    for v in range(current_version(path), 0, -1):
+        meta = manifest_meta(path, v)
+        if key in meta:
+            return meta[key]
+    return None
+
+
 def read_version(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
@@ -3567,7 +3583,7 @@ def append_version_clustered(
     spark: SparkSession,
     path: str,
     df: DataFrame,
-    partition_col: str,
+    partition_col: str | None,
     meta: dict | None = None,
     expected_current: int | None = None,
     stats_cols: list[str] | None = None,
@@ -3580,9 +3596,12 @@ def append_version_clustered(
     cost is O(new data) regardless of table size, the manifests-span-
     snapshots shape Iceberg appends have. Multiple files per partition
     are normal; readers union them and pruned reads match on the
-    per-file partition tag. Prior manifest meta carries forward under
-    the new commit's keys (so a model artifact riding in meta — the
-    IVF-PQ index's centroids/codebooks — survives appends).
+    per-file partition tag. `partition_col=None` writes no layout
+    column: each input partition of df becomes one file, for tables
+    no reader prunes by directory (the near-dup indexes). Prior
+    manifest meta carries forward under the new commit's keys (so a
+    model artifact riding in meta — the IVF-PQ index's
+    centroids/codebooks — survives appends).
 
     `stats_cols` / `bloom_cols` request write-time index maintenance —
     THE path where the incremental build earns its keep: the refresh

@@ -783,10 +783,14 @@ def test_minhash_index_probe_matches_batch_lsh(spark, tmp_path):
     }
     assert got == want
 
-    # append is O(batch): every prior index file carries by reference
-    dedup.minhash_index_append(spark, path, batch)
+    # append is O(batch): every prior index file carries by reference,
+    # and a coalesce(1) batch adds exactly one file (no band layout
+    # directories)
+    dedup.minhash_index_append(spark, path, batch.coalesce(1))
     m2 = V._manifest(path)
     assert set(m1["files"]) <= set(m2["files"])
+    added = set(m2["files"]) - set(m1["files"])
+    assert len(added) == 1, sorted(added)
 
     # after the append, probing a FURTHER batch sees the first batch
     # as part of the indexed corpus (here: empty batch → no pairs)

@@ -92,7 +92,9 @@ def test_embedding_index_probe_is_not_allpairs(spark, tmp_path):
     """The persisted-index probe's candidate stage must be an
     equi-join of the batch's band keys against the STORED band rows —
     never a cartesian/nested-loop, and never a re-hash of the indexed
-    corpus (the index side reads only its two versioned tables)."""
+    corpus (the index side reads only its two versioned tables). The
+    batch is hashed in one Arrow pass, materialised before the joins:
+    the probe's plan holds at most one MapInPandas node."""
     from pyspark.sql import functions as F
 
     from data_ingestion_pipeline_spark.sources.tables import load_table
@@ -108,6 +110,7 @@ def test_embedding_index_probe_is_not_allpairs(spark, tmp_path):
     plan = plan_of(probe)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert plan_of(probe, "simple").count("MapInPandas") <= 1
 
 
 def test_asof_join_has_no_join(spark):

@@ -565,10 +565,11 @@ def test_embedding_index_remove_masks_vectors(spark, tmp_path):
 
 def test_embedding_index_append_by_reference_and_param_pin(spark, tmp_path):
     """Index maintenance is O(batch): a second append's bands/vectors
-    manifests carry EVERY v1 file by reference and add only v2 files.
-    The parameterization is pinned at creation: a later append with
-    different explicit params refuses, and probing an empty root
-    refuses."""
+    manifests carry EVERY v1 file by reference and add only v2 files
+    — one per input partition, no layout directories: a coalesce(1)
+    batch adds exactly one file to each table. The parameterization
+    is pinned at creation: a later append with different explicit
+    params refuses, and probing an empty root refuses."""
     import os
 
     import pytest
@@ -584,14 +585,16 @@ def test_embedding_index_append_by_reference_and_param_pin(spark, tmp_path):
         spark, path, emb.filter(F.col("vec_id") % 2 == 0), params=params
     )
     similarity.embedding_index_append(
-        spark, path, emb.filter(F.col("vec_id") % 2 == 1)
+        spark, path, emb.filter(F.col("vec_id") % 2 == 1).coalesce(1)
     )
     for sub in ("bands", "vectors"):
         tp = os.path.join(path, sub)
         m1 = V._manifest(tp, 1)
         m2 = V._manifest(tp, 2)
         assert set(m1["files"]) <= set(m2["files"])  # carried by reference
-        assert any(f.startswith("data/v2") for f in m2["files"])
+        added = set(m2["files"]) - set(m1["files"])
+        assert len(added) == 1, (sub, sorted(added))
+        assert all(f.startswith("data/v2") for f in added)
     # probe over the two-append index still equals the batch operator
     # over the same whole corpus (vs itself: all pairs involve the
     # "batch" when the batch is the whole corpus — use a small probe)
@@ -617,3 +620,111 @@ def test_embedding_index_append_by_reference_and_param_pin(spark, tmp_path):
         similarity.embedding_index_probe(
             spark, str(tmp_path / "nothing"), probe_batch
         )
+
+
+def test_embedding_index_empty_first_append(spark, tmp_path):
+    """An empty first batch has nothing to derive LSH params from:
+    without explicit params it refuses before any write and leaves no
+    index (a later non-empty append pins normally). With explicit
+    params it creates an empty index that later appends extend."""
+    import os
+
+    import pytest
+
+    from data_ingestion_pipeline_spark.operators import versioned as V
+
+    emb = load_table(spark, SF_TEST, "embeddings")
+    empty = emb.filter(F.lit(False))
+    batch = emb.filter(F.col("vec_id") % 3 == 0)
+    corpus = emb.filter(F.col("vec_id") % 3 != 0)
+
+    path = str(tmp_path / "embidx_empty")
+    with pytest.raises(ValueError, match="empty first batch"):
+        similarity.embedding_index_append(spark, path, empty)
+    for sub in ("bands", "vectors"):
+        assert V.current_version(os.path.join(path, sub)) == 0
+    with pytest.raises(ValueError, match="no embedding index"):
+        similarity.embedding_index_probe(spark, path, batch)
+    similarity.embedding_index_append(spark, path, corpus)
+    pinned = V.latest_meta(
+        os.path.join(path, "bands"), "embedding_lsh_index"
+    )
+    assert pinned["dim"] == similarity._vector_dim(emb)
+
+    params = similarity._emb_index_params(
+        emb.count(), similarity._vector_dim(emb)
+    )
+    path = str(tmp_path / "embidx_empty_params")
+    similarity.embedding_index_append(spark, path, empty, params=params)
+    for sub in ("bands", "vectors"):
+        assert V.current_version(os.path.join(path, sub)) == 1
+    assert similarity.embedding_index_probe(spark, path, empty).count() == 0
+    similarity.embedding_index_append(spark, path, corpus)
+    got = {
+        (r.vec_a, r.vec_b, round(r.cosine, 9))
+        for r in similarity.embedding_index_probe(spark, path, batch).collect()
+    }
+    want = {
+        (r.vec_a, r.vec_b, round(r.cosine, 9))
+        for r in similarity.embedding_index_incremental_pairs(
+            spark, SF_TEST
+        ).collect()
+    }
+    assert got == want and got
+
+
+def test_embedding_index_reads_old_bucketed_layout(spark, tmp_path):
+    """An index whose first append used the old bucketed layout
+    (bands clustered by pmod(band_table, 64), vectors by
+    pmod(vec_id, 16)) keeps working after an append in the new
+    unclustered layout: the probe still equals embedding_near_dup_lsh
+    on batch-involving pairs."""
+    import os
+
+    from data_ingestion_pipeline_spark.operators import versioned as V
+
+    emb = load_table(spark, SF_TEST, "embeddings")
+    params = similarity._emb_index_params(
+        emb.count(), similarity._vector_dim(emb)
+    )
+    path = str(tmp_path / "embidx_old")
+    bands_path = os.path.join(path, "bands")
+    vecs_path = os.path.join(path, "vectors")
+    ev = similarity._with_norm(
+        emb.filter(F.col("vec_id") % 3 == 1).select("vec_id", "embedding")
+    )
+    bands = similarity._band_keys(
+        ev, params["n_tables"], params["band_bits"], params["dim"]
+    ).withColumn("p_table", F.pmod(F.col("band_table"), F.lit(64)))
+    V.append_version_clustered(
+        spark, bands_path, bands, "p_table",
+        meta={"embedding_lsh_index": params},
+    )
+    vecs = (
+        ev.join(similarity.hamming_signatures(ev), "vec_id")
+        .select("vec_id", "embedding", "nrm", "sig0", "sig1")
+        .withColumn("p_bucket", F.pmod(F.col("vec_id"), F.lit(16)))
+    )
+    V.append_version_clustered(spark, vecs_path, vecs, "p_bucket")
+
+    similarity.embedding_index_append(
+        spark, path, emb.filter(F.col("vec_id") % 3 == 2)
+    )
+    for tp in (bands_path, vecs_path):
+        m1, m2 = V._manifest(tp, 1), V._manifest(tp, 2)
+        assert all("p_" in f for f in m1["files"])
+        assert not any("p_" in f for f in set(m2["files"]) - set(m1["files"]))
+
+    got = {
+        (r.vec_a, r.vec_b, round(r.cosine, 9))
+        for r in similarity.embedding_index_probe(
+            spark, path, emb.filter(F.col("vec_id") % 3 == 0)
+        ).collect()
+    }
+    want = {
+        (r.vec_a, r.vec_b, round(r.cosine, 9))
+        for r in similarity.embedding_near_dup_lsh(spark, SF_TEST)
+        .filter((F.col("vec_a") % 3 == 0) | (F.col("vec_b") % 3 == 0))
+        .collect()
+    }
+    assert got == want and got
