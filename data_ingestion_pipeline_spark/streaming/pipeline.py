@@ -1549,7 +1549,7 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
                     cand = V.bloom_candidate_files_df(
                         spark, table, "event_id", keys_df, manifest=m
                     )
-                except (V.StaleBloomIndexError, FileNotFoundError):
+                except V.StaleBloomIndexError:
                     V.build_bloom_index(spark, table, "event_id")
                     cand = V.bloom_candidate_files_df(
                         spark, table, "event_id", keys_df, manifest=m

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.operators import versioned
@@ -3877,33 +3878,129 @@ def test_bloom_index_full_rebuild_after_widen(spark, tmp_path):
     assert cand  # the file holding k=1 survives pruning
 
 
-def test_rename_migrates_bloom_pointer_for_incremental_refresh(
-    spark, tmp_path
+@pytest.mark.parametrize("kind", ["bloom", "stats"])
+def test_rename_migrates_index_pointer_for_incremental_refresh(
+    spark, tmp_path, kind
 ):
-    """Bloom pointers record the column as 'key_col' (stats use
-    'col'); the rename migration must rewrite it too, else the
-    advertised pointer-follow silently degrades to a full rebuild on
-    every refresh (ADVICE r14 low)."""
+    """Bloom pointers record the column as 'key_col', stats pointers
+    as 'col'; the rename migration must rewrite the kind's field, else
+    the advertised pointer-follow silently degrades to a full rebuild
+    on every refresh (ADVICE r14 low)."""
     import json as _json
 
     path = str(tmp_path / "bp")
     os.makedirs(path)
+    build, pointer, field, candidates = {
+        "bloom": (
+            versioned.build_bloom_index, "_BLOOM_reading.json", "key_col",
+            lambda v: versioned.bloom_candidate_files(
+                spark, path, "reading", [v]
+            ),
+        ),
+        "stats": (
+            versioned.build_column_stats, "_STATS_reading.json", "col",
+            lambda v: versioned.stats_candidate_files(
+                spark, path, "reading", v, v
+            ),
+        ),
+    }[kind]
     versioned.commit_version(
         spark, path, _events(spark).limit(60).repartition(3)
     )
-    versioned.build_bloom_index(spark, path, "value")
+    build(spark, path, "value")
     versioned.rename_column(spark, path, "value", "reading")
-    with open(os.path.join(path, "_BLOOM_reading.json")) as fh:
+    with open(os.path.join(path, pointer)) as fh:
         p = _json.load(fh)
-    assert p["key_col"] == "reading"
-    b = versioned.build_bloom_index(spark, path, "reading")
+    assert p[field] == "reading"
+    b = build(spark, path, "reading")
     assert b["harvested_files"] == 0  # carried, not rebuilt
     assert b["carried_files"] == 3
     probe = [
         r.reading
         for r in versioned.read_version(spark, path).limit(1).collect()
     ]
-    assert versioned.bloom_candidate_files(spark, path, "reading", probe)
+    assert candidates(probe[0])
+
+
+@pytest.mark.parametrize("kind", ["bloom", "stats"])
+def test_missing_sidecar_reads_as_stale_and_lookup_rebuilds(
+    spark, tmp_path, kind
+):
+    """A pointer whose sidecar directory is gone is stale, like an
+    absent pointer: the metadata probe raises the kind's stale error
+    (not a raw PATH_NOT_FOUND on every call) and the lookup rebuilds
+    the index and serves the right row."""
+    import shutil
+
+    path = str(tmp_path / "ms")
+    os.makedirs(path)
+    build, stale, candidates, lookup = {
+        "bloom": (
+            versioned.build_bloom_index, versioned.StaleBloomIndexError,
+            lambda: versioned.bloom_candidate_files(spark, path, "k", [7]),
+            lambda: versioned.bloom_lookup(spark, path, "k", [7]),
+        ),
+        "stats": (
+            versioned.build_column_stats, versioned.StaleStatsIndexError,
+            lambda: versioned.stats_candidate_files(spark, path, "k", 7, 7),
+            lambda: versioned.stats_lookup(spark, path, "k", 7, 7),
+        ),
+    }[kind]
+    df = spark.createDataFrame(
+        [(i, f"r{i}") for i in range(40)], "k int, v string"
+    )
+    versioned.commit_version(spark, path, df.repartition(4))
+    assert len(versioned._manifest(path)["files"]) == 4
+    idx = build(spark, path, "k")
+    shutil.rmtree(os.path.join(path, idx["sidecar"]))
+    with pytest.raises(stale):
+        candidates()
+    assert [r.v for r in lookup().collect()] == ["r7"]
+    assert candidates()  # the rebuilt index serves again
+
+
+def test_zero_row_files_get_no_index_row(spark, tmp_path):
+    """An empty commit or append adds a zero-row data file. Its footer
+    has no row group, so it has no min/max; the stats index must still
+    give it no row (as the bloom index does), else the file is a
+    candidate for every range probe forever."""
+    import json as _json
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "zr")
+    os.makedirs(path)
+    schema = "k int, v string"
+    versioned.commit_version(spark, path, spark.createDataFrame([], schema))
+    versioned.append_version_clustered(
+        spark, path,
+        spark.createDataFrame(
+            [(i, f"r{i}") for i in range(100)], schema
+        ).coalesce(1),
+        None,
+    )
+    versioned.append_version_clustered(
+        spark, path, spark.createDataFrame([], schema), None
+    )
+    files = versioned._manifest(path)["files"]
+    full = [
+        f for f in files
+        if pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+    ]
+    assert len(files) == 3 and len(full) == 1
+
+    versioned.build_column_stats(spark, path, "k")
+    versioned.build_bloom_index(spark, path, "k")
+    assert versioned.stats_candidate_files(spark, path, "k", 1000, 2000) == []
+    assert versioned.stats_candidate_files(spark, path, "k", 5, 5) == full
+    for pj in ("_STATS_k.json", "_BLOOM_k.json"):
+        with open(os.path.join(path, pj)) as fh:
+            sidecar = _json.load(fh)["sidecar"]
+        assert spark.read.parquet(os.path.join(path, sidecar)).count() == 1
+    got = versioned.stats_lookup(spark, path, "k", 5, 5).collect()
+    assert [r.k for r in got] == [5]
+    assert versioned.stats_lookup(spark, path, "k", 1000, 2000).count() == 0
+    assert versioned.stats_lookup(spark, path, "k", None, None).count() == 100
 
 
 def test_retirement_precedes_ddl_publish(spark, tmp_path, monkeypatch):
