@@ -37,10 +37,13 @@ untouched: readers get a file list, Catalyst does the rest).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
+from collections.abc import Callable
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -441,13 +444,18 @@ def _maintain_indexes(
     stats_cols: list[str] | None,
     bloom_cols: list[str] | None = None,
 ) -> None:
-    """Post-publish write-time index maintenance: refresh the min/max
-    index of each stats column and the bloom index of each bloom
-    column (both incremental — only this commit's new files' footers
-    are read). The commit is already durable, so any failure surfaces
-    as IndexMaintenanceError, never the raw error."""
-    for build, cols in ((build_column_stats, stats_cols), (build_bloom_index, bloom_cols)):
+    """Create the min/max index of each stats column and the bloom
+    index of each bloom column that has none yet. An index that exists
+    needs nothing here: the commit's own publish refreshed it
+    (_refresh_indexes). The commit is already durable, so any failure
+    surfaces as IndexMaintenanceError, never the raw error."""
+    for kind, build, cols in (
+        ("stats", build_column_stats, stats_cols),
+        ("bloom", build_bloom_index, bloom_cols),
+    ):
         for col in cols or ():
+            if os.path.isfile(_pointer_path(path, kind, col)):
+                continue
             try:
                 build(spark, path, col)
             except Exception as e:  # noqa: BLE001 — commit already durable
@@ -481,17 +489,16 @@ def commit_version(
     of protocol. `meta` rides along in the manifest (e.g. the
     streaming sink's batch id — see stream lifecycle below).
 
-    `stats_cols` is WRITE-TIME INDEX MAINTENANCE (what Delta/Iceberg
-    do on every write): immediately after the pointer swap, the
-    min/max skipping index is refreshed INCREMENTALLY for each named
-    column (only this commit's new files' footers are read — see
-    build_column_stats), so range probes through `stats_lookup` never
-    hit the stale-rebuild path for tables whose writers declare their
-    skip columns; a lookup on an undeclared column still rebuilds
-    transparently. Maintenance runs AFTER the pointer swap: a failure
-    there leaves the commit durable and raises IndexMaintenanceError
-    (never the raw error), so callers don't mistake it for a failed
-    commit and double-write on retry.
+    `stats_cols` / `bloom_cols` CREATE the min/max (bloom) index of
+    each named column when it has none. Keeping an index current is
+    not the caller's job: every commit's publish refreshes every index
+    the table has (_refresh_indexes — only the commit's added files
+    are read), so range probes through `stats_lookup` serve without a
+    rebuild whether or not a later writer names the column. Creation
+    runs AFTER the pointer swap: a failure there leaves the commit
+    durable and raises IndexMaintenanceError (never the raw error), so
+    callers don't mistake it for a failed commit and double-write on
+    retry.
     """
     _occ_check(path, expected_current)
     v = current_version(path) + 1
@@ -1718,10 +1725,12 @@ def merge_into_mor(
     ``prune_on=<merge key>`` (r16) removes the last O(table) term —
     the full live-file SCAN feeding the match join (measured as the
     dominant merge cost once the write side went O(emitted):
-    SESSION_SINK_GROWTH.json). The stats index on that key is
-    refreshed incrementally (O(files added since last refresh) footer
-    reads — build_column_stats carries surviving rows by reference),
-    the source's [min, max] on the key is taken in one pass, and only
+    SESSION_SINK_GROWTH.json). The stats index on that key is created
+    on the first pruned merge and kept current by every later commit's
+    publish (_refresh_indexes), so the merge itself finds it fresh;
+    the source's [min, max] on the key is taken in one pass, the
+    interval probe runs on the driver with no Spark job
+    (stats_candidate_files), and only
     files whose footer interval overlaps it are scanned: a file the
     probe prunes provably contains NO row equal to any source key
     (the no-false-negative contract tests/test_properties.py pins),
@@ -1759,8 +1768,7 @@ def merge_into_mor(
                 f"{keys}: pruning is sound only for columns the match "
                 "join equates"
             )
-        # refresh is incremental: O(files added since the index's base
-        # version) footer reads, surviving rows carried by reference
+        # a no-op when the publish hook kept the index current
         build_column_stats(spark, path, prune_on)
         bounds = source.agg(
             F.min(prune_on).alias("lo"), F.max(prune_on).alias("hi")
@@ -2126,15 +2134,22 @@ def _pointer_path(path: str, kind: str, col: str) -> str:
     return os.path.join(path, f"{_INDEX_KINDS[kind][0]}{col}.json")
 
 
-def _pointer_files(path: str) -> list[str]:
-    """Every index pointer file of the table, of every kind."""
-    import glob as _glob
-
+def _pointer_files(path: str) -> list[tuple[str, str]]:
+    """(kind, column) of every index pointer file of the table: one
+    directory listing."""
     return [
-        pj
-        for prefix, _field in _INDEX_KINDS.values()
-        for pj in _glob.glob(os.path.join(path, prefix + "*.json"))
+        (kind, name[len(prefix) : -len(".json")])
+        for name in sorted(os.listdir(path))
+        for kind, (prefix, _field) in _INDEX_KINDS.items()
+        if name.startswith(prefix) and name.endswith(".json")
     ]
+
+
+def _index_parts(index: dict) -> list[str]:
+    """The sidecar parts a pointer lists, as table relpaths: its base
+    (`sidecar`), then one segment per refresh since the base was
+    written (`segments`)."""
+    return [index["sidecar"], *index.get("segments", ())]
 
 
 class _StaleIndexError(RuntimeError):
@@ -2144,28 +2159,30 @@ class _StaleIndexError(RuntimeError):
 
 class StaleBloomIndexError(_StaleIndexError):
     """The bloom index cannot serve the snapshot at hand: its pointer
-    is absent, the sidecar it names is missing, it was written under
-    another layout format, or it was built at another table version.
-    bloom_lookup rebuilds and retries; metadata-only callers must
-    rebuild with build_bloom_index."""
+    is absent, a sidecar part it lists is missing, it was written
+    under another layout format, or it was built at another table
+    version. bloom_lookup rebuilds and retries; metadata-only callers
+    must rebuild with build_bloom_index."""
 
 
 class StaleStatsIndexError(_StaleIndexError):
     """The column-stats index cannot serve the snapshot at hand: its
-    pointer is absent, the sidecar it names is missing, it was written
-    under another encoding format, or it was built at another table
-    version. stats_lookup rebuilds and retries; metadata-only callers
-    must rebuild with build_column_stats."""
+    pointer is absent, a sidecar part it lists is missing, it was
+    written under another encoding format, or it was built at another
+    table version. stats_lookup rebuilds and retries; metadata-only
+    callers must rebuild with build_column_stats."""
 
 
 # Bump with _stats_encode's canonical forms OR the sidecar layout
 # (v2 = dates as midnight ISO datetimes; v3 = parquet sidecar with
-# exact-string values replacing the inline-JSON payload). An index
+# exact-string values replacing the inline-JSON payload; v4 =
+# decimals as exact "num" values, where v3 compared their strings
+# lexicographically or failed the build). An index
 # written under an older format would pass the version check while
 # its stored strings no longer compare against freshly-encoded probe
 # bounds — the pointer check reads it as stale, never serving silent
 # false negatives.
-STATS_FORMAT = 3
+STATS_FORMAT = 4
 # The bloom pointer's layout stamp (v2 = parquet bitmap sidecar
 # replacing inline base64 payloads). A pre-sidecar pointer (no stamp,
 # no "sidecar" key) must read as STALE — the probe rebuilds instead of
@@ -2182,10 +2199,10 @@ def _index_pointer(
 ) -> dict:
     """The one pointer check, shared by the index build and the probes:
     the `kind` pointer on `col` is usable when it exists, names `col`,
-    records every `layout` field, and names a sidecar directory that
-    still exists; a probe also passes the snapshot `version` it
-    serves, which the index must have been built at. Anything else
-    raises the kind's stale error."""
+    records every `layout` field, and every sidecar part it lists
+    (_index_parts) still exists; a probe also passes the snapshot
+    `version` it serves, which the index must have been built at.
+    Anything else raises the kind's stale error."""
     stale = {"bloom": StaleBloomIndexError, "stats": StaleStatsIndexError}[kind]
     what = f"{kind} index on {col!r}"
     try:
@@ -2197,10 +2214,10 @@ def _index_pointer(
     off = sorted(k for k, v in want.items() if index.get(k) != v)
     if off:
         raise stale(f"{what} was written under another layout: {off}")
-    if "sidecar" not in index or not os.path.isdir(
-        os.path.join(path, index["sidecar"])
+    if "sidecar" not in index or not all(
+        os.path.isdir(os.path.join(path, p)) for p in _index_parts(index)
     ):
-        raise stale(f"{what} names a missing sidecar")
+        raise stale(f"{what} names a missing sidecar part")
     if version is not None and index.get("version") != version:
         raise stale(
             f"{what} built at v{index.get('version')}, table is at v{version}"
@@ -2269,95 +2286,165 @@ def _carry_rows(
     return sidecar_df.join(keep, "file", "left_semi")
 
 
+class _IndexSpec(NamedTuple):
+    """What one index kind contributes to _build_index at a snapshot:
+    the pointer fields the index is only valid under (`layout`), the
+    sidecar row schema (`schema`, keyed by `file`), a Spark frame of
+    the given data files' rows (`rows(relpaths)`, for bases) and a
+    writer of those rows into a new part directory
+    (`segment(relpaths, abs_dir)`, for segments)."""
+
+    layout: dict
+    schema: str
+    rows: Callable[[list], DataFrame]
+    segment: Callable[[list, str], None]
+
+
+def _write_index_part(out: DataFrame, abs_dir: str, n_files: int) -> None:
+    """One Spark-written sidecar part (see _index_shards)."""
+    out.repartition(_index_shards(max(1, n_files))).write.mode(
+        "overwrite"
+    ).parquet(abs_dir)
+
+
 def _build_index(
-    spark: SparkSession,
+    spark: SparkSession | None,
     path: str,
     m: dict,
     kind: str,
     col: str,
-    layout: dict,
-    schema: str,
-    rows,
-) -> dict:
-    """The build lifecycle both index kinds share, at snapshot `m`:
-    `rows(relpaths)` returns those data files' sidecar rows (`schema`,
-    keyed by `file`), and `layout` holds the pointer fields the index
-    is only valid under.
+    from_version: int | None = None,
+) -> dict | None:
+    """The build lifecycle both index kinds share, at snapshot `m`.
+    The pointer records {column, layout, version, sidecar, segments,
+    harvested_files, carried_files} — a POINTER, never a payload:
+    nothing data-proportional touches the driver or the JSON metadata.
+    Its parts (_index_parts: the `sidecar` base, then the `segments`)
+    hold exactly one row per non-empty data file of its version; a
+    file with zero rows gets no row in either kind and is never a
+    candidate. `harvested_files` counts the files this build indexed,
+    `carried_files` the rest.
 
     INCREMENTAL MAINTENANCE (the Delta/Iceberg write-time contract):
-    when the prior pointer passes the pointer check and its base
-    manifest is still resolvable, only files ADDED since that version
-    are indexed — surviving files' rows carry over from the prior
-    sidecar via a metadata-only filter/semi-join, removed files' rows
-    are dropped, and the union lands in a fresh immutable sidecar dir
-    (`_index/{kind}_{col}/v{N}-…`). An append of k files to a
-    10⁶-file table costs O(k) reads plus O(index rows) shuffle, not a
-    full-table rescan (VERDICT r11 finding a). Data files are
-    immutable (copy-on-write format), so a carried row can never be
-    stale. A fresh same-version index is returned as-is (sidecars are
-    immutable). The pointer records {column, layout, version, sidecar
-    relpath, harvested_files, carried_files} — a POINTER, never a
-    payload: nothing data-proportional touches the driver or the JSON
-    metadata. A file with zero rows gets no row in either kind and is
-    never a candidate."""
-    prior = _incremental_prior(path, kind, col, layout, m)
+    when the prior pointer passes the pointer check and its manifest
+    is still resolvable (_incremental_prior), only files ADDED since
+    that version are indexed. A snapshot that only added files gets
+    one new SEGMENT holding the added files' rows (for stats written
+    on the driver, no Spark job) and keeps every prior part. A
+    snapshot that removed files, or whose new segment would take the
+    index past CHECKPOINT_EVERY parts — the manifest chain's own
+    cadence — gets a FOLD: the prior parts' rows minus the removed files'
+    (_carry_rows) plus the added files' land in one fresh base. Data
+    files are immutable (copy-on-write format), so a carried row can
+    never be stale. Every part is a fresh immutable directory
+    (`_index/{kind}_{col}/v{N}-…`), so a fresh same-version index is
+    returned as-is. An append of k files to a 10⁶-file table costs
+    O(k) footer reads, not a full-table rescan (VERDICT r11 finding
+    a).
+
+    `from_version` is the publish hook's guard (_refresh_indexes):
+    refresh only a pointer built at exactly that version, and return
+    None, touching nothing, for any other."""
+    spec = _INDEX_SPECS[kind](spark, path, col, m)
+    prior = _incremental_prior(path, kind, col, spec.layout, m)
+    if from_version is not None and (
+        prior is None or prior[0]["version"] != from_version
+    ):
+        return None
     if prior is not None and prior[0]["version"] == m["version"]:
         return prior[0]
-    sidecar_rel = os.path.join(
-        "_index", f"{kind}_{col}", f"v{m['version']}-{uuid.uuid4().hex[:8]}"
-    )
+    abs_root = os.path.abspath(path)
+
+    def new_part() -> str:
+        return os.path.join(
+            "_index", f"{kind}_{col}", f"v{m['version']}-{uuid.uuid4().hex[:8]}"
+        )
+
+    def point(base: str, segments: list[str], scan: list[str]) -> dict:
+        index = {
+            _INDEX_KINDS[kind][1]: col,
+            **spec.layout,
+            "version": m["version"],
+            "sidecar": base,
+            "segments": segments,
+            "harvested_files": len(scan),
+            "carried_files": len(m["files"]) - len(scan),
+        }
+        _atomic_json(_pointer_path(path, kind, col), index)
+        return index
+
+    carry = None
     if prior is None:
         scan = list(m["files"])
-        out = rows(scan) if scan else None
     else:
-        prior_files = set(prior[1]["files"])
-        cur_set = set(m["files"])
-        scan = sorted(cur_set - prior_files)
-        carry = _carry_rows(
-            spark,
-            spark.read.schema(schema).parquet(
-                os.path.join(path, prior[0]["sidecar"])
-            ),
-            prior_files - cur_set,
-            m["files"],
-        )
-        out = carry.unionByName(rows(scan)) if scan else carry
-    if out is None:
-        out = spark.createDataFrame([], schema)
+        prior_files, cur = set(prior[1]["files"]), set(m["files"])
+        scan = sorted(cur - prior_files)
+        removed = prior_files - cur
+        parts = _index_parts(prior[0])
+        if not removed and (not scan or len(parts) < CHECKPOINT_EVERY):
+            segments = parts[1:]
+            if scan:
+                segments.append(new_part())
+                spec.segment(scan, os.path.join(abs_root, segments[-1]))
+            return point(parts[0], segments, scan)
+        if prior_files & cur:
+            carry = _carry_rows(
+                spark,
+                spark.read.schema(spec.schema).parquet(
+                    *[os.path.join(abs_root, p) for p in parts]
+                ),
+                removed,
+                m["files"],
+            )
+    if scan:
+        out = spec.rows(scan) if carry is None else carry.unionByName(spec.rows(scan))
     else:
-        out = out.repartition(_index_shards(max(1, len(m["files"]))))
-    out.write.mode("overwrite").parquet(
-        os.path.join(os.path.abspath(path), sidecar_rel)
-    )
-    index = {
-        _INDEX_KINDS[kind][1]: col,
-        **layout,
-        "version": m["version"],
-        "sidecar": sidecar_rel,
-        "harvested_files": len(scan),
-        "carried_files": len(m["files"]) - len(scan),
-    }
-    _atomic_json(_pointer_path(path, kind, col), index)
-    return index
+        out = carry if carry is not None else spark.createDataFrame([], spec.schema)
+    base = new_part()
+    _write_index_part(out, os.path.join(abs_root, base), len(m["files"]))
+    return point(base, [], scan)
 
 
-def build_bloom_index(spark: SparkSession, path: str, key_col: str) -> dict:
-    """ONE Spark job over the snapshot DELTA (incremental — see
-    _build_index): every file's distinct bloom bit positions (k salted
-    md5 hashes per key), aggregated and PACKED INTO AN 8 KiB BITMAP IN
-    THE EXECUTORS (Arrow-batched pandas UDF), then written as a
-    parquet SIDECAR TABLE (one row per data file: file relpath +
-    binary bitmap) that the pointer file `_BLOOM_{key}.json` names.
-    The build holds at 10⁵-10⁶ files where the previous
-    driver-collected-bitmap design (r10 VERDICT finding a) was
-    O(files) driver memory. The scan is column-pruned to the key;
-    index size is files × 8 KiB regardless of row count. A file with
-    zero rows (or an all-NULL key) gets no row and is correctly never
-    a candidate."""
+def _refresh_indexes(path: str, m: dict) -> None:
+    """The post-publish hook every commit runs (_publish_manifest):
+    each index pointer built at the version just before `m` is
+    refreshed to `m` — one segment of the added files' rows, or a fold
+    (_build_index). Any other pointer is left as it is, stale: a
+    pointer may lag the table after a lost race, but it never claims
+    a version whose added files it has not indexed. A refresh that
+    fails leaves its pointer stale too: the commit is already durable,
+    and the next lookup rebuilds. A table with no index pays one
+    directory listing."""
+    from pyspark.errors import PySparkRuntimeError
+
+    pointers = _pointer_files(path)
+    if not pointers or _has_external_refs(m):
+        return
+    try:
+        spark = SparkSession.active()
+    except PySparkRuntimeError:  # no session: stats segments need none
+        spark = None
+    for kind, col in pointers:
+        try:
+            _build_index(spark, path, m, kind, col, from_version=m["version"] - 1)
+        except Exception:  # noqa: BLE001 — commit durable; lookup rebuilds
+            logging.getLogger(__name__).warning(
+                "v%s of %s is published, but its %s index on %r could not "
+                "be refreshed and stays stale", m["version"], path, kind, col,
+                exc_info=True,
+            )
+
+
+def _bloom_spec(
+    spark: SparkSession | None, path: str, key_col: str, m: dict
+) -> _IndexSpec:
+    """The bloom kind of _build_index: every file's distinct bloom bit
+    positions (k salted md5 hashes per key), aggregated and PACKED
+    INTO AN 8 KiB BITMAP IN THE EXECUTORS (Arrow-batched pandas UDF),
+    one row per data file (file relpath + binary bitmap). Bases and
+    segments alike are one Spark job over the files they index."""
     from pyspark.sql import types as T
 
-    m = _manifest(path)
-    _refuse_external(m, "build_bloom_index")
     abs_root = os.path.abspath(path)
     # The bitmap hashes the key's STRING RENDER (cast to string), so
     # the index is only valid for the data type it was built under: a
@@ -2445,11 +2532,28 @@ def build_bloom_index(spark: SparkSession, path: str, key_col: str) -> dict:
             .mapInPandas(pack, _BLOOM_SIDECAR_SCHEMA)
         )
 
-    return _build_index(
-        spark, path, m, "bloom", key_col,
-        {"key_type": key_type, **_BLOOM_LAYOUT}, _BLOOM_SIDECAR_SCHEMA,
+    return _IndexSpec(
+        {"key_type": key_type, **_BLOOM_LAYOUT},
+        _BLOOM_SIDECAR_SCHEMA,
         bloom_rows,
+        lambda scan, abs_dir: _write_index_part(
+            bloom_rows(scan), abs_dir, len(scan)
+        ),
     )
+
+
+def build_bloom_index(spark: SparkSession, path: str, key_col: str) -> dict:
+    """Build or refresh the bloom index on `key_col` at the current
+    snapshot (_bloom_spec; incremental — see _build_index), named by
+    the pointer file `_BLOOM_{key}.json`. The build holds at 10⁵-10⁶
+    files where the previous driver-collected-bitmap design (r10
+    VERDICT finding a) was O(files) driver memory. The scan is
+    column-pruned to the key; index size is files × 8 KiB regardless
+    of row count. A file with zero rows (or an all-NULL key) gets no
+    row and is correctly never a candidate."""
+    m = _manifest(path)
+    _refuse_external(m, "build_bloom_index")
+    return _build_index(spark, path, m, "bloom", key_col)
 
 
 def bloom_candidate_files(
@@ -2462,16 +2566,16 @@ def bloom_candidate_files(
     """Metadata-only probe: relpaths whose bitmap has every bit set
     for AT LEAST ONE probed value (bloom guarantees no false
     negatives, so the pruned files provably contain no match). The
-    bit tests run DISTRIBUTED over the parquet sidecar (one Spark job;
-    vectorized over Arrow batches) and only the candidate NAMES come
-    back to the driver — the driver holds O(candidates) strings, never
-    O(files) bitmaps, which is the bound a planner needs anyway to
-    enumerate the scan.
+    bit tests run DISTRIBUTED over the parquet sidecar parts (one
+    Spark job; vectorized over Arrow batches) and only the candidate
+    NAMES come back to the driver — the driver holds O(candidates)
+    strings, never O(files) bitmaps (8 KiB each), which is the bound a
+    planner needs anyway to enumerate the scan.
 
     Validates the index against `manifest` when the caller passes the
     snapshot it already resolved (see _probe_pointer). Raises
     StaleBloomIndexError when the index is stale: its pointer is
-    absent, the sidecar it names is missing, it was written under
+    absent, a sidecar part it lists is missing, it was written under
     another layout format, or it was built at another version —
     serving it would miss rows committed since the build and may
     reference files purge/vacuum already removed. bloom_lookup
@@ -2489,7 +2593,9 @@ def _probe_bloom_sidecar(
     manifest: dict | None,
 ) -> list[str]:
     """The bloom bit test: files whose bitmap has every bit of AT
-    LEAST ONE probed position-tuple set."""
+    LEAST ONE probed position-tuple set. It runs over every sidecar
+    part in Arrow batches and only the candidate NAMES return to the
+    driver."""
     if not pos:
         return []
 
@@ -2498,33 +2604,14 @@ def _probe_bloom_sidecar(
             all(buf[p >> 3] & (1 << (p & 7)) for p in ps) for ps in pos
         )
 
-    return _sidecar_candidates(
-        spark, path, index, _BLOOM_SIDECAR_SCHEMA,
-        lambda pdf: pdf["bitmap"].map(hit), manifest,
-    )
-
-
-def _sidecar_candidates(
-    spark: SparkSession,
-    path: str,
-    index: dict,
-    schema: str,
-    match,
-    manifest: dict | None,
-) -> list[str]:
-    """The distributed probe core of both index kinds: `match(pdf)`
-    marks the sidecar rows (one per data file) that may hold a match.
-    It runs over the parquet sidecar in Arrow batches and only the
-    candidate NAMES return to the driver."""
-
     def probe(batches):
         for pdf in batches:
-            out = pdf.loc[match(pdf), ["file"]]
+            out = pdf.loc[pdf["bitmap"].map(hit), ["file"]]
             if len(out):
                 yield out
 
-    sidecar = spark.read.schema(schema).parquet(
-        os.path.join(path, index["sidecar"])
+    sidecar = spark.read.schema(_BLOOM_SIDECAR_SCHEMA).parquet(
+        *[os.path.join(path, p) for p in _index_parts(index)]
     )
     cand = sorted(
         r.file for r in sidecar.mapInPandas(probe, "file string").collect()
@@ -2663,8 +2750,10 @@ def _index_read(
 
 
 def _stats_encode(v):
-    """JSON-portable (kind, value) encoding of a footer statistic.
-    Numerics stay native; timestamps AND dates canonicalize to the one
+    """(kind, value) encoding of a footer statistic or a probe bound.
+    Numerics stay native — decimals included, as exact Decimal values
+    of the "num" kind, so they compare numerically with int, float and
+    Decimal bounds alike; timestamps AND dates canonicalize to the one
     fixed-width ISO datetime form (dates as midnight) so a date-typed
     file compared against a datetime probe bound can never produce a
     false negative — lexicographic order on the canonical form ==
@@ -2674,10 +2763,11 @@ def _stats_encode(v):
     non-UTC caller must convert bounds to UTC first. Bytes decode as
     UTF-8 strings (parquet string stats)."""
     import datetime as _dt
+    from decimal import Decimal
 
     if isinstance(v, bool):
         return ["num", int(v)]
-    if isinstance(v, (int, float)):
+    if isinstance(v, (int, float, Decimal)):
         return ["num", v]
     if isinstance(v, _dt.datetime):
         return ["ts", v.replace(tzinfo=None).isoformat(timespec="microseconds")]
@@ -2696,8 +2786,12 @@ def _stats_encode(v):
 def _footer_minmax(abs_file: str, col: str):
     """(lo, hi, ok) for one parquet footer — pure metadata, no data
     pages — or None for a file with no rows. ok=False (file lacks the
-    column, or any row group lacks min/max) means 'no usable stats':
-    the file must always be a candidate."""
+    column, or any row group lacks a readable min/max) means 'no
+    usable stats': the file must always be a candidate. A decimal
+    statistic is decoded exactly from its raw footer value and the
+    column's scale (pyarrow cannot extract one stored as INT32/INT64);
+    a statistic that cannot be read makes the file statless, never an
+    error."""
     import pyarrow.parquet as _pq
 
     md = _pq.ParquetFile(abs_file).metadata
@@ -2707,88 +2801,117 @@ def _footer_minmax(abs_file: str, col: str):
         (i for i in range(len(md.schema)) if md.schema.column(i).path == col),
         None,
     )
+    if idx is None:
+        return None, None, False
+    desc = md.schema.column(idx)
+    lt = desc.logical_type
+    scale = desc.scale if lt is not None and lt.type == "DECIMAL" else None
     lo = hi = None
-    ok = idx is not None
-    if ok:
+    try:
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(idx).statistics
             if st is None or not st.has_min_max:
-                ok = False
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    return lo, hi, ok
+                return None, None, False
+            if scale is None:
+                a, b = st.min, st.max
+            else:
+                a, b = (_decimal_stat(r, scale) for r in (st.min_raw, st.max_raw))
+            lo = a if lo is None else min(lo, a)
+            hi = b if hi is None else max(hi, b)
+    except Exception:  # noqa: BLE001 — unreadable statistic: statless
+        return None, None, False
+    return lo, hi, True
 
 
-# Values ride as EXACT strings: "num" kinds as repr(int)/repr(float)
-# (parsed back by _stats_decode_num — a double column would round
-# bigints above 2^53 and could prune a file that contains the probed
-# value, the false negative the contract forbids), "ts"/"str" kinds as
-# the canonical _stats_encode strings compared lexicographically.
+def _decimal_stat(raw, scale: int):
+    """A parquet decimal statistic's exact value: the unscaled integer
+    (native for INT32/INT64, big-endian two's complement bytes for
+    (FIXED_LEN_)BYTE_ARRAY) times 10^-scale."""
+    from decimal import Decimal
+
+    n = raw if isinstance(raw, int) else int.from_bytes(raw, "big", signed=True)
+    return Decimal(f"{n}e-{scale}")
+
+
+# Values ride as EXACT strings: "num" kinds as repr(int)/repr(float)/
+# repr(Decimal) (parsed back by _stats_decode_num — a double column
+# would round bigints above 2^53 and could prune a file that contains
+# the probed value, the false negative the contract forbids),
+# "ts"/"str" kinds as the canonical _stats_encode strings compared
+# lexicographically.
 _STATS_SIDECAR_SCHEMA = (
     "file string, has_stats boolean, kind string, "
     "min_val string, max_val string"
 )
+_STATS_COLS = ["file", "has_stats", "kind", "min_val", "max_val"]
+
+
+def _stats_arrow_schema():
+    """_STATS_SIDECAR_SCHEMA as a pyarrow schema."""
+    import pyarrow as pa
+
+    s = pa.string()
+    return pa.schema(
+        [("file", s), ("has_stats", pa.bool_()), ("kind", s),
+         ("min_val", s), ("max_val", s)]
+    )
 
 
 def _stats_decode_num(s: str):
-    """Exact inverse of repr() for the "num" kind: int when integral
-    (arbitrary precision), float otherwise (inf/nan included)."""
+    """Exact inverse of repr() for the "num" kind: Decimal for a
+    decimal, int when integral (arbitrary precision), float otherwise
+    (inf/nan included)."""
+    from decimal import Decimal
+
+    if s.startswith("Decimal("):
+        return Decimal(s[len("Decimal('") : -len("')")])
     try:
         return int(s)
     except ValueError:
         return float(s)
 
 
-def build_column_stats(spark: SparkSession, path: str, col: str) -> dict:
-    """Per-file [min, max] for `col`, harvested from parquet FOOTERS —
-    metadata only, no data pages read — as a DISTRIBUTED job: the
-    manifest's file list (incremental — see _build_index) fans out
-    over executors (mapInPandas), each task reads its files' footers
-    and emits one encoded stats row per file, written as a parquet
-    SIDECAR TABLE that the pointer file `_STATS_{col}.json` names:
-    driver cost is O(1), not one footer read per file — the previous
-    driver loop (r10 VERDICT finding a) stalled at 10⁵-10⁶ files.
-    This is the data-skipping index Delta/Iceberg collect at write
-    time: a range predicate then reads only files whose [min, max]
-    interval overlaps it, which on a column the table is clustered by
-    (repartitionByRange / Z-order) turns a full scan into a few-file
-    read. Complements the bloom index (equality probes): stats answer
-    RANGE probes bloom cannot.
+def _stats_row(rel: str, mm) -> tuple | None:
+    """The stats sidecar row (_STATS_COLS) of data file `rel` whose
+    footer gave `mm` (_footer_minmax), or None for a file with zero
+    rows."""
+    if mm is None:
+        return None
+    lo, hi, ok = mm
+    if not ok:
+        return rel, False, None, None, None
+    kind, vlo = _stats_encode(lo)
+    _kind, vhi = _stats_encode(hi)
+    enc = repr if kind == "num" else str
+    return rel, True, kind, enc(vlo), enc(vhi)
 
-    A file whose footer lacks min/max for the column (e.g. a file
-    predating a schema evolution) records has_stats=false and is
-    always a candidate — skipping must never create false negatives.
-    A file with zero rows gets no row, as in the bloom index, and is
-    never a candidate."""
-    import pandas as pd
 
-    m = _manifest(path)
-    _refuse_external(m, "build_column_stats")
+def _stats_spec(
+    spark: SparkSession | None, path: str, col: str, m: dict
+) -> _IndexSpec:
+    """The stats kind of _build_index: one footer-harvested [min, max]
+    row per data file. A base is harvested as a DISTRIBUTED job (the
+    file list fans out over executors, each task reading its files'
+    footers — driver cost O(1), where the previous driver loop, r10
+    VERDICT finding a, stalled at 10⁵-10⁶ files). A segment holds one
+    commit's added files, so the driver reads their footers itself and
+    writes the rows with pyarrow: no Spark job."""
     abs_root = os.path.abspath(path)
-    cols = ["file", "has_stats", "kind", "min_val", "max_val"]
+
+    def records(rels) -> list[tuple]:
+        rows = (
+            _stats_row(rel, _footer_minmax(os.path.join(abs_root, rel), col))
+            for rel in rels
+        )
+        return [r for r in rows if r is not None]
 
     def harvest(batches):
+        import pandas as pd
+
         for pdf in batches:
-            recs = []
-            for rel in pdf["file"]:
-                mm = _footer_minmax(os.path.join(abs_root, rel), col)
-                if mm is None:
-                    continue  # zero-row file
-                lo, hi, ok = mm
-                if ok:
-                    klo, vlo = _stats_encode(lo)
-                    _khi, vhi = _stats_encode(hi)
-                    num = klo == "num"
-                    recs.append((
-                        rel, True, klo,
-                        repr(vlo) if num else str(vlo),
-                        repr(vhi) if num else str(vhi),
-                    ))
-                else:
-                    recs.append((rel, False, None, None, None))
+            recs = records(pdf["file"])
             if recs:
-                yield pd.DataFrame(recs, columns=cols)
+                yield pd.DataFrame(recs, columns=_STATS_COLS)
 
     def stats_rows(scan_rel: list[str]) -> DataFrame:
         return (
@@ -2797,10 +2920,45 @@ def build_column_stats(spark: SparkSession, path: str, col: str) -> dict:
             .mapInPandas(harvest, _STATS_SIDECAR_SCHEMA)
         )
 
-    return _build_index(
-        spark, path, m, "stats", col, _STATS_LAYOUT, _STATS_SIDECAR_SCHEMA,
-        stats_rows,
-    )
+    def segment(scan_rel: list[str], abs_dir: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        recs = [dict(zip(_STATS_COLS, r)) for r in records(scan_rel)]
+        os.makedirs(abs_dir)
+        pq.write_table(
+            pa.Table.from_pylist(recs, schema=_stats_arrow_schema()),
+            os.path.join(abs_dir, "part-00000.parquet"),
+        )
+
+    return _IndexSpec(_STATS_LAYOUT, _STATS_SIDECAR_SCHEMA, stats_rows, segment)
+
+
+_INDEX_SPECS = {"bloom": _bloom_spec, "stats": _stats_spec}
+
+
+def build_column_stats(spark: SparkSession, path: str, col: str) -> dict:
+    """Build or refresh the min/max index on `col` at the current
+    snapshot: per-file [min, max] harvested from parquet FOOTERS —
+    metadata only, no data pages read (_stats_spec; incremental — see
+    _build_index) — named by the pointer file `_STATS_{col}.json`.
+    Every commit's publish already refreshes an existing index
+    (_refresh_indexes), so this builds an index for the first time, or
+    rebuilds one a lookup found stale. This is the data-skipping index
+    Delta/Iceberg collect at write time: a range predicate then reads
+    only files whose [min, max] interval overlaps it, which on a
+    column the table is clustered by (repartitionByRange / Z-order)
+    turns a full scan into a few-file read. Complements the bloom
+    index (equality probes): stats answer RANGE probes bloom cannot.
+
+    A file whose footer lacks min/max for the column (e.g. a file
+    predating a schema evolution) records has_stats=false and is
+    always a candidate — skipping must never create false negatives.
+    A file with zero rows gets no row, as in the bloom index, and is
+    never a candidate."""
+    m = _manifest(path)
+    _refuse_external(m, "build_column_stats")
+    return _build_index(spark, path, m, "stats", col)
 
 
 def stats_candidate_files(
@@ -2814,33 +2972,112 @@ def stats_candidate_files(
     """Metadata-only range probe: relpaths whose [min, max] interval
     overlaps [lo, hi] (None bound = unbounded), plus every file with
     no usable stats — pruned files provably contain no match. The
-    overlap tests run DISTRIBUTED over the parquet sidecar, applying
-    the SAME `_stats_overlaps` predicate the property suite pins
-    (tests/test_properties.py) to each row; only candidate NAMES
-    return to the driver. Validates against the caller's
-    already-resolved `manifest` when given (see _probe_pointer);
-    raises StaleStatsIndexError when the index is stale: its pointer
-    is absent, the sidecar it names is missing, it was written under
+    probe runs ON THE DRIVER with no Spark job: pyarrow reads the
+    sidecar parts (a few bytes of strings per data file) and
+    _stats_match applies the `_stats_overlaps` candidacy the property
+    suite pins (tests/test_properties.py), vectorized over the whole
+    sidecar. Validates against the caller's already-resolved
+    `manifest` when given (see _probe_pointer); raises
+    StaleStatsIndexError when the index is stale: its pointer is
+    absent, a sidecar part it lists is missing, it was written under
     another encoding format, or it was built at another version."""
     index = _probe_pointer(path, "stats", col, _STATS_LAYOUT, manifest)
+    t = _stats_sidecar(path, index)
+    keep = _stats_match(t, lo, hi)
+    cand = sorted(f for f, k in zip(t.column("file").to_pylist(), keep) if k)
+    return _drop_dead_candidates(cand, manifest)
 
-    def match(pdf) -> list[bool]:
-        keep = []
-        for r in pdf.itertuples(index=False):
-            mm = None
-            if r.has_stats:
-                if r.kind == "num":
-                    vmin = _stats_decode_num(r.min_val)
-                    vmax = _stats_decode_num(r.max_val)
-                else:
-                    vmin, vmax = r.min_val, r.max_val
-                mm = [[r.kind, vmin], [r.kind, vmax]]
-            keep.append(_stats_overlaps(mm, lo, hi))
-        return keep
 
-    return _sidecar_candidates(
-        spark, path, index, _STATS_SIDECAR_SCHEMA, match, manifest
+def _stats_sidecar(path: str, index: dict):
+    """Every row of a stats index's parts as one pyarrow table."""
+    import glob as _glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [
+        f
+        for p in _index_parts(index)
+        for f in sorted(_glob.glob(os.path.join(path, p, "*.parquet")))
+    ]
+    schema = _stats_arrow_schema()
+    return pa.concat_tables(
+        [schema.empty_table()]
+        + [pq.read_table(f, columns=_STATS_COLS).cast(schema) for f in files]
     )
+
+
+def _stats_match(t, lo, hi):
+    """`_stats_overlaps` over every row of a stats sidecar table `t`,
+    vectorized: a numpy bool per row, the same candidacy. Statless
+    rows are kept. Per kind, "ts"/"str" rows compare their canonical
+    strings in pyarrow; "num" rows compare as float64, and since
+    rounding to the nearest double is monotone, a strict float
+    inequality decides the exact one — only rows that tie a bound in
+    float64 are re-tested exactly. A probe bound of another kind falls
+    back to the per-row test."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    keep = ~t.column("has_stats").to_numpy(zero_copy_only=False).astype(bool)
+    kinds = t.column("kind")
+    q = [_stats_encode(b) if b is not None else None for b in (lo, hi)]
+    for k in pc.unique(kinds).drop_null().to_pylist():
+        rows = np.flatnonzero(
+            pc.fill_null(pc.equal(kinds, k), False).to_numpy(zero_copy_only=False)
+        )
+        sub = t.take(rows)
+        mn, mx = sub.column("min_val"), sub.column("max_val")
+
+        def exact(i: int) -> bool:
+            dec = _stats_decode_num if k == "num" else (lambda s: s)
+            return _stats_overlaps(
+                [[k, dec(mn[i].as_py())], [k, dec(mx[i].as_py())]], lo, hi
+            )
+
+        if any(b is not None and b[0] != k for b in q):
+            keep[rows] = [exact(i) for i in range(len(rows))]
+            continue
+        ok = np.ones(len(rows), bool)
+        qlo, qhi = (b[1] if b is not None else None for b in q)
+        if k != "num":
+            if qhi is not None:
+                ok &= pc.less_equal(mn, qhi).to_numpy(zero_copy_only=False)
+            if qlo is not None:
+                ok &= pc.greater_equal(mx, qlo).to_numpy(zero_copy_only=False)
+        else:
+            tie = np.zeros(len(rows), bool)
+            if qhi is not None:
+                fmin, h = _stats_floats(mn), _bound_float(qhi)
+                ok &= fmin <= h
+                tie |= fmin == h
+            if qlo is not None:
+                fmax, l_ = _stats_floats(mx), _bound_float(qlo)
+                ok &= fmax >= l_
+                tie |= fmax == l_
+            for i in np.flatnonzero(ok & tie):
+                ok[i] = exact(int(i))
+        keep[rows] = ok
+    return keep
+
+
+def _stats_floats(col):
+    """The "num" sidecar strings of `col` as the nearest float64s."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    plain = pc.replace_substring_regex(col, r"^Decimal\('(.*)'\)$", r"\1")
+    return pc.cast(plain, pa.float64()).to_numpy(zero_copy_only=False)
+
+
+def _bound_float(v) -> float:
+    """The nearest float64 to a numeric bound, ±inf past its range."""
+    import math
+
+    try:
+        return float(v)
+    except OverflowError:
+        return math.inf if v > 0 else -math.inf
 
 
 def _stats_overlaps(mm, lo, hi) -> bool:
@@ -2850,7 +3087,7 @@ def _stats_overlaps(mm, lo, hi) -> bool:
     Statless files are always candidates. The NO-FALSE-NEGATIVE
     contract (a pruned file provably contains no matching value,
     including across date/datetime kind mixing) is property-tested in
-    tests/test_properties.py."""
+    tests/test_properties.py, as is _stats_match's agreement with it."""
     if mm is None:
         return True
     qlo = _stats_encode(lo)[1] if lo is not None else None
@@ -3235,20 +3472,20 @@ def vacuum(
             if not dry_run:
                 os.remove(os.path.join(path, rel))
             removed.append(os.path.join(path, rel))
-    # index sidecars: every rebuild writes a fresh uuid'd dir and swaps
-    # the pointer JSON, orphaning the previous one — reclaim any
-    # sidecar dir no pointer references (same commit-concurrency
-    # caveat as data files: an in-flight build's sidecar is
-    # unreferenced until its pointer swap)
+    # index sidecars: every refresh writes fresh uuid'd part dirs and
+    # swaps the pointer JSON, and a fold orphans the previous base and
+    # segments — reclaim any part dir no pointer lists (its base AND
+    # every segment; same commit-concurrency caveat as data files: an
+    # in-flight build's part is unreferenced until its pointer swap)
     import shutil as _shutil
 
     active = set()
-    for pj in _pointer_files(path):
+    for kind, col in _pointer_files(path):
         try:
-            with open(pj) as fh:
-                sc = json.load(fh).get("sidecar")
-            if sc:
-                active.add(os.path.normpath(sc))
+            with open(_pointer_path(path, kind, col)) as fh:
+                index = json.load(fh)
+            if "sidecar" in index:
+                active.update(os.path.normpath(p) for p in _index_parts(index))
         except (OSError, json.JSONDecodeError):
             continue
     def _in_grace(abs_dir: str) -> bool:
@@ -3620,13 +3857,13 @@ def append_version_clustered(
     model artifact riding in meta — the IVF-PQ index's
     centroids/codebooks — survives appends).
 
-    `stats_cols` / `bloom_cols` request write-time index maintenance —
-    THE path where the incremental build earns its keep: the refresh
-    harvests only this append's files (O(appended), see
-    build_column_stats) instead of the stale-rebuild full-table pass a
-    later lookup would otherwise pay. Same post-publish failure
-    contract as commit_version (IndexMaintenanceError, commit already
-    durable).
+    `stats_cols` / `bloom_cols` create a missing index, as in
+    commit_version. An existing one is refreshed by the publish
+    itself: the append's files become one sidecar SEGMENT of the
+    index (O(appended) footer reads, see _build_index) instead of the
+    stale-rebuild full-table pass a later lookup would otherwise pay.
+    Same post-publish failure contract as commit_version
+    (IndexMaintenanceError, commit already durable).
 
     CONCURRENT-APPEND CONFLICT RESOLUTION (Delta's commutative-commit
     logic): blind appends commute — losing the version race does NOT
@@ -3960,9 +4197,14 @@ def _publish_manifest(
     per-attempt unique dirs. On a real object store the lock's job is
     done by conditional-put on the pointer object; same protocol,
     different primitive — the primitive is PLUGGABLE via
-    set_pointer_cas (LocalPointerCAS below is the flock default)."""
+    set_pointer_cas (LocalPointerCAS below is the flock default).
+
+    After the swap, OUTSIDE the lock, the publish refreshes every
+    file-skipping index the table has (_refresh_indexes), so no commit
+    path leaves an index stale for the next lookup to rebuild."""
     with _POINTER_CAS.publish_lock(path):
         _publish_manifest_locked(path, v, manifest, expected_current, prev)
+    _refresh_indexes(path, manifest)
 
 
 class LocalPointerCAS:

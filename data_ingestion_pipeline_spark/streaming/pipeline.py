@@ -1506,10 +1506,11 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
        reference — manifest delta bytes + new-rows write, never a
        table rewrite. The batch_id meta gives replay skips
        (exactly-once) exactly as the upsert twin.
-    3. INCREMENTAL INDEX MAINTENANCE: build_bloom_index after the
-       commit harvests ONLY the batch's new files (prior sidecar rows
-       carry — operators/versioned.py), so step 1 stays fresh at
-       O(batch) forever.
+    3. INCREMENTAL INDEX MAINTENANCE: the first batch that commits
+       files builds the bloom index; from then on each commit's
+       publish refreshes it with a segment of ONLY the batch's new
+       files (operators/versioned.py, _refresh_indexes), so step 1
+       finds it fresh at O(batch) forever.
 
     Drained result must equal the batch first-wins dedup of the
     duplicated feed (duplicates are verbatim copies, so first-wins ==
@@ -1544,16 +1545,10 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
                 # bit-pair aggregation dedupes anyway, so routing it
                 # around dropDuplicates saves that exchange in the
                 # per-batch probe plan (pure fixed overhead at toy SF)
-                keys_df = bdf.select("event_id")
-                try:
-                    cand = V.bloom_candidate_files_df(
-                        spark, table, "event_id", keys_df, manifest=m
-                    )
-                except V.StaleBloomIndexError:
-                    V.build_bloom_index(spark, table, "event_id")
-                    cand = V.bloom_candidate_files_df(
-                        spark, table, "event_id", keys_df, manifest=m
-                    )
+                cand = V.bloom_candidate_files_df(
+                    spark, table, "event_id", bdf.select("event_id"),
+                    manifest=m,
+                )
                 if cand is None:
                     cand = carried  # probe saturated: scan everything
                 if cand:
@@ -1571,8 +1566,10 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             spark, table, batch, ts_col="ts", carried=carried,
             meta={"batch_id": batch_id}, dv=prior_dv,
         )
-        # incremental: harvests only this batch's files
-        V.build_bloom_index(spark, table, "event_id")
+        if not carried:
+            # the first batch with files creates the index; every
+            # later commit's publish appends its files to it
+            V.build_bloom_index(spark, table, "event_id")
 
     with _stream_shuffle(spark):
         query = (

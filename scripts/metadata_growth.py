@@ -8,12 +8,14 @@ table format itself — "the sidecar/delta-log structure holds at
 
   stats_full      build_column_stats from scratch   (alpha ≈ 1: one
                   footer read per file, distributed)
-  stats_incr      the SAME build after appending K_APPEND files to the
-                  indexed snapshot (alpha ≈ 0: harvest touches only
-                  the appended files; the carried rows move through
-                  one small Spark job whose cost is the sidecar read)
+  stats_incr      append_version_clustered of K_APPEND rows to the
+                  indexed snapshot: its publish refreshes the index
+                  with one segment of the appended files' footer rows,
+                  read and written on the driver (alpha ≈ 0: the work
+                  is O(K_APPEND), and no prior row is re-read)
   stats_probe     stats_candidate_files range probe  (alpha ≈ 1 upper
-                  bound: a distributed scan of the sidecar)
+                  bound: a driver-side pyarrow read of the sidecar
+                  parts and a vectorized overlap test)
   resolve_chain   _resolve_chain driver-side manifest materialization
                   (alpha ≈ 1: the checkpoint parquet read is O(files))
 
@@ -95,11 +97,10 @@ def main() -> None:
 
     # warmup: JVM boot + python workers off the first measured point
     w = ensure_table(spark, SIZES[0])
-    for f in ("_STATS_event_id.json",):
-        try:
-            os.remove(os.path.join(w, f))
-        except FileNotFoundError:
-            pass
+    try:
+        os.remove(versioned._pointer_path(w, "stats", "event_id"))
+    except FileNotFoundError:
+        pass
     versioned.build_column_stats(spark, w, "event_id")
 
     metrics: dict[str, list[float]] = {
@@ -116,8 +117,9 @@ def main() -> None:
         if versioned.current_version(path) != 1:
             shutil.rmtree(path, ignore_errors=True)
             path = ensure_table(spark, n)
+        pointer = versioned._pointer_path(path, "stats", "event_id")
         try:
-            os.remove(os.path.join(path, "_STATS_event_id.json"))
+            os.remove(pointer)
         except FileNotFoundError:
             pass
 
@@ -131,10 +133,13 @@ def main() -> None:
             F.lit(0.0).alias("value"),
             F.lit("x").alias("pcol"),
         )
-        versioned.append_version_clustered(spark, path, extra, "pcol")
+        # the refresh runs inside the append's publish
         t0 = time.perf_counter()
-        idx = versioned.build_column_stats(spark, path, "event_id")
+        versioned.append_version_clustered(spark, path, extra, "pcol")
         metrics["stats_incr"].append(round(time.perf_counter() - t0, 2))
+        with open(pointer) as fh:
+            idx = json.load(fh)
+        assert idx["version"] == versioned.current_version(path)
         assert idx["harvested_files"] <= K_APPEND + 2  # appended files only
         assert idx["carried_files"] == n
 

@@ -197,6 +197,90 @@ def test_stats_skipping_no_false_negatives_strings(values, bounds):
     _no_false_negative(values, bounds)
 
 
+_dec = st.decimals(
+    min_value=-(10**12), max_value=10**12, places=2,
+    allow_nan=False, allow_infinity=False,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    values=st.lists(_dec, min_size=1, max_size=20),
+    bounds=st.tuples(st.none() | _dec | _num, st.none() | _dec | _num),
+)
+def test_stats_skipping_no_false_negatives_decimal(values, bounds):
+    """Decimal stats are "num" values: they compare numerically with
+    decimal, int and float probe bounds (as strings, "10.00" < "5")."""
+    _no_false_negative(values, bounds)
+
+
+# The driver probe (_stats_match) must keep exactly the files the
+# per-row predicate keeps. "num" universes mix ints, floats and
+# decimals, with values packed around 2^53 so float64 ties are common
+# — the rows the vectorized path must re-test exactly. NaN gets a
+# float-only universe: Decimal refuses to order against it.
+_wide_num = st.one_of(
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    st.integers(min_value=2**53 - 4, max_value=2**53 + 4),
+    st.floats(width=64, allow_nan=False),
+    st.decimals(
+        min_value=-(10**20), max_value=10**20, places=3,
+        allow_nan=False, allow_infinity=False,
+    ),
+    st.decimals(
+        min_value=2**53 - 4, max_value=2**53 + 4, places=1,
+        allow_nan=False, allow_infinity=False,
+    ),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    case=st.sampled_from([_wide_num, st.floats(), _temporal, _strs]).flatmap(
+        lambda u: st.tuples(
+            st.lists(
+                st.none() | st.lists(u, min_size=1, max_size=4),
+                max_size=12,
+            ),
+            st.tuples(st.none() | u, st.none() | u),
+        )
+    )
+)
+def test_stats_driver_probe_matches_per_row_candidacy(case):
+    """Vectorized candidacy over a sidecar table == _stats_overlaps on
+    every row (None file = statless), for every kind: never a file
+    pruned that the per-row test keeps, nor one kept that it prunes."""
+    import pyarrow as pa
+
+    from data_ingestion_pipeline_spark.operators.versioned import (
+        _STATS_COLS,
+        _stats_arrow_schema,
+        _stats_match,
+        _stats_row,
+    )
+
+    files, (lo, hi) = case
+
+    def mm(vs):
+        if vs is None:
+            return None, None, False
+        return min(vs, key=_coerce), max(vs, key=_coerce), True
+
+    rows = [_stats_row(f"f{i}", mm(vs)) for i, vs in enumerate(files)]
+    t = pa.Table.from_pylist(
+        [dict(zip(_STATS_COLS, r)) for r in rows], schema=_stats_arrow_schema()
+    )
+    want = [
+        _stats_overlaps(
+            None if vs is None
+            else [_stats_encode(mm(vs)[0]), _stats_encode(mm(vs)[1])],
+            lo, hi,
+        )
+        for vs in files
+    ]
+    assert _stats_match(t, lo, hi).tolist() == want, (files, lo, hi)
+
+
 # ---- manifest delta-log: encode/resolve round-trip ------------------
 # _publish_manifest needs no SparkSession: the delta-vs-checkpoint
 # choice and the chain resolution are pure JSON-on-filesystem logic,

@@ -912,10 +912,15 @@ def test_purge_preserves_per_file_original_schema(spark, tmp_path):
 
 
 def test_bloom_index_stale_after_commit(spark, tmp_path):
-    """A commit after the index build makes the index a wrong answer
-    (missing new rows / referencing purged files): the metadata probe
-    must refuse to serve it, and bloom_lookup must transparently
-    rebuild and serve current data."""
+    """A pointer the table has moved past (here: left behind at v1, as
+    a lost refresh race leaves it) is a wrong answer (missing new rows
+    / referencing purged files): the metadata probe must refuse to
+    serve it, a later commit's publish must leave it where it is
+    rather than claim files it never indexed, and bloom_lookup must
+    transparently rebuild and serve current data. A commit's own
+    publish keeps a current pointer current."""
+    import json as _json
+
     import pytest
 
     path = str(tmp_path / "tbl")
@@ -924,8 +929,20 @@ def test_bloom_index_stale_after_commit(spark, tmp_path):
     versioned.commit_version(spark, path, df.repartition(4))
     versioned.build_bloom_index(spark, path, "k")
     assert versioned.bloom_candidate_files(spark, path, "k", [7])  # fresh: serves
+    pj = os.path.join(path, "_BLOOM_k.json")
+    with open(pj) as fh:
+        at_v1 = _json.load(fh)
     versioned.upsert_version(spark, path,
         spark.createDataFrame([(99, "new")], "k int, v string"), ["k"])
+    assert versioned.bloom_candidate_files(spark, path, "k", [99])  # refreshed
+    with open(pj, "w") as fh:
+        _json.dump(at_v1, fh)  # the pointer lags the table
+    with pytest.raises(versioned.StaleBloomIndexError):
+        versioned.bloom_candidate_files(spark, path, "k", [7])
+    versioned.upsert_version(spark, path,
+        spark.createDataFrame([(98, "newer")], "k int, v string"), ["k"])
+    with open(pj) as fh:
+        assert _json.load(fh)["version"] == 1  # not advanced by the hook
     with pytest.raises(versioned.StaleBloomIndexError):
         versioned.bloom_candidate_files(spark, path, "k", [7])
     got = versioned.bloom_lookup(spark, path, "k", [99])  # rebuilds
@@ -1081,9 +1098,10 @@ def test_stats_index_prunes_files_and_serves_ranges(spark, tmp_path):
     probe's candidate set (and the scan's inputFiles) is a strict
     subset of the snapshot, (b) results equal the plain filtered scan
     for int AND timestamp probes, (c) a file without usable stats is
-    always a candidate (no false negatives), and (d) a commit after
-    the build makes metadata-only probes raise stale while
-    stats_lookup rebuilds transparently."""
+    always a candidate (no false negatives), and (d) a commit's
+    publish refreshes the index, while a pointer the table has moved
+    past makes metadata-only probes raise stale and stats_lookup
+    rebuilds transparently."""
     import datetime
     import json as _json
 
@@ -1147,10 +1165,16 @@ def test_stats_index_prunes_files_and_serves_ranges(spark, tmp_path):
         spark, path, "event_id", 100, 200
     )
 
-    # (d) staleness: new commit → metadata probe raises, lookup rebuilds
+    # (d) staleness: a new commit refreshes the index; a pointer left
+    # at the old version → metadata probe raises, lookup rebuilds
+    with open(sp) as fh:
+        at_v1 = fh.read()
     versioned.upsert_version(
         spark, path, ev.limit(5).withColumn("value", F.lit(0.0)), ["event_id"]
     )
+    assert versioned.stats_candidate_files(spark, path, "event_id", 100, 200)
+    with open(sp, "w") as fh:
+        fh.write(at_v1)
     with _pytest.raises(versioned.StaleStatsIndexError):
         versioned.stats_candidate_files(spark, path, "event_id", 100, 200)
     relookup = versioned.stats_lookup(spark, path, "event_id", 100, 200)
@@ -3922,14 +3946,20 @@ def test_rename_migrates_index_pointer_for_incremental_refresh(
     assert candidates(probe[0])
 
 
-@pytest.mark.parametrize("kind", ["bloom", "stats"])
+@pytest.mark.parametrize(
+    "kind,part",
+    [("bloom", "sidecar"), ("stats", "sidecar"),
+     ("bloom", "segment"), ("stats", "segment")],
+    ids=["bloom", "stats", "bloom-segment", "stats-segment"],
+)
 def test_missing_sidecar_reads_as_stale_and_lookup_rebuilds(
-    spark, tmp_path, kind
+    spark, tmp_path, kind, part
 ):
-    """A pointer whose sidecar directory is gone is stale, like an
-    absent pointer: the metadata probe raises the kind's stale error
-    (not a raw PATH_NOT_FOUND on every call) and the lookup rebuilds
-    the index and serves the right row."""
+    """A pointer whose sidecar base or any segment directory is gone
+    is stale, like an absent pointer: the metadata probe raises the
+    kind's stale error (not a raw PATH_NOT_FOUND on every call, and
+    never silently skipping the part) and the lookup rebuilds the
+    index and serves the right row."""
     import shutil
 
     path = str(tmp_path / "ms")
@@ -3949,10 +3979,23 @@ def test_missing_sidecar_reads_as_stale_and_lookup_rebuilds(
     df = spark.createDataFrame(
         [(i, f"r{i}") for i in range(40)], "k int, v string"
     )
-    versioned.commit_version(spark, path, df.repartition(4))
-    assert len(versioned._manifest(path)["files"]) == 4
-    idx = build(spark, path, "k")
-    shutil.rmtree(os.path.join(path, idx["sidecar"]))
+    if part == "sidecar":
+        versioned.commit_version(spark, path, df.repartition(4))
+        assert len(versioned._manifest(path)["files"]) == 4
+        idx = build(spark, path, "k")
+        shutil.rmtree(os.path.join(path, idx["sidecar"]))
+    else:
+        # the one row the probes look for lives in the segment only
+        versioned.commit_version(
+            spark, path, df.filter("k != 7").repartition(4)
+        )
+        build(spark, path, "k")
+        versioned.append_version_clustered(
+            spark, path, df.filter("k = 7").coalesce(1), None
+        )
+        idx = build(spark, path, "k")
+        assert len(idx["segments"]) == 1
+        shutil.rmtree(os.path.join(path, idx["segments"][0]))
     with pytest.raises(stale):
         candidates()
     assert [r.v for r in lookup().collect()] == ["r7"]
@@ -4440,3 +4483,242 @@ def test_two_process_identity_reservation_race(spark, tmp_path):
     ids = sorted(r.rid for r in rows)
     assert ids == list(range(100))  # unique AND dense: no clash, no gap
     assert versioned.identity_high_water(path, "rid") == 100
+
+
+def test_decimal_stats_index_is_exact(spark, tmp_path):
+    """The min/max index on a decimal column: Spark stores
+    decimal(10,2) as INT64 (pyarrow cannot extract that statistic) and
+    decimal(20,2) as FIXED_LEN_BYTE_ARRAY (pyarrow returns Decimal).
+    Both are decoded exactly and compare as numbers — not as strings,
+    where "10.00" < "5" would prune both files."""
+    from decimal import Decimal
+
+    for width in (10, 20):
+        path = str(tmp_path / f"dec{width}")
+        os.makedirs(path)
+        df = spark.createDataFrame(
+            [(1, Decimal("9.50")), (2, Decimal("10.00"))],
+            f"k int, d decimal({width},2)",
+        )
+        versioned.commit_version(
+            spark, path, df.repartition(2, "k"), stats_cols=["d"]
+        )
+        full = versioned.read_version(spark, path)
+        for lo, hi in (
+            (Decimal("5"), Decimal("20")),
+            (Decimal("9.75"), None),
+            (None, Decimal("9.50")),
+            (5, 9.6),
+            (Decimal("10.01"), None),
+        ):
+            got = versioned.stats_lookup(spark, path, "d", lo, hi)
+            want = full
+            if lo is not None:
+                want = want.filter(F.col("d") >= F.lit(lo))
+            if hi is not None:
+                want = want.filter(F.col("d") <= F.lit(hi))
+            assert sorted(r.k for r in got.collect()) == sorted(
+                r.k for r in want.collect()
+            ), (width, lo, hi)
+        # exact bounds prune: each file holds one value
+        assert len(versioned.stats_candidate_files(
+            spark, path, "d", Decimal("9.75"), None
+        )) == 1
+
+
+def _check_indexes_current(spark, path, op):
+    """Both indexes on event_id sit at the table's version with no
+    explicit build, and their lookups equal the filtered snapshot."""
+    import json as _json
+
+    cur = versioned.current_version(path)
+    for pj in ("_STATS_event_id.json", "_BLOOM_event_id.json"):
+        with open(os.path.join(path, pj)) as fh:
+            assert _json.load(fh)["version"] == cur, (op, pj)
+    snap = versioned.read_version(spark, path)
+    got = versioned.stats_lookup(spark, path, "event_id", 100, 400)
+    want = snap.filter(F.col("event_id").between(100, 400))
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    ), op
+    ids = [7, 123, 555, 901, 10_001]
+    got = versioned.bloom_lookup(spark, path, "event_id", ids)
+    want = snap.filter(F.col("event_id").isin(ids))
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    ), op
+
+
+def test_every_commit_path_refreshes_indexes(spark, tmp_path):
+    """The publish hook keeps both index kinds current through every
+    commit path: after each commit the pointers sit at the new
+    version without an explicit build, and stats/bloom lookups equal
+    the filtered snapshot."""
+    import json as _json
+
+    ev = _events(spark)
+    path = str(tmp_path / "mor")
+    os.makedirs(path)
+    versioned.commit_version(
+        spark, path, ev.filter(F.col("event_id") < 600).repartitionByRange(
+            4, "event_id"
+        ),
+        stats_cols=["event_id"], bloom_cols=["event_id"],
+    )
+    src = ev.filter(F.col("event_id").between(550, 650)).withColumn(
+        "value", F.col("value") + 1.0
+    )
+    ops = [
+        ("compact_files", lambda: versioned.compact_files(spark, path)),
+        ("merge_into_mor", lambda: versioned.merge_into_mor(
+            spark, path, src, ["event_id"],
+            when_matched=[("update", {"value": "s.value"}, None)],
+            insert_not_matched=True, prune_on="event_id")),
+        ("delete_rows_dv", lambda: versioned.delete_rows_dv(
+            spark, path, F.col("event_id") % 7 == 0)),
+        ("update_rows_mor", lambda: versioned.update_rows_mor(
+            spark, path, "event_id < 200", {"value": "value * 2"})),
+        ("append_version_clustered", lambda: versioned.append_version_clustered(
+            spark, path, ev.filter(F.col("event_id") >= 900).repartition(2), None)),
+        ("evolve_schema", lambda: versioned.evolve_schema(
+            spark, path, [("note", "string")])),
+    ]
+    for op, run in ops:
+        before = versioned.current_version(path)
+        run()
+        assert versioned.current_version(path) == before + 1, op
+        _check_indexes_current(spark, path, op)
+        if op == "compact_files":
+            # a commit that removed files folds: one fresh base
+            with open(os.path.join(path, "_STATS_event_id.json")) as fh:
+                assert _json.load(fh)["segments"] == []
+
+    cow = str(tmp_path / "cow")
+    os.makedirs(cow)
+    versioned.commit_version_partitioned(spark, cow, ev)
+    versioned.build_column_stats(spark, cow, "event_id")
+    versioned.build_bloom_index(spark, cow, "event_id")
+    day2 = ev.filter(F.dayofmonth("ts") == 2)
+    versioned.merge_into_cow(
+        spark, cow, day2.withColumn("value", F.col("value") + 5.0),
+        ["event_id"], when_matched=[("update", {"value": "s.value"}, None)],
+    )
+    _check_indexes_current(spark, cow, "merge_into_cow")
+
+
+def test_stats_refresh_and_probe_run_no_spark_job(spark, tmp_path):
+    """A one-file commit refreshes the min/max index with a segment
+    read and written on the driver, and the probe that follows reads
+    the sidecar parts on the driver: zero Spark jobs for both."""
+    import json as _json
+    import time as _time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nojob")
+    os.makedirs(path)
+    versioned.commit_version(
+        spark, path,
+        spark.range(100).selectExpr("id as k", "cast(id as string) as v")
+        .repartitionByRange(2, "k"),
+        stats_cols=["k"],
+    )
+    m = versioned._manifest(path)
+    rel = os.path.join("data", "v2-onefile", "part-00000.parquet")
+    os.makedirs(os.path.join(path, os.path.dirname(rel)))
+    pq.write_table(
+        pa.table({"k": pa.array([500], pa.int64()), "v": ["500"]}),
+        os.path.join(path, rel),
+    )
+    sc = spark.sparkContext
+    group = "stats-refresh-no-job"
+    sc.setJobGroup(group, "one-file commit + stats probe")
+    try:
+        versioned._publish_manifest(
+            path, 2,
+            {**m, "version": 2, "files": sorted(m["files"] + [rel]),
+             "committed_at": _time.time()},
+            None, prev=m,
+        )
+        cand = versioned.stats_candidate_files(spark, path, "k", 450, 550)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert cand == [rel]
+    with open(os.path.join(path, "_STATS_k.json")) as fh:
+        idx = _json.load(fh)
+    assert idx["version"] == 2 and len(idx["segments"]) == 1
+    assert idx["harvested_files"] == 1 and idx["carried_files"] == 2
+    assert [r.k for r in versioned.stats_lookup(spark, path, "k", 450, 550)
+            .collect()] == [500]
+
+
+def test_segments_fold_at_checkpoint_cadence(spark, tmp_path, monkeypatch):
+    """Append-only commits grow the index by one segment each until
+    the pointer lists CHECKPOINT_EVERY parts; the next refresh folds
+    every part into one base, and the lookup stays exact throughout."""
+    import json as _json
+
+    monkeypatch.setattr(versioned, "CHECKPOINT_EVERY", 3)
+    path = str(tmp_path / "fold")
+    os.makedirs(path)
+    schema = "k bigint, v string"
+    versioned.commit_version(
+        spark, path, spark.createDataFrame([(0, "a")], schema),
+        stats_cols=["k"],
+    )
+    seen = []
+    for i in range(1, 5):
+        versioned.append_version_clustered(
+            spark, path,
+            spark.createDataFrame([(i * 10, "b")], schema).coalesce(1), None,
+        )
+        with open(os.path.join(path, "_STATS_k.json")) as fh:
+            idx = _json.load(fh)
+        assert idx["version"] == versioned.current_version(path)
+        seen.append(len(idx["segments"]))
+        got = versioned.stats_lookup(spark, path, "k", i * 10, i * 10)
+        assert [r.k for r in got.collect()] == [i * 10]
+    assert seen == [1, 2, 0, 1]
+
+
+def test_vacuum_keeps_every_index_part(spark, tmp_path):
+    """Three refreshes leave each pointer listing a base plus three
+    segments: vacuum must keep all of them, and lookups after it
+    return the same rows as before."""
+    import json as _json
+
+    path = str(tmp_path / "vac")
+    os.makedirs(path)
+    ev = _events(spark)
+    versioned.commit_version(
+        spark, path, ev.filter(F.col("event_id") < 500).repartition(2),
+        stats_cols=["event_id"], bloom_cols=["event_id"],
+    )
+    for lo in (500, 700, 900):
+        versioned.append_version_clustered(
+            spark, path,
+            ev.filter(F.col("event_id").between(lo, lo + 199)).coalesce(1),
+            None,
+        )
+
+    def lookups():
+        return (
+            sorted(map(tuple, versioned.stats_lookup(
+                spark, path, "event_id", 450, 950).collect())),
+            sorted(map(tuple, versioned.bloom_lookup(
+                spark, path, "event_id", [7, 555, 777, 901]).collect())),
+        )
+
+    before = lookups()
+    versioned.vacuum(path, keep_from=versioned.current_version(path))
+    for pj in ("_STATS_event_id.json", "_BLOOM_event_id.json"):
+        with open(os.path.join(path, pj)) as fh:
+            idx = _json.load(fh)
+        assert len(idx["segments"]) == 3
+        for part in versioned._index_parts(idx):
+            assert os.path.isdir(os.path.join(path, part)), part
+    assert lookups() == before
+    assert before[0] and before[1]
