@@ -56,6 +56,10 @@ from data_ingestion_pipeline_spark.sources.tables import load_table
 
 POINTER = "_CURRENT"
 
+# the directory column of a day-partitioned table (derived from its
+# ts_col by with_partition_col at write time, never in its schema)
+PART_COL = "p_date"
+
 # Full-manifest cadence: every CHECKPOINT_EVERY-th version is written
 # as a CHECKPOINT (complete file list); versions between are DELTAS
 # ({base, add, remove, partitions_add} against the previous version).
@@ -64,10 +68,13 @@ POINTER = "_CURRENT"
 # entire file list on EVERY commit — ~100 MB of JSON per commit at a
 # 10⁶-file table — whereas a delta commit writes O(changed files)
 # bytes and a reader resolves at most CHECKPOINT_EVERY-1 deltas on top
-# of one checkpoint. Scalar fields (version/schema/meta/committed_at/
-# partition_col/project_schema) stay inline in every manifest, so
-# meta/committed_at probes (manifest_meta, read_as_of) never resolve
-# the chain.
+# of one checkpoint. Every non-file key stays inline in every
+# manifest, so meta/committed_at probes (manifest_meta, read_as_of)
+# never resolve the chain. Those keys come from ONE function,
+# _next_manifest: a commit's manifest is the snapshot it follows
+# plus its change, so the layout keys (partition_col, ts_col) and
+# project_schema/renames/dv carry forward unless the commit itself
+# overrides them.
 CHECKPOINT_EVERY = 10
 
 # Checkpoints of tables past this file count externalize their file
@@ -209,6 +216,76 @@ def _encode_manifest(path: str, manifest: dict, prev: dict | None = None) -> dic
         # partitioned → unpartitioned shape change: checkpoint
         return _checkpoint_form(path, manifest)
     return delta
+
+
+def _layout_col(m: dict) -> str | None:
+    """How the table is laid out — the one predicate every reader
+    asks: the directory column its files are partitioned by. PART_COL
+    for a day-partitioned table (no `partition_col` key; the layout
+    derives from `ts_col`), `partition_col` for a clustered one, None
+    for an unpartitioned table, which has neither `partitions` nor
+    `partition_col`. The legacy `partition_col: null` shape (appends
+    with no layout column once wrote it) reads as unpartitioned."""
+    if "partition_col" in m:
+        return m["partition_col"]
+    return PART_COL if "partitions" in m else None
+
+
+# what a commit inherits from the snapshot it follows unless it
+# overrides the key (the layout itself is carried by _layout_col)
+_CARRIED_KEYS = ("schema", "ts_col", "project_schema", "renames", "dv")
+
+
+def _next_manifest(
+    prev: dict | None,
+    v: int,
+    kept: list[str],
+    added: dict[str, str | None] | None = None,
+    *,
+    meta: dict | None = None,
+    merge_meta: bool = False,
+    **override,
+) -> dict:
+    """Build every manifest a commit publishes: version `v` is `prev`
+    (the snapshot the commit follows; None for a fresh commit) plus
+    the commit's change — `kept` (prev files carried by reference,
+    with prev's partition tags) and `added` (new relpath → partition
+    tag).
+
+    The carry policy lives here and nowhere else. The layout is
+    prev's (_layout_col) unless the commit passes `partition_col`
+    (PART_COL = day-partitioned, None = unpartitioned); a fresh commit
+    has none unless it passes one. schema, ts_col (day layout only),
+    project_schema, renames and dv carry from prev; an `override`
+    replaces one, and an override of None drops it. The meta is the
+    commit's own, on top of prev's when `merge_meta` (appends and
+    compaction keep a model or batch id riding in meta). Carrying from
+    the writer's own prev is sound: every writer plans v =
+    prev.version + 1, and the publish's monotonicity guard aborts if
+    any commit landed in between."""
+    layout = override.pop("partition_col", _layout_col(prev) if prev else None)
+    m = {k: prev[k] for k in _CARRIED_KEYS if prev and prev.get(k)}
+    m.update(override)
+    m = {k: val for k, val in m.items() if val}
+    if layout != PART_COL:
+        m.pop("ts_col", None)
+    added = added or {}
+    prior_meta = prev.get("meta", {}) if merge_meta and prev else {}
+    m.update(
+        {
+            "version": v,
+            "files": sorted([*kept, *added]),
+            # wall clock: backs AS-OF time travel, never a query input
+            "committed_at": time.time(),
+            "meta": {**prior_meta, **(meta or {})},
+        }
+    )
+    if layout:
+        tags = prev.get("partitions", {}) if prev else {}
+        m["partitions"] = {**{f: tags.get(f) for f in kept}, **added}
+        if layout != PART_COL:
+            m["partition_col"] = layout
+    return m
 
 
 def current_version(path: str) -> int:
@@ -432,8 +509,7 @@ def _write_version_files(
 
     _guarded_write(df, path, write)
     return {
-        f: _partition_of(f, partition_col) if partition_col else None
-        for f in _walk_rel_parquet(data_dir, path)
+        f: _partition_of(f, partition_col) for f in _walk_rel_parquet(data_dir, path)
     }
 
 
@@ -502,7 +578,7 @@ def commit_version(
     """
     _occ_check(path, expected_current)
     v = current_version(path) + 1
-    files = list(_write_version_files(path, v, df))
+    files = _write_version_files(path, v, df)
     # schema rides in every manifest so an empty commit (zero part
     # files) stays readable via _empty_snapshot; committed_at backs
     # AS-OF-timestamp time travel (wall clock — an audit attribute,
@@ -510,8 +586,7 @@ def commit_version(
     _publish_manifest(
         path,
         v,
-        {"version": v, "files": files, "meta": meta or {},
-         "schema": df.schema.json(), "committed_at": time.time()},
+        _next_manifest(None, v, [], files, schema=df.schema.json(), meta=meta),
         expected_current,
     )
     _maintain_indexes(spark, path, v, stats_cols, bloom_cols)
@@ -680,21 +755,11 @@ def evolve_schema(
     _publish_manifest(
         path,
         v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": schema.json(),
-            "project_schema": True,
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"evolved": [c for c, _ in added_cols]},
-        },
+        _next_manifest(
+            m, v, m["files"],  # by reference — no data write
+            schema=schema.json(), project_schema=True,
+            meta={"evolved": [c for c, _ in added_cols]},
+        ),
         expected_current,
         prev=m,
     )
@@ -796,13 +861,13 @@ def drop_column(
         raise ValueError(f"no such column {col!r}")
     if len(schema.fields) == 1:
         raise ValueError("cannot drop the last column")
-    pc = m.get("partition_col") or ("partitions" in m and PART_COL)
+    pc = _layout_col(m)
     if pc and col == pc:
         raise ValueError(
             f"{col!r} is the partition/cluster column; its values live "
             "in the directory layout — repartition the table instead"
         )
-    if "partitions" in m and not m.get("partition_col"):
+    if pc == PART_COL:
         # day-partitioned tables strip PART_COL before recording the
         # schema, so the column the layout actually DERIVES from is
         # the manifest's ts_col (recorded at commit since r14) — and
@@ -847,21 +912,11 @@ def drop_column(
     _publish_manifest(
         path,
         v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": new_schema.json(),
-            "project_schema": True,
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"dropped": [col]},
-        },
+        _next_manifest(
+            m, v, m["files"],  # by reference — no data write
+            schema=new_schema.json(), project_schema=True,
+            meta={"dropped": [col]},
+        ),
         expected_current,
         prev=m,
     )
@@ -953,8 +1008,7 @@ def widen_column_type(
             f"{target.simpleString()}: only lossless widenings are "
             "metadata-only (rewrite the table for anything else)"
         )
-    pc = m.get("partition_col")
-    if pc and col == pc:
+    if col == _layout_col(m):
         raise ValueError(
             f"{col!r} is the partition/cluster column; its values live "
             "in the directory layout"
@@ -967,26 +1021,14 @@ def widen_column_type(
         for f in schema.fields
     ]
     v = cur + 1
+    widened = {"col": col, "from": frm.simpleString(), "to": target.simpleString()}
     _publish_manifest(
         path,
         v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **({"partition_col": pc} if pc else {}),
-            "schema": T.StructType(new_fields).json(),
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {
-                "widened": {
-                    "col": col,
-                    "from": frm.simpleString(),
-                    "to": target.simpleString(),
-                }
-            },
-        },
+        _next_manifest(
+            m, v, m["files"],  # by reference — no data write
+            schema=T.StructType(new_fields).json(), meta={"widened": widened},
+        ),
         expected_current,
         prev=m,
     )
@@ -1054,13 +1096,13 @@ def rename_column(
             "retired (name-mapped format; reusing it would resurrect "
             "old physical values) — pick a fresh name"
         )
-    pc = m.get("partition_col")
+    pc = _layout_col(m)
     if pc and old == pc:
         raise ValueError(
             f"{old!r} is the partition/cluster column; its values live "
             "in the directory layout — repartition the table instead"
         )
-    if "partitions" in m and not m.get("partition_col"):
+    if pc == PART_COL:
         derives = m.get("ts_col")
         field_type = {f.name: f.dataType.typeName() for f in schema.fields}
         if (derives and old == derives) or (
@@ -1121,22 +1163,11 @@ def rename_column(
     _publish_manifest(
         path,
         v,
-        {
-            "version": v,
-            "files": m["files"],  # by reference — no data write
-            **({"partitions": m["partitions"]} if "partitions" in m else {}),
-            **(
-                {"partition_col": m["partition_col"]}
-                if "partition_col" in m
-                else {}
-            ),
-            "schema": T.StructType(new_fields).json(),
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            **({"renames": renames} if renames else {}),
-            "committed_at": time.time(),
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"renamed": {"from": old, "to": new}},
-        },
+        _next_manifest(
+            m, v, m["files"],  # by reference — no data write
+            schema=T.StructType(new_fields).json(), renames=renames,
+            meta={"renamed": {"from": old, "to": new}},
+        ),
         expected_current,
         prev=m,
     )
@@ -1269,7 +1300,6 @@ def _publish_mor(
     pay the anti-join for nothing. Returns the published version."""
     v = m["version"] + 1
     new_files = _write_version_files(path, v, images) if images is not None else {}
-    files = sorted([*m["files"], *new_files])
     dv = m.get("dv")
     if masked is not None:
         sidecar_rel = os.path.join(DV_DIR, f"v{v}-{uuid.uuid4().hex[:8]}")
@@ -1285,23 +1315,17 @@ def _publish_mor(
             "overwrite"
         ).parquet(sidecar_dir)
         n_dv, dead_files = _dv_sidecar_stats(
-            spark, path, sidecar_dir, {**m, "files": files}
+            spark, path, sidecar_dir, {"files": [*m["files"], *new_files]}
         )
         dv = None
         if n_dv:
             dv = {"sidecar": sidecar_rel, "rows": n_dv}
             if dead_files:
                 dv["dead_files"] = dead_files
-    manifest = {
-        "version": v,
-        "files": files,
-        **{k: m[k] for k in ("partitions", "partition_col") if k in m},
-        "schema": m["schema"],
-        **({"project_schema": True} if m.get("project_schema") else {}),
-        "committed_at": time.time(),
-        "meta": {**meta, "dv_rows": dv["rows"] if dv else 0},
-        **({"dv": dv} if dv else {}),
-    }
+    manifest = _next_manifest(
+        m, v, m["files"], new_files, dv=dv,
+        meta={**meta, "dv_rows": dv["rows"] if dv else 0},
+    )
     _publish_manifest(path, v, manifest, expected_current, prev=m)
     return v
 
@@ -1330,11 +1354,17 @@ def delete_rows_dv(
     Rewrite-maintenance interplay: compact_files and purge_rows
     REFUSE a DV-bearing snapshot (their rewrites shift row ordinals,
     which would corrupt position-keyed deletes) — run
-    materialize_deletes first. upsert_version_cow, evolve_schema,
-    append_version_clustered and drop_partitions_before carry the DV
-    pointer by reference, which is always sound: DV rows naming files
-    a later commit rewrote or dropped can never match a scan of that
-    commit's files (see _read_files_as_snapshot).
+    materialize_deletes first. Every other commit that follows this
+    snapshot carries the DV pointer by reference, because
+    _next_manifest, which builds every manifest, carries it unless the
+    commit overrides it: the DDL commits, appends, COW upserts and MERGEs,
+    retention, incremental z-order, restore (the target's pointer) and
+    localize_clone (minus the rewritten externals). That is always
+    sound: DV rows naming files a later commit rewrote or dropped can
+    never match a scan of that commit's files (see
+    _read_files_as_snapshot). The rewrites that fold the DV into new
+    files (materialize_deletes, full zorder_cluster) commit without
+    one.
 
     DV-AWARE INDEX MAINTENANCE (VERDICT r12 task 7): when the table
     has bloom/stats index pointers, the commit also computes
@@ -1418,20 +1448,36 @@ def materialize_deletes(
     anti-join, one rewrite commit. Run before compact_files /
     purge_rows, or when accumulated DVs make the per-read anti-join
     tax noticeable. No-op (returns the current version) when no DV is
-    present. Note: the rewrite commits unpartitioned — re-cluster with
-    commit_version_clustered / upsert-time partitioning as a separate
-    maintenance step if the table was partitioned (reading an explicit
-    file list does not recover partition-directory columns)."""
+    present. The rewrite keeps the table's layout: each live row is
+    tagged with its file's partition value (the directory column is
+    not in the files, so a plain snapshot read cannot recover it) and
+    lands under the same partition, and the manifest follows the
+    snapshot (_next_manifest), so partition_col/ts_col carry. An
+    unpartitioned table is the same scan and write with no tag."""
+    from urllib.parse import unquote
+
     m = _manifest(path)
     if not m.get("dv"):
         return m["version"]
-    df = read_version(spark, path)
-    return commit_version(
-        spark,
-        path,
-        df,
+    v = m["version"] + 1
+    pc = _layout_col(m)
+    live = _live_tagged(spark, path, m)
+    added: dict = {}
+    if live is not None:
+        if pc:
+            pairs = []
+            for f in _live_files(m):
+                pairs += [F.lit(f), F.lit(unquote(m["partitions"][f]))]
+            live = live.withColumn(pc, F.create_map(*pairs)[F.col("__dv_file")])
+        added = _write_version_files(
+            path, v, live.drop("__dv_file", "__dv_pos"), pc
+        )
+    manifest = _next_manifest(
+        m, v, [], added, dv=None, renames=None,  # rewritten: logical names
         meta={**(meta or {}), "materialized_dv_rows": m["dv"]["rows"]},
     )
+    _publish_manifest(path, v, manifest, None, prev=m)
+    return v
 
 
 def update_rows_mor(
@@ -1472,7 +1518,7 @@ def update_rows_mor(
     _refuse_external(m, "update_rows_mor")
     if m["version"] == 0:
         raise ValueError("cannot update an empty table")
-    if "partitions" in m or "partition_col" in m:
+    if _layout_col(m):
         raise ValueError(
             "update_rows_mor supports unpartitioned snapshots; use "
             "upsert_version_cow for partition-granular updates"
@@ -1750,7 +1796,7 @@ def merge_into_mor(
     _refuse_external(m, "merge_into_mor")
     if m["version"] == 0:
         raise ValueError("cannot merge into an empty table")
-    if "partitions" in m or "partition_col" in m:
+    if _layout_col(m):
         raise ValueError(
             "merge_into_mor supports unpartitioned snapshots; use "
             "upsert_version_cow for partition-granular upserts"
@@ -3164,7 +3210,7 @@ def _manifest_read_schema(m: dict):
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(m["schema"]))
-    pc = m.get("partition_col")
+    pc = _layout_col(m)
     if pc and any(f.name == pc for f in schema.fields):
         schema = T.StructType([f for f in schema.fields if f.name != pc])
     return schema
@@ -3657,8 +3703,6 @@ def deletion_vector_maintenance_roundtrip(
 
 # ---- partition-granular copy-on-write (the 100 TB refinement) ------
 
-PART_COL = "p_date"
-
 
 def _walk_rel_parquet(root: str, base: str) -> list[str]:
     out = []
@@ -3710,8 +3754,10 @@ def _footer_schema_groups(
     return groups
 
 
-def _partition_of(relpath: str, col: str = PART_COL) -> str | None:
-    for seg in relpath.split(os.sep):
+def _partition_of(relpath: str, col: str | None) -> str | None:
+    """The partition tag of a file under layout column `col` (None for
+    an unpartitioned layout)."""
+    for seg in relpath.split(os.sep) if col else ():
         if seg.startswith(col + "="):
             return seg.split("=", 1)[1]
     return None
@@ -3739,21 +3785,13 @@ def commit_version_clustered(
     _publish_manifest(
         path,
         v,
-        {"version": v, "files": list(partitions), "partitions": partitions,
-         "partition_col": partition_col,
-         "schema": df.schema.json(),
-         "committed_at": time.time(),
-         "meta": meta or {}},
+        _next_manifest(
+            None, v, [], partitions, partition_col=partition_col,
+            schema=df.schema.json(), meta=meta,
+        ),
         expected_current,
     )
     return v
-
-
-# "dv not passed" sentinel: None must stay expressible as an EXPLICIT
-# "this snapshot has no DV" (upsert_version_cow resolved the manifest
-# already and threads m.get("dv") verbatim — re-resolving would cost a
-# chain walk per commit for nothing)
-_DV_UNSET = object()
 
 
 def commit_version_partitioned(
@@ -3764,7 +3802,7 @@ def commit_version_partitioned(
     carried: list[str] | None = None,
     meta: dict | None = None,
     expected_current: int | None = None,
-    dv=_DV_UNSET,
+    prev: dict | None = None,
     cluster: bool = True,
 ) -> int:
     """Commit df day-partitioned, carrying over untouched files from
@@ -3776,18 +3814,19 @@ def commit_version_partitioned(
     Iceberg manifests span snapshots. Same OCC-guarded atomic
     publish as commit_version.
 
-    Deletion-vector safety: when `carried` is non-empty and the
-    caller did not thread `dv`, the prior manifest's DV pointer is
-    INHERITED — carried files keep whatever soft-deletes they had.
-    Dropping it silently would resurrect deleted rows in every
-    carried file (ADVICE r12: stream_versioned_append_ingest carried
-    files without threading dv). A caller that already resolved the
-    prior manifest threads dv=m.get("dv") explicitly (possibly None —
-    that is an answer, not an omission, hence the sentinel default);
-    a caller that really wants the DV gone materializes first
-    (materialize_deletes) or commits without carried files. DV rows
-    naming rewritten files never match (see _read_files_as_snapshot), so
-    inheriting is always sound.
+    `prev` is the snapshot the `carried` files come from; a caller
+    that already resolved it passes it, and one that carries files
+    without it gets the current snapshot resolved here. The manifest
+    follows prev (_next_manifest), so carried files keep their DV
+    pointer and rename map: dropping the DV would
+    resurrect deleted rows in every carried file (ADVICE r12:
+    stream_versioned_append_ingest carried files without threading
+    it). DV rows naming rewritten files never match (see
+    _read_files_as_snapshot), so inheriting is always sound. A caller
+    that really wants the DV gone materializes first
+    (materialize_deletes) or commits with neither carried files nor
+    prev. The version is prev's + 1, so a commit that landed after
+    prev aborts the publish instead of being overwritten.
 
     The new rows are clustered by day before the write (one file per
     touched day at small scale); `cluster=False` writes df's own
@@ -3795,38 +3834,21 @@ def commit_version_partitioned(
     from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
 
     _occ_check(path, expected_current)
-    if dv is _DV_UNSET:
-        dv = (
-            _manifest(path).get("dv")
-            if carried and current_version(path) > 0
-            else None
-        )
-    v = current_version(path) + 1
+    if carried and prev is None:
+        prev = _manifest(path)
+    v = (prev["version"] if prev else current_version(path)) + 1
     new_files = _write_version_files(
         path, v, with_partition_col(df, ts_col), PART_COL, cluster
     )
-    files = sorted([*(carried or []), *new_files])
-    partitions = {f: _partition_of(f) for f in files}
-    _publish_manifest(
-        path,
-        v,
-        {"version": v, "files": files, "partitions": partitions,
-         # a partitionBy write of ZERO rows emits no data files
-         # (the write_time_partitioned issue); the recorded schema
-         # lets read_version serve the empty snapshot correctly
-         "schema": df.schema.json(),
-         # the column the directory layout DERIVES from (PART_COL is
-         # stripped before the schema is recorded, so this — not
-         # PART_COL — is what DDL must protect from DROP/RENAME)
-         "ts_col": ts_col,
-         "committed_at": time.time(),
-         # deletion-vector pointer a carried-files caller threads
-         # through (upsert_version_cow); rows naming rewritten files
-         # never match (see _read_files_as_snapshot)
-         **({"dv": dv} if dv else {}),
-         "meta": meta or {}},
-        expected_current,
+    # the recorded schema lets read_version serve a zero-row commit (a
+    # partitionBy write of no rows emits no files); ts_col is the
+    # column the layout DERIVES from (PART_COL is stripped before the
+    # schema is recorded), which DDL must protect from DROP/RENAME
+    manifest = _next_manifest(
+        prev, v, carried or [], new_files, partition_col=PART_COL,
+        schema=df.schema.json(), ts_col=ts_col, meta=meta,
     )
+    _publish_manifest(path, v, manifest, expected_current, prev=prev)
     return v
 
 
@@ -3851,8 +3873,10 @@ def append_version_clustered(
     snapshots shape Iceberg appends have. Multiple files per partition
     are normal; readers union them and pruned reads match on the
     per-file partition tag. `partition_col=None` writes no layout
-    column: each input partition of df becomes one file, for tables
-    no reader prunes by directory (the near-dup indexes). Prior
+    column and an unpartitioned manifest: each input partition of df
+    becomes one file, for tables no reader prunes by directory (the
+    near-dup indexes). The manifest is built from the current
+    snapshot (_next_manifest), so its DV pointer and renames carry. Prior
     manifest meta carries forward under the new commit's keys (so a
     model artifact riding in meta — the IVF-PQ index's
     centroids/codebooks — survives appends).
@@ -3882,49 +3906,42 @@ def append_version_clustered(
     set rebase=False for strict single-writer semantics."""
 
     _occ_check(path, expected_current)
-    prior = _manifest(path) if current_version(path) > 0 else {"files": [], "partitions": {}}
-    v = prior.get("version", 0) + 1
+    prior = _manifest(path) if current_version(path) > 0 else None
+    schema = df.schema.json()
     cons_at_write = table_constraints(path)
-    new_parts = _write_version_files(path, v, df, partition_col)
-    new_files = list(new_parts)
+    new_parts = _write_version_files(
+        path, (prior["version"] if prior else 0) + 1, df, partition_col
+    )
 
     base = prior
     exp = expected_current
     for attempt in range(_APPEND_MAX_REBASE + 1):
-        v = base.get("version", 0) + 1
-        files = sorted(list(base["files"]) + new_files)
-        partitions = dict(base.get("partitions", {}))
-        partitions.update(new_parts)
+        v = (base["version"] if base else 0) + 1
         try:
+            # appended files have no DV rows; carried files keep theirs
             _publish_manifest(
                 path,
                 v,
-                {"version": v, "files": files, "partitions": partitions,
-                 "partition_col": partition_col,
-                 "schema": df.schema.json(),
-                 "committed_at": time.time(),
-                 # deletion vector carries BY REFERENCE: appended files
-                 # have no DV rows, carried files keep theirs
-                 **({"dv": base["dv"]} if base.get("dv") else {}),
-                 "meta": {**base.get("meta", {}), **(meta or {})}},
+                _next_manifest(
+                    base, v, base["files"] if base else [], new_parts,
+                    partition_col=partition_col, schema=schema, meta=meta,
+                    merge_meta=True,
+                ),
                 exp,
-                prev=base if base.get("version") else None,
+                prev=base,
             )
             break
         except ConcurrentCommitError:
             if not rebase or attempt == _APPEND_MAX_REBASE:
                 raise
             cur = _manifest(path)
-            if (
-                cur.get("schema") != prior.get("schema", df.schema.json())
-                and cur.get("schema") != df.schema.json()
-            ):
+            if cur["schema"] not in ((prior or {}).get("schema", schema), schema):
                 raise ConcurrentCommitError(
                     "concurrent commit changed the table schema; this "
                     "append's files predate it — re-run the append "
                     "against the new schema"
                 )
-            if cur.get("partition_col") != partition_col:
+            if _layout_col(cur) != partition_col:
                 raise ConcurrentCommitError(
                     "concurrent commit changed the partition layout; "
                     "append cannot rebase across it"
@@ -4005,15 +4022,15 @@ def compact_files(
             "bin-pack rewrite shifts row ordinals, which would corrupt "
             "the position-keyed DV; run materialize_deletes first"
         )
-    if "partitions" not in m:
+    part_col = _layout_col(m)
+    if part_col is None:
         # UNPARTITIONED table (plain commit_version chain — e.g. the
         # streaming sinks' per-micro-batch commits): the whole table is
         # one bin-pack group; no per-row tagging needed
         return _compact_unpartitioned(
             spark, path, m, target_bytes, min_files, meta, expected_current
         )
-    parts = m.get("partitions", {})
-    part_col = m.get("partition_col", PART_COL)
+    parts = m["partitions"]
     by_part: dict[str, list[str]] = {}
     for f in m["files"]:
         pval = parts.get(f)
@@ -4131,19 +4148,14 @@ def compact_files(
         _shutil.rmtree(data_dir, ignore_errors=True)
         raise
 
-    files = sorted(carried + new_files)
-    manifest = {
-        "version": v,
-        "files": files,
-        "partitions": {f: _partition_of(f, part_col) for f in files},
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        # prior meta carries forward (append_version_clustered's
-        # contract): a compaction is a rows-identical rewrite, so the
-        # streaming sinks' replay batch_id and the IVF-PQ index's
-        # model/fingerprint must survive it
-        "meta": {
-            **m.get("meta", {}),
+    # prior meta carries forward (append_version_clustered's
+    # contract): a compaction is a rows-identical rewrite, so the
+    # streaming sinks' replay batch_id and the IVF-PQ index's
+    # model/fingerprint must survive it
+    manifest = _next_manifest(
+        m, v, carried, {f: _partition_of(f, part_col) for f in new_files},
+        merge_meta=True,
+        meta={
             **(meta or {}),
             "compaction": {
                 "partitions": sorted(plan),
@@ -4151,11 +4163,7 @@ def compact_files(
                 "files_out": len(new_files),
             },
         },
-    }
-    if "partition_col" in m:
-        manifest["partition_col"] = m["partition_col"]
-    if m.get("project_schema"):
-        manifest["project_schema"] = m["project_schema"]
+    )
     _publish_manifest(path, v, manifest, expected_current, prev=m)
     return {
         "version": v,
@@ -4177,8 +4185,11 @@ def _publish_manifest(
     write, OCC re-check, atomic pointer swap. Any future
     publish-protocol hardening (e.g. fsync before the replace) lands
     once here instead of drifting between writers. `manifest` is
-    always the writer's FULL intent (complete file list); the
-    encoding choice is invisible to readers (_manifest resolves).
+    the writer's FULL intent, built by _next_manifest from the
+    snapshot the commit follows, and it is published exactly as
+    given: the publish adds no key, so what a commit carries forward
+    (layout, ts_col, renames, DV) is decided in _next_manifest alone.
+    The encoding choice is invisible to readers (_manifest resolves).
     `prev` is the writer's already-resolved previous snapshot, when it
     has one — the delta encoder then skips its own resolution (at a
     files_ref checkpoint base that second resolution re-read the whole
@@ -4351,37 +4362,6 @@ def _publish_manifest_locked(
             f"version v{v} was published by a concurrent writer "
             f"(pointer at v{cur_now}); re-read and retry"
         )
-    # metadata-only commits (DDL, DV, zorder, compaction) rebuild the
-    # manifest dict from scratch — inherit the partition-deriving
-    # column so drop/rename DDL can keep protecting it downstream,
-    # and the rename map so pre-rename files keep resolving their
-    # physical column names. Writers that did not resolve prev get it
-    # resolved here once (and passed on to the delta encoder, which
-    # would otherwise resolve it again). Dropping the rename map
-    # would make every pre-rename file read the renamed column as
-    # NULL — silent data loss, hence the unconditional inheritance.
-    # Resolution is NOT free (a delta-chain walk per publish), so the
-    # common case must not pay it: ts_col only matters for
-    # day-partitioned manifests, and renames can only exist if a
-    # rename DDL ever ran on this table — observable as the _renames/
-    # sidecar dir, ONE stat call (r14 bench regression: the first cut
-    # resolved prev on every unpartitioned commit).
-    needs = (
-        "ts_col" not in manifest and "partitions" in manifest
-    ) or (
-        "renames" not in manifest
-        and os.path.isdir(os.path.join(path, RENAMES_DIR))
-    )
-    if needs and prev is None and manifest.get("version", 1) > 1:
-        try:
-            prev = _manifest(path, manifest["version"] - 1)
-        except (FileNotFoundError, ValueError, KeyError):
-            prev = None
-    if prev is not None:
-        if "ts_col" not in manifest and "ts_col" in prev:
-            manifest["ts_col"] = prev["ts_col"]
-        if "renames" not in manifest and prev.get("renames"):
-            manifest["renames"] = prev["renames"]
     enc = _encode_manifest(path, manifest, prev=prev)
     _occ_check(path, expected_current)
     # The version-named manifest write goes through the CAS object too
@@ -4491,13 +4471,10 @@ def _compact_unpartitioned(
         _shutil.rmtree(data_dir, ignore_errors=True)
         raise
 
-    manifest = {
-        "version": v,
-        "files": sorted(carried + new_files),
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        "meta": {
-            **m.get("meta", {}),
+    manifest = _next_manifest(
+        m, v, carried, dict.fromkeys(new_files),
+        merge_meta=True,
+        meta={
             **(meta or {}),
             "compaction": {
                 "partitions": [],
@@ -4505,9 +4482,7 @@ def _compact_unpartitioned(
                 "files_out": len(new_files),
             },
         },
-    }
-    if m.get("project_schema"):
-        manifest["project_schema"] = m["project_schema"]
+    )
     _publish_manifest(path, v, manifest, expected_current, prev=m)
     return {
         "version": v,
@@ -4741,9 +4716,7 @@ def purge_rows(
                     parts_map[rewritten[f]] = parts_map.pop(f)
             else:
                 parts_map.pop(f, None)
-        m["files"] = sorted(files)
-        if "partitions" in m:
-            m["partitions"] = parts_map
+        m["files"] = sorted(files)  # parts_map IS m's tag map, if any
         _atomic_json(mp, _checkpoint_form(path, m))
 
     # rename-map sidecars key files by relpath: follow the purge's
@@ -4800,9 +4773,17 @@ def _touched_days(
     split. The day list is one distinct over `frame`'s `ts_col`
     (partition METADATA, no table scan). The read is DV-filtered, so
     rewritten days materialize their deletes while carried files keep
-    theirs via the carried DV pointer."""
+    theirs via the carried DV pointer. Refuses a snapshot that is not
+    day-partitioned: its files carry no day tags, so every file would
+    carry and the rewritten keys would duplicate."""
     from data_ingestion_pipeline_spark.operators.upsert import with_partition_col
 
+    if _layout_col(m) != PART_COL:
+        raise ValueError(
+            "copy-on-write upsert/MERGE needs a day-partitioned snapshot "
+            f"(this one is laid out by {_layout_col(m)!r}); merge_into_mor "
+            "is the unpartitioned path"
+        )
     touched = {
         str(r[0])
         for r in with_partition_col(frame, ts_col)
@@ -4810,7 +4791,7 @@ def _touched_days(
         .distinct()
         .collect()
     }
-    parts = m.get("partitions", {})
+    parts = m["partitions"]
     hit = [f for f in m["files"] if parts.get(f) in touched]
     carried = [f for f in m["files"] if parts.get(f) not in touched]
     base = (
@@ -4848,8 +4829,7 @@ def upsert_version_cow(
         )
     )
     return commit_version_partitioned(
-        spark, path, merged, ts_col=ts_col, carried=carried, meta=meta,
-        dv=m.get("dv"),
+        spark, path, merged, ts_col=ts_col, carried=carried, meta=meta, prev=m
     )
 
 
@@ -4887,11 +4867,6 @@ def merge_into_cow(
     m = _manifest(path)
     if m["version"] == 0:
         raise ValueError("cannot merge into an empty table")
-    if "partitions" not in m:
-        raise ValueError(
-            "merge_into_cow needs a day-partitioned snapshot; "
-            "merge_into_mor is the unpartitioned path"
-        )
     target_schema = _manifest_read_schema(m)
     data_cols, col_type = _validate_merge_spec(
         target_schema, when_matched, insert_not_matched
@@ -5008,7 +4983,7 @@ def merge_into_cow(
             **(meta or {}),
             "merge": {"updated": n_upd, "deleted": n_del, "inserted": n_ins},
         },
-        dv=m.get("dv"),
+        prev=m,
     )
 
 
@@ -5159,7 +5134,7 @@ def _cdf_changed_files(ma: dict, mb: dict) -> tuple[list, list] | None:
     neither has one). A partition with an identical file set on both
     sides has identical content (files are immutable) and contributes
     no change rows, so dropping it from BOTH scans is exact."""
-    if "partitions" not in ma or "partitions" not in mb:
+    if not (_layout_col(ma) and _layout_col(mb)):
         return None
     if (ma.get("dv") or {}).get("sidecar") != (mb.get("dv") or {}).get(
         "sidecar"
@@ -5644,8 +5619,7 @@ def apply_changes(
     ts, which is exactly the COW source contract), any other layout
     through the MOR path. Same CDC-batch semantics and
     content-idempotence either way."""
-    m = _manifest(path)
-    if "partitions" not in m:
+    if _layout_col(_manifest(path)) != PART_COL:
         return apply_changes_mor(spark, path, changes, keys, meta=meta)
     src, spec = _cdc_merge_spec(changes, keys)
     return merge_into_cow(
@@ -5855,29 +5829,10 @@ def clone_table(
         f: os.path.relpath(os.path.join(src_abs, f), dst_abs)
         for f in m["files"]
     }
-    manifest: dict = {
-        "version": 1,
-        "files": sorted(rel_of.values()),
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        "meta": {
-            **(meta or {}),
-            "cloned_from": src_abs,
-            "source_version": m["version"],
-        },
-    }
-    if "partitions" in m:
-        manifest["partitions"] = {
-            rel_of[f]: p for f, p in m["partitions"].items()
-        }
-    for k in ("partition_col", "ts_col"):
-        if k in m:
-            manifest[k] = m[k]
-    if m.get("project_schema"):
-        manifest["project_schema"] = True
+    tags = m.get("partitions", {})
+    ren: dict = {}
     if m.get("renames"):
         os.makedirs(os.path.join(dst_abs, RENAMES_DIR), exist_ok=True)
-        ren: dict = {}
         for to, entries in m["renames"].items():
             es = []
             for i, e in enumerate(entries):
@@ -5896,8 +5851,7 @@ def clone_table(
                 es.append({"from": e["from"], "files_ref": ref})
             if es:
                 ren[to] = es
-        if ren:
-            manifest["renames"] = ren
+    dv = None
     if m.get("dv"):
         # the clone's scan computes, for an external file, the
         # normalized ABSOLUTE source path (the dst-prefix strip never
@@ -5920,7 +5874,7 @@ def clone_table(
         ).repartition(_index_shards(max(1, len(m["files"])))).write.mode(
             "overwrite"
         ).parquet(os.path.join(dst_abs, dv_rel))
-        manifest["dv"] = {
+        dv = {
             "sidecar": dv_rel,
             "rows": m["dv"]["rows"],
             **(
@@ -5963,6 +5917,13 @@ def clone_table(
                     f"{bad[0].asDict()}; drop the constraint or clone "
                     "the current version"
                 )
+    manifest = _next_manifest(
+        None, 1, [], {rel_of[f]: tags.get(f) for f in m["files"]},
+        partition_col=_layout_col(m), schema=m["schema"],
+        ts_col=m.get("ts_col"), project_schema=m.get("project_schema"),
+        renames=ren, dv=dv,
+        meta={**(meta or {}), "cloned_from": src_abs, "source_version": m["version"]},
+    )
     _publish_manifest(dst_abs, 1, manifest, expected_current=0)
     if cons:
         _atomic_json(os.path.join(dst_abs, CONSTRAINTS_FILE), cons)
@@ -6000,11 +5961,10 @@ def localize_clone(
     carried = [f for f in m["files"] if not f.startswith("..")]
     v = m["version"] + 1
     data_dir = _attempt_data_dir(path, v)
-    parts_map = m.get("partitions", {})
-    pc = m.get("partition_col") or ("partitions" in m and PART_COL) or None
+    pc = _layout_col(m)
     by_tag: dict = {}
     for f in ext:
-        by_tag.setdefault(parts_map.get(f), []).append(f)
+        by_tag.setdefault(m.get("partitions", {}).get(f), []).append(f)
     for tag, fs in sorted(by_tag.items(), key=lambda kv: (kv[0] is None, kv[0])):
         out_dir = (
             os.path.join(data_dir, f"{pc}={tag}")
@@ -6017,38 +5977,23 @@ def localize_clone(
         _guarded_write(
             df, path, lambda g, d=out_dir: g.write.mode("append").parquet(d)
         )
-    new_files = _walk_rel_parquet(data_dir, path)
-    files = sorted(carried + new_files)
-    manifest: dict = {
-        "version": v,
-        "files": files,
-        "schema": m["schema"],
-        "committed_at": time.time(),
-        "meta": {**(meta or {}), "localized": len(ext)},
-    }
-    if "partitions" in m:
-        new_parts = {f: _partition_of(f) for f in new_files}
-        manifest["partitions"] = {
-            **{f: parts_map[f] for f in carried},
-            **new_parts,
-        }
-    for k in ("partition_col", "ts_col"):
-        if k in m:
-            manifest[k] = m[k]
-    if m.get("project_schema"):
-        # carried local files may predate schema evolution
-        manifest["project_schema"] = True
+    new_files = {f: _partition_of(f, pc) for f in _walk_rel_parquet(data_dir, path)}
     # DV rows for rewritten externals never match again (deletes were
     # materialized through the read); carried locals keep theirs
+    dv = None
     if m.get("dv") and carried:
         dead = [
             f for f in m["dv"].get("dead_files", []) if f in set(carried)
         ]
-        manifest["dv"] = {
+        dv = {
             "sidecar": m["dv"]["sidecar"],
             "rows": m["dv"]["rows"],
             **({"dead_files": dead} if dead else {}),
         }
+    manifest = _next_manifest(
+        m, v, carried, new_files, dv=dv,
+        meta={**(meta or {}), "localized": len(ext)},
+    )
     _publish_manifest(path, v, manifest, None, prev=m)
     return v
 
@@ -6196,26 +6141,17 @@ def drop_partitions_before(
     """
     _occ_check(path, expected_current)
     m = _manifest(path)
-    parts = m.get("partitions")
-    if parts is None:
+    if not _layout_col(m):
         raise ValueError("retention needs a partitioned table")
+    parts = m["partitions"]
     keep = [f for f in m["files"] if (parts.get(f) is None or parts[f] >= cutoff)]
     v = m["version"] + 1
+    # dv rows for dropped partitions' files go stale-but-harmless
+    # (they match nothing); _next_manifest carries the pointer
     _publish_manifest(
         path,
         v,
-        {
-            "version": v,
-            "files": keep,
-            "partitions": {f: parts[f] for f in keep if f in parts},
-            "schema": m["schema"],
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            # dv rows for dropped partitions' files go stale-but-
-            # harmless (they match nothing); carry by reference
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-            "meta": {"retention_dropped_before": cutoff},
-        },
+        _next_manifest(m, v, keep, meta={"retention_dropped_before": cutoff}),
         expected_current,
         prev=m,
     )
@@ -6404,7 +6340,7 @@ def zorder_cluster_incremental(
     m = _manifest(path)
     if m["version"] == 0:
         raise ValueError("cannot z-order an empty table")
-    if "partitions" in m or "partition_col" in m:
+    if _layout_col(m):
         raise ValueError(
             "zorder_cluster_incremental supports unpartitioned "
             "snapshots (directory-partitioned layouts cluster within "
@@ -6434,28 +6370,20 @@ def zorder_cluster_incremental(
     nv = m["version"] + 1
     data_dir = os.path.join(path, "data", f"v{nv}-zinc-{uuid.uuid4().hex[:8]}")
     ordered.write.mode("overwrite").parquet(data_dir)
-    new_files = _walk_rel_parquet(data_dir, path)
-    files = sorted(list(clustered) + new_files)
+    new_files = dict.fromkeys(_walk_rel_parquet(data_dir, path))
+    meta = {
+        **(meta or {}),
+        "zorder_by": cols,
+        "zorder_bits": bits,
+        "zorder_incremental": {
+            "rewrote": len(unclustered),
+            "carried": len(clustered),
+        },
+    }
     _publish_manifest(
         path,
         nv,
-        {
-            "version": nv,
-            "files": files,
-            "schema": m["schema"],
-            **({"project_schema": True} if m.get("project_schema") else {}),
-            "committed_at": time.time(),
-            "meta": {
-                **(meta or {}),
-                "zorder_by": cols,
-                "zorder_bits": bits,
-                "zorder_incremental": {
-                    "rewrote": len(unclustered),
-                    "carried": len(clustered),
-                },
-            },
-            **({"dv": m["dv"]} if m.get("dv") else {}),
-        },
+        _next_manifest(m, nv, list(clustered), new_files, meta=meta),
         expected_current,
         prev=m,
     )
@@ -6622,48 +6550,23 @@ def restore_version(
                     f"violating live constraint {cname!r} ({expr}): "
                     f"{bad[0].asDict()}; drop the constraint first"
                 )
-    prev = _manifest(path, cur)
     v = cur + 1
+    # the new manifest follows the TARGET snapshot, not the current
+    # one: its files, layout, schema, DV pointer, ts_col and rename
+    # map describe exactly what is restored. A map keyed to the
+    # current logical names would be inert against the restored
+    # schema, and pre-rename files would read their renamed columns
+    # as NULL (ADVICE r14). The current snapshot is only the delta
+    # encoder's base.
     _publish_manifest(
         path,
         v,
-        {
-            "version": v,
-            "files": t["files"],  # by reference — no data write
-            **({"partitions": t["partitions"]} if "partitions" in t else {}),
-            **(
-                {"partition_col": t["partition_col"]}
-                if "partition_col" in t
-                else {}
-            ),
-            "schema": t["schema"],
-            **({"project_schema": True} if t.get("project_schema") else {}),
-            **({"dv": t["dv"]} if t.get("dv") else {}),
-            # The restored snapshot must carry the TARGET's own rename
-            # map and ts_col — they describe exactly the files/schema
-            # being restored — never inherit the CURRENT version's via
-            # _publish_manifest's prev-fallback: a map keyed to the
-            # current logical names is inert against the restored
-            # schema, and pre-rename files would then read their
-            # renamed columns as NULL (ADVICE r14). When the target
-            # predates every rename, an explicit EMPTY map suppresses
-            # the inheritance (the _renames/ sidecar dir exists, so
-            # the fallback would otherwise fire).
-            **({"ts_col": t["ts_col"]} if "ts_col" in t else {}),
-            **(
-                {"renames": t["renames"]}
-                if t.get("renames")
-                else (
-                    {"renames": {}}
-                    if os.path.isdir(os.path.join(path, RENAMES_DIR))
-                    else {}
-                )
-            ),
-            "committed_at": time.time(),
-            "meta": {**(meta or {}), "restored_from": to_version},
-        },
+        _next_manifest(
+            t, v, t["files"],  # by reference — no data write
+            meta={**(meta or {}), "restored_from": to_version},
+        ),
         expected_current,
-        prev=prev,
+        prev=_manifest(path, cur),
     )
     return v
 

@@ -1535,11 +1535,10 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             return  # replayed batch: already committed, exactly-once skip
         batch = bdf.dropDuplicates(["event_id"])
         carried: list[str] = []
-        prior_dv = None
+        m = None
         if V.current_version(table) > 0:
             m = V._manifest(table)
             carried = list(m["files"])
-            prior_dv = m.get("dv")
             if carried:
                 # probe from the RAW batch: the probe's distinct
                 # bit-pair aggregation dedupes anyway, so routing it
@@ -1559,12 +1558,12 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
                         path=table,
                     ).select("event_id")
                     batch = batch.join(existing, "event_id", "left_anti")
-        # dv threaded from the already-resolved manifest (None when
-        # the table has none) — the sentinel default would otherwise
-        # re-resolve the chain per batch just to find the same answer
+        # the already-resolved snapshot rides along: the commit
+        # follows it (its DV pointer carries) without resolving the
+        # chain again
         V.commit_version_partitioned(
             spark, table, batch, ts_col="ts", carried=carried,
-            meta={"batch_id": batch_id}, dv=prior_dv,
+            meta={"batch_id": batch_id}, prev=m,
         )
         if not carried:
             # the first batch with files creates the index; every

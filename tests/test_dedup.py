@@ -443,18 +443,16 @@ def test_incremental_merge_loop_matches_reference_fuzz():
         ), (trial, words, nm)
 
 
-def test_incremental_merge_loop_is_faster_at_vocab_scale():
+def test_incremental_merge_loop_is_faster_at_vocab_scale(monkeypatch):
     """The r11 loop rescanned every word type per merge; the
-    incremental loop touches only affected words. Measured 11.9x at
-    50k types x 256 merges; gate a conservative multiple on a
-    downscaled run so host variance can't flap the test."""
+    incremental loop touches only affected words (11.9x faster at 50k
+    types x 256 merges). Gate the work, not the wall clock: the
+    reference rewrites every word type once per merge, and the
+    incremental loop must rewrite far fewer (39x fewer on this seeded
+    corpus; the gate asks for 10x)."""
     import random
-    import time
 
-    from data_ingestion_pipeline_spark.operators.text import (
-        _merge_loop,
-        _merge_loop_reference,
-    )
+    from data_ingestion_pipeline_spark.operators import text
 
     rng = random.Random(1)
     words = {}
@@ -463,14 +461,18 @@ def test_incremental_merge_loop_is_faster_at_vocab_scale():
             rng.choice("abcdefghijklmnop") for _ in range(rng.randint(3, 12))
         )
         words[tuple(w)] = rng.randint(1, 1000)
-    t0 = time.time()
-    ref = _merge_loop_reference(dict(words), 128)
-    t_ref = time.time() - t0
-    t0 = time.time()
-    inc = _merge_loop(dict(words), 128)
-    t_inc = time.time() - t0
+    ref = text._merge_loop_reference(dict(words), 128)
+    rewrites = []
+    apply_merge = text._apply_merge_word
+
+    def counting(syms, a, b):
+        rewrites.append(1)
+        return apply_merge(syms, a, b)
+
+    monkeypatch.setattr(text, "_apply_merge_word", counting)
+    inc = text._merge_loop(dict(words), 128)
     assert inc == ref
-    assert t_ref / max(t_inc, 1e-9) >= 2.5, (t_ref, t_inc)
+    assert len(rewrites) * 10 <= len(ref) * len(words), len(rewrites)
 
 
 def test_bpe_encode_roundtrip_against_pure_python(spark):
