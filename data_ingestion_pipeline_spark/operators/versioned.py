@@ -476,9 +476,8 @@ def _attempt_data_dir(path: str, v: int) -> str:
     `data/v{N}` dirs made concurrent writers mutually destructive: an
     OCC LOSER's mode-overwrite data write could clobber the WINNER's
     already-published files for the contested version number.
-    Unique-suffix dirs (the discipline compaction/zorder already
-    used, and the reason Iceberg/Delta write uniquely-located files)
-    make every attempt's files private: losers and torn attempts
+    Unique-suffix dirs (the reason Iceberg/Delta write
+    uniquely-located files) make every attempt's files private: losers and torn attempts
     leave vacuum-reclaimable orphans, never corruption. Manifests
     reference files by relpath, so readers never cared about the dir
     name."""
@@ -491,6 +490,7 @@ def _write_version_files(
     df: DataFrame,
     partition_col: str | None = None,
     cluster: bool = True,
+    data_dir: str | None = None,
 ) -> dict[str, str | None]:
     """The one versioned file writer: df lands constraint-guarded in a
     fresh attempt directory for version v (partitionBy(partition_col)
@@ -498,8 +498,9 @@ def _write_version_files(
     {relpath: partition value} map. A partitioned write is clustered
     by distribute_for_write (below the guard, so the guard filters the
     distributed rows) unless the caller passes cluster=False to keep
-    its own layout."""
-    data_dir = _attempt_data_dir(path, v)
+    its own layout. A caller that must remove the attempt on failure
+    names it (`data_dir`, from _attempt_data_dir)."""
+    data_dir = data_dir or _attempt_data_dir(path, v)
     if partition_col and cluster:
         df = distribute_for_write(df, partition_col)
 
@@ -1052,9 +1053,9 @@ def rename_column(
     Readers (_scan_with_renames) group files by physical-name
     signature and alias physical→logical at the scan; files written
     AFTER the rename carry the new name and need no entry, and
-    rewrite maintenance (compaction) normalizes physical names on
-    output (_normalize_renamed), so the map only ever shrinks as the
-    table churns. Manifests carry O(#renames) pointer bytes, never
+    the maintenance rewrites read through this scan, so their outputs
+    carry logical names and the map only ever shrinks as the table
+    churns. Manifests carry O(#renames) pointer bytes, never
     the file list itself — the DDL is O(current file count) once, and
     every later commit is unaffected (the 100 TB requirement).
 
@@ -1330,6 +1331,101 @@ def _publish_mor(
     return v
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    files: list[str],
+    shape: Callable[[DataFrame], DataFrame] | None = None,
+    *,
+    meta: dict | Callable[[dict], dict],
+    merge_meta: bool = False,
+    expected_current: int | None = None,
+) -> int:
+    """The one maintenance rewrite, shared by compact_files,
+    materialize_deletes and both z-order passes: replace `files` of
+    snapshot `m` with fresh files holding the same live rows, and
+    publish version m + 1 from `m`.
+
+    The live rows come through the snapshot scan (_live_tagged: the
+    DV applied, renamed columns under their logical names, the
+    manifest schema, no inference), so outputs carry the current
+    logical schema. Each row is tagged with its file's partition
+    value — the directory column is not in the files — and `shape`,
+    when given, sets the output layout: a shaped frame is written as
+    the shape left it, an unshaped one is clustered by its partition. Guards, before publish, removing the attempt directory
+    on failure: a row that lands in the Hive default partition when
+    no input was tagged with it means the file → partition map
+    missed; on a DV-free snapshot the footer row counts (driver-side,
+    no job) must match. The manifest follows `m` (_next_manifest),
+    so the layout, schema and meta policy carry and a commit landing
+    after `m` aborts the publish; when no file is kept, the DV and
+    rename map describe no file and are dropped. `meta` may be a
+    function of the written {relpath: tag} map. Returns the version."""
+    import shutil as _shutil
+    from urllib.parse import unquote
+
+    import pyarrow.parquet as _pq
+
+    v = m["version"] + 1
+    pc = _layout_col(m)
+    tags = m.get("partitions", {})
+    rewrite = set(files)
+    kept = [f for f in m["files"] if f not in rewrite]
+    live = _live_tagged(spark, path, {**m, "files": sorted(rewrite)})
+    added: dict = {}
+    if live is not None:
+        if pc:
+            # tags are the Hive-ESCAPED directory strings and
+            # partitionBy re-escapes, so rows carry the unescaped
+            # value; the scan keys a shallow clone's external file by
+            # its absolute path (the relpath strip cannot apply)
+            pairs = []
+            for f in files:
+                ext = f.startswith("..")
+                key = os.path.abspath(os.path.join(path, f)) if ext else f
+                pairs += [F.lit(key), F.lit(unquote(tags[f]))]
+            live = live.withColumn(pc, F.create_map(*pairs)[F.col("__dv_file")])
+        out = live.drop("__dv_file", "__dv_pos")
+        data_dir = _attempt_data_dir(path, v)
+        sentinel = "__HIVE_DEFAULT_PARTITION__"
+
+        def n_rows(fs) -> int:
+            return sum(
+                _pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                for f in fs
+            )
+
+        try:
+            added = _write_version_files(
+                path, v, shape(out) if shape else out, pc,
+                cluster=shape is None, data_dir=data_dir,
+            )
+            if any(sentinel in f for f in added) and not any(
+                tags.get(f) == sentinel for f in files
+            ):
+                raise RuntimeError(
+                    "rewrite file→partition map missed (URI decode "
+                    "drift); aborted unpublished"
+                )
+            if not m.get("dv") and n_rows(files) != n_rows(added):
+                raise RuntimeError(
+                    f"rewrite would lose rows ({n_rows(files)} in, "
+                    f"{n_rows(added)} out); aborted unpublished"
+                )
+        except BaseException:
+            _shutil.rmtree(data_dir, ignore_errors=True)
+            raise
+    manifest = _next_manifest(
+        m, v, kept, added,
+        meta=meta(added) if callable(meta) else meta,
+        merge_meta=merge_meta,
+        **({} if kept else {"dv": None, "renames": None}),
+    )
+    _publish_manifest(path, v, manifest, expected_current, prev=m)
+    return v
+
+
 def delete_rows_dv(
     spark: SparkSession,
     path: str,
@@ -1362,9 +1458,11 @@ def delete_rows_dv(
     localize_clone (minus the rewritten externals). That is always
     sound: DV rows naming files a later commit rewrote or dropped can
     never match a scan of that commit's files (see
-    _read_files_as_snapshot). The rewrites that fold the DV into new
-    files (materialize_deletes, full zorder_cluster) commit without
-    one.
+    _read_files_as_snapshot). The maintenance rewrites read through
+    the DV (_rewrite_files): the ones that replace every file
+    (materialize_deletes, zorder_cluster, and an incremental z-order
+    with no baseline) commit without one; an incremental z-order that
+    keeps its clustered layer carries it.
 
     DV-AWARE INDEX MAINTENANCE (VERDICT r12 task 7): when the table
     has bloom/stats index pointers, the commit also computes
@@ -1444,40 +1542,21 @@ def materialize_deletes(
     spark: SparkSession, path: str, meta: dict | None = None
 ) -> int:
     """Fold the current deletion vector into a fresh DV-free snapshot
-    (Delta's REORG TABLE ... APPLY (PURGE)): one full read through the
-    anti-join, one rewrite commit. Run before compact_files /
-    purge_rows, or when accumulated DVs make the per-read anti-join
-    tax noticeable. No-op (returns the current version) when no DV is
-    present. The rewrite keeps the table's layout: each live row is
-    tagged with its file's partition value (the directory column is
-    not in the files, so a plain snapshot read cannot recover it) and
-    lands under the same partition, and the manifest follows the
-    snapshot (_next_manifest), so partition_col/ts_col carry. An
-    unpartitioned table is the same scan and write with no tag."""
-    from urllib.parse import unquote
-
+    (Delta's REORG TABLE ... APPLY (PURGE)): every live file is
+    rewritten through the one maintenance rewrite (_rewrite_files),
+    with no shape — the live rows land under their files' partitions,
+    clustered per partition, and the manifest follows the snapshot, so
+    the layout carries while the DV and the rename map go. Run before
+    compact_files / purge_rows, or when accumulated DVs make the
+    per-read anti-join tax noticeable. No-op (returns the current
+    version) when no DV is present."""
     m = _manifest(path)
     if not m.get("dv"):
         return m["version"]
-    v = m["version"] + 1
-    pc = _layout_col(m)
-    live = _live_tagged(spark, path, m)
-    added: dict = {}
-    if live is not None:
-        if pc:
-            pairs = []
-            for f in _live_files(m):
-                pairs += [F.lit(f), F.lit(unquote(m["partitions"][f]))]
-            live = live.withColumn(pc, F.create_map(*pairs)[F.col("__dv_file")])
-        added = _write_version_files(
-            path, v, live.drop("__dv_file", "__dv_pos"), pc
-        )
-    manifest = _next_manifest(
-        m, v, [], added, dv=None, renames=None,  # rewritten: logical names
+    return _rewrite_files(
+        spark, path, m, m["files"],
         meta={**(meta or {}), "materialized_dv_rows": m["dv"]["rows"]},
     )
-    _publish_manifest(path, v, manifest, None, prev=m)
-    return v
 
 
 def update_rows_mor(
@@ -3726,9 +3805,10 @@ def _norm_input_path() -> F.Column:
     scripts/session_sink_growth.py r16) and taxes every DV-table
     read the same way. The URI is percent-encoded; pre-escape '+'
     (the one char url_decode mishandles — it decodes to space),
-    url-decode, strip the scheme. Shared by purge_rows and
-    compact_files: the two file-rewrite passes key broadcast maps on
-    this normalization, and drift between them is exactly the
+    url-decode, strip the scheme. Shared by every tagged scan
+    (_scan_with_renames, the bloom build) and purge_rows: the file
+    rewrites (purge_rows, _rewrite_files) key literal maps on the
+    paths it yields, and drift between the two sides is exactly the
     silent-row-loss their __HIVE_DEFAULT_PARTITION__ sentinels guard
     against."""
     decoded = F.url_decode(
@@ -3976,45 +4056,45 @@ def compact_files(
 ) -> dict:
     """Small-file compaction — Delta OPTIMIZE / Iceberg rewrite_data_files
     for this table format. Streaming sinks and frequent small commits
-    leave partitions holding many sub-target files; at 100 TB that is
-    the classic scan killer (per-file open/footer/seek costs dominate,
-    and task counts explode). Compaction bin-packs each partition's
-    files into ~target_bytes outputs and commits the result as version
-    N+1 whose ROWS ARE IDENTICAL — only the file layout changes.
+    leave many sub-target files; at 100 TB that is the classic scan
+    killer (per-file open/footer/seek costs dominate, and task counts
+    explode). Compaction bin-packs them into ~target_bytes outputs and
+    commits the result as version N+1 whose ROWS ARE IDENTICAL — only
+    the file layout changes.
 
-    Shape (the purge_rows discipline — never a per-file driver loop):
-    - PLAN: driver-side manifest + file-size metadata only. A partition
-      is selected iff it has ≥ min_files files and bin-packing would
-      REDUCE its file count (planned outputs = ceil(total/target)).
-    - REWRITE: one Spark job per distinct footer schema (1 for an
-      unevolved table): read that group's files, tag each row with its
-      partition via a broadcast literal file→partition map (decoded
-      input_file_name), salt rows inside each partition to its planned
-      output count (row-content xxhash64 — deterministic), and write
-      everything in a single partitionBy action into a UNIQUE
-      per-attempt data dir (never clobbers a concurrent OCC writer's
-      in-flight v{N+1}; torn-attempt debris is unreferenced orphans
-      vacuum reclaims).
-    - VERIFY + PUBLISH: before the pointer swap, parquet footer
-      row-counts (driver-side metadata, no job) must show rewritten ==
-      selected — a lost-rows rewrite aborts unpublished. Untouched
-      partitions' files carry into the new manifest BY REFERENCE;
-      original files stay on disk for older versions until `vacuum`.
+    - PLAN (driver-side manifest + file sizes only, one policy for
+      every layout): files group by partition tag — an unpartitioned
+      table is one group. A group's files below target_bytes are
+      selected iff there are ≥ min_files of them and bin-packing
+      REDUCES their count (planned outputs = ceil(bytes/target)).
+      Everything else carries by reference.
+    - REWRITE: the one maintenance rewrite (_rewrite_files) reads the
+      selected files through the snapshot scan, so outputs carry the
+      current logical schema (renamed and widened columns included),
+      and its shape salts rows inside each partition to the planned
+      output count (row-content xxhash64 — deterministic) before one
+      partitioned write into a unique per-attempt directory. Its
+      guards (partition-map sentinel, footer row counts) abort a bad
+      rewrite unpublished.
+    - PUBLISH: from the snapshot read, prior meta carried forward — a
+      rows-identical rewrite keeps the streaming sinks' replay
+      batch_id and an index's model. Replaced files stay on disk for
+      older versions until `vacuum`.
 
-    Returns {"version", "files_in", "files_out", "partitions"} — the
-    telemetry an OPTIMIZE scheduler keys retries/alerts off. A no-gain
-    table returns the current version unchanged (no empty commit).
+    Refuses a snapshot with a deletion vector (the rewrite shifts row
+    ordinals the DV keys on): run materialize_deletes first. Returns
+    {"version", "files_in", "files_out", "partitions"} — the telemetry
+    an OPTIMIZE scheduler keys retries/alerts off. A no-gain table
+    returns the current version unchanged (no empty commit).
     """
     import math as _math
-    import shutil as _shutil
     from urllib.parse import unquote
 
-    import pyarrow.parquet as _pq
-
     _occ_check(path, expected_current)
+    nothing = {"files_in": 0, "files_out": 0, "partitions": []}
     if current_version(path) == 0:
         # nothing committed yet (e.g. a drained-empty streaming table)
-        return {"version": 0, "files_in": 0, "files_out": 0, "partitions": []}
+        return {"version": 0, **nothing}
     m = _manifest(path)
     if m.get("dv"):
         raise ValueError(
@@ -4022,155 +4102,53 @@ def compact_files(
             "bin-pack rewrite shifts row ordinals, which would corrupt "
             "the position-keyed DV; run materialize_deletes first"
         )
-    part_col = _layout_col(m)
-    if part_col is None:
-        # UNPARTITIONED table (plain commit_version chain — e.g. the
-        # streaming sinks' per-micro-batch commits): the whole table is
-        # one bin-pack group; no per-row tagging needed
-        return _compact_unpartitioned(
-            spark, path, m, target_bytes, min_files, meta, expected_current
-        )
-    parts = m["partitions"]
-    by_part: dict[str, list[str]] = {}
+    pc = _layout_col(m)
+    tags = m.get("partitions", {})
+    groups: dict = {}
     for f in m["files"]:
-        pval = parts.get(f)
-        if pval is not None:
-            by_part.setdefault(pval, []).append(f)
-
-    plan: dict[str, tuple[list[str], int]] = {}
-    for pval, fs in sorted(by_part.items()):
-        if len(fs) < min_files:
-            continue
-        total = sum(os.path.getsize(os.path.join(path, f)) for f in fs)
-        n_out = max(1, _math.ceil(total / target_bytes))
-        if n_out < len(fs):
-            plan[pval] = (sorted(fs), n_out)
+        size = os.path.getsize(os.path.join(path, f))
+        # a file with no tag under a layout (written before the
+        # table had one) has no partition to rewrite into: it carries
+        if size < target_bytes and (tags.get(f) is not None or not pc):
+            groups.setdefault(tags.get(f), []).append((f, size))
+    plan: dict = {}
+    for tag, fs in groups.items():
+        n_out = max(1, _math.ceil(sum(size for _, size in fs) / target_bytes))
+        if len(fs) >= min_files and n_out < len(fs):
+            plan[tag] = ([f for f, _ in fs], n_out)
     if not plan:
-        return {
-            "version": m["version"],
-            "files_in": 0,
-            "files_out": 0,
-            "partitions": [],
-        }
+        return {"version": m["version"], **nothing}
+    selected = sorted(f for fs, _ in plan.values() for f in fs)
+    n_total = sum(n for _, n in plan.values())
 
-    selected = [f for fs, _ in plan.values() for f in fs]
-    sel_set = set(selected)
-    carried = [f for f in m["files"] if f not in sel_set]
-    abs_of = {rel: os.path.abspath(os.path.join(path, rel)) for rel in selected}
-    v = m["version"] + 1
-    # UNIQUE output dir per attempt (manifests reference arbitrary
-    # relpaths, so outputs need not live at data/v{N}): a torn earlier
-    # attempt's debris is simply never referenced (vacuum reclaims it),
-    # and — unlike clearing data/v{N+1} in place — this can never
-    # delete a concurrent OCC writer's in-flight files for the
-    # contested version number; the loser of the race leaves only
-    # harmless orphans, the protocol's standing guarantee
-    data_dir = os.path.join(path, "data", f"v{v}-compact-{uuid.uuid4().hex[:8]}")
-
-    # manifest partition tags are the Hive-ESCAPED directory strings
-    # (_partition_of parses dir names); partitionBy re-escapes its
-    # column values, so tag rows with the UNESCAPED value — the write
-    # round-trips it back to the identical directory name (idempotent
-    # for the digit-only p_date/cell values, load-bearing for values
-    # with escaped characters)
-    raw_of_tag = {pval: unquote(pval) for pval in plan}
-
-    # one job per footer schema (evolved tables must not be forced
-    # through a mergeSchema union — purge_rows' reasoning); append mode
-    # lets multiple groups land in the same version directory
-    groups = _footer_schema_groups(selected, abs_of)
-    part_of_file = {abs_of[rel]: raw_of_tag[parts[rel]] for rel in selected}
-    n_out_of_raw = {raw_of_tag[pval]: n for pval, (_, n) in plan.items()}
-    try:
-        for rels in groups.values():
-            pf_pairs, no_pairs = [], []
-            for rel in rels:
-                pf_pairs.extend(
-                    [F.lit(abs_of[rel]), F.lit(part_of_file[abs_of[rel]])]
-                )
-            for pval, n in n_out_of_raw.items():
-                no_pairs.extend([F.lit(pval), F.lit(n)])
-            df = _normalize_renamed(
-                spark.read.parquet(*[abs_of[r] for r in rels]), m
-            )
-            cols = df.columns
-            tagged = df.withColumn(
-                part_col, F.create_map(*pf_pairs)[_norm_input_path()]
-            ).withColumn(
-                "_salt",
-                F.pmod(
-                    F.xxhash64(*cols), F.create_map(*no_pairs)[F.col(part_col)]
-                ),
-            )
-            # planned outputs for THIS group = sum of n_out over the
-            # DISTINCT partitions represented (summing per file would
-            # count a 6-file partition's n_out six times, spawning
-            # empty shuffle tasks — output count stays bounded by the
-            # salt either way, but the task inflation is waste)
-            total_out = sum(
-                n_out_of_raw[p]
-                for p in {part_of_file[abs_of[r]] for r in rels}
-            )
-            (
-                tagged.repartition(
-                    max(total_out, 1), F.col(part_col), F.col("_salt")
-                )
-                .drop("_salt")
-                .write.partitionBy(part_col)
-                .mode("append")
-                .parquet(data_dir)
-            )
-
-        new_files = _walk_rel_parquet(data_dir, path)
-        # sentinel (purge_rows' discipline): a NULL partition tag means
-        # the URI→partition map missed — rows landed in the Hive default
-        # partition and the layout is garbage; abort unpublished
-        if any("__HIVE_DEFAULT_PARTITION__" in f for f in new_files):
-            raise RuntimeError(
-                "compaction file→partition map missed (URI decode drift); aborted unpublished"
-            )
-        # row-preservation guard (footer metadata, no Spark job): a
-        # rewrite that lost rows must never publish
-        rows_in = sum(
-            _pq.ParquetFile(abs_of[rel]).metadata.num_rows for rel in selected
+    def shape(df: DataFrame) -> DataFrame:
+        # salt each partition's rows over its planned output count;
+        # rows carry the UNESCAPED tag, as _rewrite_files writes them
+        n_col = F.lit(n_total)
+        if pc:
+            pairs = [F.lit(x) for t, (_, n) in plan.items() for x in (unquote(t), n)]
+            n_col = F.create_map(*pairs)[F.col(pc)]
+        salt = F.pmod(F.xxhash64(*[c for c in df.columns if c != pc]), n_col)
+        return (
+            df.withColumn("_salt", salt)
+            .repartition(n_total, *([pc] if pc else []), "_salt")
+            .drop("_salt")
         )
-        rows_out = sum(
-            _pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in new_files
-        )
-        if rows_in != rows_out:
-            raise RuntimeError(
-                f"compaction would lose rows ({rows_in} in, {rows_out} out); aborted unpublished"
-            )
-    except BaseException:
-        # abort cleanly: the unpublished version dir must not poison a
-        # retry (and is invisible to every reader — pointer still at N)
-        _shutil.rmtree(data_dir, ignore_errors=True)
-        raise
 
-    # prior meta carries forward (append_version_clustered's
-    # contract): a compaction is a rows-identical rewrite, so the
-    # streaming sinks' replay batch_id and the IVF-PQ index's
-    # model/fingerprint must survive it
-    manifest = _next_manifest(
-        m, v, carried, {f: _partition_of(f, part_col) for f in new_files},
-        merge_meta=True,
-        meta={
-            **(meta or {}),
-            "compaction": {
-                "partitions": sorted(plan),
-                "files_in": len(selected),
-                "files_out": len(new_files),
-            },
-        },
-    )
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return {
-        "version": v,
+    stats = {
         "files_in": len(selected),
-        "files_out": len(new_files),
-        "partitions": sorted(plan),
+        "partitions": sorted(t for t in plan if t is not None),
     }
+
+    def telemetry(added: dict) -> dict:
+        stats["files_out"] = len(added)
+        return {**(meta or {}), "compaction": dict(stats)}
+
+    v = _rewrite_files(
+        spark, path, m, selected, shape, meta=telemetry, merge_meta=True,
+        expected_current=expected_current,
+    )
+    return {"version": v, **stats}
 
 
 def _publish_manifest(
@@ -4382,114 +4360,6 @@ def _publish_manifest_locked(
     # an object-store CAS implementation enforces the same contract
     # with a conditional put and no lock.
     _POINTER_CAS.swap(path, cur_now, v)
-
-
-def _normalize_renamed(df: DataFrame, m: dict) -> DataFrame:
-    """Footer-schema rewrites (compaction) read files under their
-    PHYSICAL column names; alias any renamed physical column to its
-    current logical name so rewrite OUTPUTS always carry logical
-    names — rewritten files then need no rename-map entry (they are
-    new relpaths, absent from every immutable sidecar list), keeping
-    the map's invariant: map ∩ manifest.files = files that physically
-    carry an old name."""
-    ren = m.get("renames") or {}
-    out = df
-    for to, entries in ren.items():
-        for e in entries:
-            if e["from"] in out.columns and to not in out.columns:
-                out = out.withColumnRenamed(e["from"], to)
-    return out
-
-
-def _compact_unpartitioned(
-    spark: SparkSession,
-    path: str,
-    m: dict,
-    target_bytes: int,
-    min_files: int,
-    meta: dict | None,
-    expected_current: int | None,
-) -> dict:
-    """compact_files' unpartitioned branch: the table is one bin-pack
-    group. Selected = every file smaller than target (full-size files
-    are already optimal and carry by reference); one rewrite job per
-    footer schema, each `repartition(planned outputs)` → coalesced
-    files. Same publication guards as the partitioned path: unique
-    per-attempt output dir (never clobbers a concurrent writer; torn
-    debris is unreferenced orphans for vacuum), footer row-count check
-    before the pointer swap, prior meta carried forward, abort cleans
-    up its own dir."""
-    import math as _math
-    import shutil as _shutil
-
-    import pyarrow.parquet as _pq
-
-    small = sorted(
-        f
-        for f in m["files"]
-        if os.path.getsize(os.path.join(path, f)) < target_bytes
-    )
-    total = sum(os.path.getsize(os.path.join(path, f)) for f in small)
-    n_out = max(1, _math.ceil(total / target_bytes))
-    if len(small) < min_files or n_out >= len(small):
-        return {
-            "version": m["version"],
-            "files_in": 0,
-            "files_out": 0,
-            "partitions": [],
-        }
-    small_set = set(small)
-    carried = [f for f in m["files"] if f not in small_set]
-    abs_of = {rel: os.path.abspath(os.path.join(path, rel)) for rel in small}
-    v = m["version"] + 1
-    data_dir = os.path.join(path, "data", f"v{v}-compact-{uuid.uuid4().hex[:8]}")
-    try:
-        for rels in _footer_schema_groups(small, abs_of).values():
-            share = sum(os.path.getsize(abs_of[r]) for r in rels) / max(total, 1)
-            g_out = max(1, round(n_out * share))
-            (
-                _normalize_renamed(
-                    spark.read.parquet(*[abs_of[r] for r in rels]), m
-                )
-                .repartition(g_out)
-                .write.mode("append")
-                .parquet(data_dir)
-            )
-        new_files = _walk_rel_parquet(data_dir, path)
-        rows_in = sum(
-            _pq.ParquetFile(abs_of[rel]).metadata.num_rows for rel in small
-        )
-        rows_out = sum(
-            _pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in new_files
-        )
-        if rows_in != rows_out:
-            raise RuntimeError(
-                f"compaction would lose rows ({rows_in} in, {rows_out} out); aborted unpublished"
-            )
-    except BaseException:
-        _shutil.rmtree(data_dir, ignore_errors=True)
-        raise
-
-    manifest = _next_manifest(
-        m, v, carried, dict.fromkeys(new_files),
-        merge_meta=True,
-        meta={
-            **(meta or {}),
-            "compaction": {
-                "partitions": [],
-                "files_in": len(small),
-                "files_out": len(new_files),
-            },
-        },
-    )
-    _publish_manifest(path, v, manifest, expected_current, prev=m)
-    return {
-        "version": v,
-        "files_in": len(small),
-        "files_out": len(new_files),
-        "partitions": [],
-    }
 
 
 def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6242,33 +6112,66 @@ def zorder_cluster(
     bits: int = ZORDER_BITS,
     meta: dict | None = None,
 ) -> int:
-    """Rewrite the current snapshot Z-ORDERED by `cols` and commit it
-    as the next version, refreshing the stats index of every
-    clustered column (write-time maintenance — the probes are the
-    whole point of the layout). One full-table rewrite, like any
-    OPTIMIZE: cost O(table) once, amortized over every multi-column
-    range probe after it. Quantile boundaries come from ONE
-    approxQuantile pass (all columns together); the z-value is a
-    JVM shift/or tree; the layout lands via repartitionByRange +
-    sortWithinPartitions on z, so file boundaries follow the curve.
-    DV-bearing snapshots are folded first (the rewrite materializes
-    deletes — positions change, so carrying the DV would corrupt it;
-    the committed manifest is DV-free, pinned in
-    tests/test_versioned.py). Refuses non-numeric cluster columns
-    (quantile bucketing is numeric; string clustering needs a
-    collation-aware curve this engine does not claim)."""
-    m = _manifest(path)
-    if m["version"] == 0:
+    """OPTIMIZE ZORDER BY `cols`: rewrite every live file of the
+    current snapshot through the one maintenance rewrite
+    (_rewrite_files) with the z-layout (_zorder_frame) as its shape,
+    and create the stats index of every clustered column that has none
+    (the probes are the whole point of the layout). One full-table
+    rewrite, like any OPTIMIZE: cost O(table) once, amortized over
+    every multi-column range probe after it. The rewrite reads through
+    the snapshot scan, so deletes materialize and the published
+    manifest has no DV; it publishes from the snapshot it read, so a
+    commit that lands during the rewrite aborts it
+    (ConcurrentCommitError) instead of being overwritten. The commit
+    records `zorder_by`, `zorder_bits` and `zorder_version` (the
+    version it publishes — the baseline of zorder_cluster_incremental).
+    Refuses an empty table, a partitioned layout (directory-partitioned
+    layouts cluster within partitions at write time) and non-numeric
+    cluster columns (quantile bucketing is numeric; string clustering
+    needs a collation-aware curve this engine does not claim)."""
+    m = _zorder_snapshot(path)
+    return _zorder_rewrite(spark, path, m, m["files"], cols, bits, target_files, meta)
+
+
+def _zorder_snapshot(path: str) -> dict:
+    """The current snapshot, if both z-order passes accept it."""
+    if current_version(path) == 0:
         raise ValueError("cannot z-order an empty table")
-    df = read_version(spark, path)  # DV-filtered: deletes materialize
-    ordered = _zorder_frame(df, cols, bits, target_files)
-    return commit_version(
-        spark,
-        path,
-        ordered,
-        meta={**(meta or {}), "zorder_by": cols, "zorder_bits": bits},
-        stats_cols=cols,
+    m = _manifest(path)
+    if _layout_col(m):
+        raise ValueError(
+            "z-order supports unpartitioned snapshots (directory-"
+            "partitioned layouts cluster within partitions at write time)"
+        )
+    return m
+
+
+def _zorder_rewrite(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    files: list[str],
+    cols: list[str],
+    bits: int,
+    target_files: int,
+    meta: dict | None,
+    expected_current: int | None = None,
+) -> int:
+    """Rewrite `files` of `m` z-ordered by `cols` and create the
+    clustered columns' stats indexes."""
+    v = _rewrite_files(
+        spark, path, m, files,
+        lambda df: _zorder_frame(df, cols, bits, target_files),
+        meta={
+            **(meta or {}),
+            "zorder_by": cols,
+            "zorder_bits": bits,
+            "zorder_version": m["version"] + 1,
+        },
+        expected_current=expected_current,
     )
+    _maintain_indexes(spark, path, v, cols)
+    return v
 
 
 def _zorder_frame(
@@ -6323,72 +6226,40 @@ def zorder_cluster_incremental(
     well-clustered layer; pruning power degrades only with layer
     COUNT, and a periodic full zorder_cluster resets it).
 
-    Baseline detection walks commit metas backward for the most
-    recent `zorder_by == cols` commit (manifest_meta — scalar inline
-    reads, no chain resolution) and treats its files ∩ current files
-    as clustered; everything else is the unclustered tail. No such
-    commit (or vacuumed history) → falls back to ONE full
-    zorder_cluster. Nothing unclustered → no-op (current version
-    returned, no empty commit). The unclustered subset is read
-    DV-FILTERED, so its deletes materialize into the new layer, while
+    The baseline is the version the last z-order published (its
+    `zorder_version` meta, one latest_meta read — appends and
+    compactions carry that meta forward, so they are never mistaken
+    for a z-order): that version's files still current are clustered,
+    the rest is the unclustered tail, which the one maintenance
+    rewrite (_rewrite_files) replaces with a z-ordered layer while
+    the clustered files carry by reference. The tail is read through
+    the snapshot scan, so its deletes materialize into the new layer;
     the carried DV pointer stays correct for carried files (DV rows
-    naming the rewritten files reference names absent from the new
-    manifest — inert by the carry-safety contract). Stats refresh is
-    incremental: prior sidecar rows carry, only the new layer's
-    footers are harvested."""
+    naming rewritten files are inert). No baseline over `cols` (or
+    its manifest vacuumed) → the whole snapshot is rewritten, as
+    zorder_cluster does. Nothing unclustered → no-op (current version
+    returned, no empty commit). Same refusals as zorder_cluster."""
     _occ_check(path, expected_current)
-    m = _manifest(path)
-    if m["version"] == 0:
-        raise ValueError("cannot z-order an empty table")
-    if _layout_col(m):
-        raise ValueError(
-            "zorder_cluster_incremental supports unpartitioned "
-            "snapshots (directory-partitioned layouts cluster within "
-            "partitions at write time)"
-        )
+    m = _zorder_snapshot(path)
     clustered: set[str] = set()
-    for v in range(m["version"], 0, -1):
-        try:
-            if manifest_meta(path, v).get("zorder_by") == cols:
-                clustered = set(_manifest(path, v)["files"]) & set(m["files"])
-                break
-        except FileNotFoundError:
-            break  # vacuumed history: no provable baseline below here
-    else:
-        v = 0
-    if v == 0 or not clustered:
-        return zorder_cluster(
-            spark, path, cols, target_files=target_files, bits=bits, meta=meta
-        )
-    unclustered = [f for f in m["files"] if f not in clustered]
-    if not unclustered:
+    try:
+        zv = latest_meta(path, "zorder_version")
+        base = _manifest(path, zv) if zv else None
+    except FileNotFoundError:
+        base = None  # vacuumed history: no provable baseline
+    if base and base["meta"].get("zorder_by") == cols:
+        clustered = set(base["files"]) & set(m["files"])
+    tail = [f for f in m["files"] if f not in clustered]
+    if not tail:
         return m["version"]  # fully clustered: nothing to do
-    sub = _read_files_as_snapshot(
-        spark, m, [os.path.join(path, f) for f in unclustered], path=path
+    if clustered:
+        meta = {
+            **(meta or {}),
+            "zorder_incremental": {"rewrote": len(tail), "carried": len(clustered)},
+        }
+    return _zorder_rewrite(
+        spark, path, m, tail, cols, bits, target_files, meta, expected_current
     )
-    ordered = _zorder_frame(sub, cols, bits, target_files)
-    nv = m["version"] + 1
-    data_dir = os.path.join(path, "data", f"v{nv}-zinc-{uuid.uuid4().hex[:8]}")
-    ordered.write.mode("overwrite").parquet(data_dir)
-    new_files = dict.fromkeys(_walk_rel_parquet(data_dir, path))
-    meta = {
-        **(meta or {}),
-        "zorder_by": cols,
-        "zorder_bits": bits,
-        "zorder_incremental": {
-            "rewrote": len(unclustered),
-            "carried": len(clustered),
-        },
-    }
-    _publish_manifest(
-        path,
-        nv,
-        _next_manifest(m, nv, list(clustered), new_files, meta=meta),
-        expected_current,
-        prev=m,
-    )
-    _maintain_indexes(spark, path, nv, cols)
-    return nv
 
 
 def zorder_skipping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

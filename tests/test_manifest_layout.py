@@ -118,6 +118,8 @@ def test_layout_survives_every_commit_path(spark, tmp_path, layout):
     else:
         V.zorder_cluster_incremental(spark, path, ["k"])
         check("zorder_cluster_incremental")
+        V.zorder_cluster(spark, path, ["val", "k"], target_files=2)
+        check("zorder_cluster")
 
     before_append = V.current_version(path)
     saved = {k: list(r) for k, r in ref.items()}
@@ -213,3 +215,20 @@ def test_append_without_layout_column_is_unpartitioned(spark, tmp_path, op):
         assert V.read_version(spark, path).columns == ["k"]
     assert sorted(r.k for r in V.read_version(spark, path).collect()) == want
     assert "partitions" not in m and "partition_col" not in m
+
+
+@pytest.mark.parametrize("layout", ["day", "clustered"])
+def test_zorder_refuses_partitioned_layouts(spark, tmp_path, layout):
+    """A full zorder_cluster once rewrote a partitioned table as an
+    unpartitioned one: the layout column, ts_col and every partition
+    tag were gone from the manifest. Both z-order passes now refuse a
+    partitioned layout and commit nothing."""
+    path = str(tmp_path / layout)
+    os.makedirs(path)
+    _create(spark, path, layout, _rows(range(12)))
+    for zorder in (V.zorder_cluster, V.zorder_cluster_incremental):
+        with pytest.raises(ValueError, match="unpartitioned"):
+            zorder(spark, path, ["k"])
+    m = V._manifest(path)
+    assert m["version"] == 1
+    assert (V._layout_col(m), m.get("ts_col")) == LAYOUTS[layout]

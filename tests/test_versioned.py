@@ -2596,6 +2596,114 @@ def test_zorder_incremental_rewrites_only_new_files(spark, tmp_path):
     assert {r.event_id for r in rows} == want
 
 
+def _kv(spark, keys, n_files):
+    return spark.createDataFrame(
+        [(k, float(k % 7)) for k in keys], "k int, v double"
+    ).repartition(n_files)
+
+
+def test_zorder_incremental_clusters_an_append(spark, tmp_path):
+    """An append merges prior meta forward, so it carries `zorder_by`;
+    the incremental pass once took the append itself as its baseline
+    and left the appended files unclustered. The baseline is now the
+    version the last z-order published, so the pass rewrites exactly
+    the appended files and carries the clustered layer."""
+    path = str(tmp_path / "zapp")
+    os.makedirs(path)
+    versioned.commit_version(spark, path, _kv(spark, range(40), 4))
+    assert versioned.zorder_cluster_incremental(
+        spark, path, ["k", "v"], target_files=2) == 2
+    layer = set(versioned._manifest(path)["files"])
+    versioned.append_version_clustered(
+        spark, path, _kv(spark, range(40, 52), 3), None)
+    appended = set(versioned._manifest(path)["files"]) - layer
+    assert len(appended) == 3
+
+    assert versioned.zorder_cluster_incremental(
+        spark, path, ["k", "v"], target_files=1) == 4
+    m = versioned._manifest(path)
+    assert layer <= set(m["files"]) and appended.isdisjoint(m["files"])
+    assert m["meta"]["zorder_incremental"] == {
+        "rewrote": 3, "carried": len(layer)}
+    got = sorted(r.k for r in versioned.read_version(spark, path).collect())
+    assert got == list(range(52))
+    # fully clustered again: no commit
+    assert versioned.zorder_cluster_incremental(spark, path, ["k", "v"]) == 4
+    # the baseline version vacuumed: the pass rewrites the whole table
+    versioned.append_version_clustered(
+        spark, path, _kv(spark, range(52, 55), 1), None)
+    versioned.vacuum(path, keep_from=5)
+    assert versioned.zorder_cluster_incremental(spark, path, ["k", "v"]) == 6
+    m = versioned._manifest(path)
+    assert "zorder_incremental" not in m["meta"] and not layer & set(m["files"])
+
+
+def test_zorder_cluster_aborts_on_a_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A full z-order once planned its version after its own read and
+    quantile pass, so an append landing in between was overwritten
+    with no error. The rewrite now publishes from the snapshot it
+    read: the publish raises ConcurrentCommitError and the appended
+    rows stay current."""
+    path = str(tmp_path / "zrace")
+    os.makedirs(path)
+    versioned.commit_version(spark, path, _kv(spark, range(40), 4))
+    shape = versioned._zorder_frame
+
+    def racing(df, *args):
+        versioned.append_version_clustered(
+            spark, path, _kv(spark, range(40, 50), 1), None)
+        return shape(df, *args)
+
+    monkeypatch.setattr(versioned, "_zorder_frame", racing)
+    with pytest.raises(versioned.ConcurrentCommitError):
+        versioned.zorder_cluster(spark, path, ["k", "v"], target_files=2)
+    assert versioned.current_version(path) == 2
+    assert versioned.read_version(spark, path).count() == 50
+
+
+def test_compaction_across_schema_evolution_keeps_every_version(
+    spark, tmp_path
+):
+    """Compaction reads its files through the snapshot scan, so files
+    written before ADD COLUMN and before a type widening compact into
+    files that carry the current logical schema, and both the current
+    and the pre-evolution version read unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "cev")
+    os.makedirs(path)
+    versioned.commit_version(spark, path, _kv(spark, range(20), 3))
+    v1 = sorted(map(tuple, versioned.read_version(spark, path, 1).collect()))
+    versioned.evolve_schema(spark, path, [("note", "string")])
+    versioned.append_version_clustered(
+        spark, path,
+        spark.createDataFrame(
+            [(k, 1.0, f"n{k}") for k in range(20, 30)],
+            "k int, v double, note string"), None)
+    versioned.widen_column_type(spark, path, "k", "bigint")
+    versioned.append_version_clustered(
+        spark, path,
+        spark.createDataFrame(
+            [(k, 2.0, None) for k in range(30, 40)],
+            "k bigint, v double, note string"), None)
+    before = sorted(map(tuple, versioned.read_version(spark, path).collect()))
+    m = versioned._manifest(path)
+
+    r = versioned.compact_files(spark, path)
+    assert r["files_in"] == len(m["files"]) and r["files_out"] == 1
+    after = versioned._manifest(path)
+    assert after["version"] == m["version"] + 1
+    assert sorted(map(tuple, versioned.read_version(spark, path).collect())) == before
+    assert sorted(map(tuple, versioned.read_version(spark, path, 1).collect())) == v1
+    for f in after["files"]:
+        schema = pq.read_schema(os.path.join(path, f))
+        assert schema.names == ["k", "v", "note"]
+        assert schema.field("k").type == pa.int64()
+
+
 def test_cdf_partition_pruning_is_exact(spark, tmp_path):
     """COW-partitioned CDF: the diff prunes — in pure metadata — to
     partitions whose file sets differ, and its output equals the
@@ -3578,6 +3686,28 @@ def test_shallow_clone_lifecycle(spark, tmp_path):
     import pytest
     with pytest.raises(ValueError, match="already has commits"):
         versioned.clone_table(spark, src, dst)
+
+
+def test_compaction_on_a_shallow_clone_keeps_partitions(spark, tmp_path):
+    """Compaction works on a shallow clone as-is: the rewrite's scan
+    keys a file outside the table by its absolute path, and the
+    partition map follows, so the clone's day layout survives."""
+    import datetime
+
+    src = str(tmp_path / "csrc")
+    dst = str(tmp_path / "cdst")
+    os.makedirs(src)
+    rows = [(k, datetime.datetime(2024, 1, 1 + k % 3, 12)) for k in range(30)]
+    df = spark.createDataFrame(rows, "k int, ts timestamp").repartition(4)
+    versioned.commit_version_partitioned(spark, src, df, cluster=False)
+    versioned.clone_table(spark, src, dst)
+    r = versioned.compact_files(spark, dst)
+    assert r["files_out"] == 3 and len(r["partitions"]) == 3
+    m = versioned._manifest(dst)
+    assert not any(f.startswith("..") for f in m["files"])
+    assert sorted(m["partitions"].values()) == r["partitions"]
+    got = versioned.read_version(spark, dst).collect()
+    assert sorted(row.k for row in got) == list(range(30))
 
 
 def test_shallow_clone_dv_rename_and_localize(spark, tmp_path):
