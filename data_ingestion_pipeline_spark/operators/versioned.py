@@ -321,6 +321,47 @@ class IndexMaintenanceError(RuntimeError):
         self.__cause__ = cause
 
 
+# ---- table properties ----------------------------------------------
+# A table property is one JSON file at the table root that is not
+# manifest state: CHECK constraints, retired column names
+# (_RETIRED_COLS.json), identity high-water marks (_IDENTITY.json) and
+# snapshot tags (_TAGS.json). Every write is an atomic replace, so a
+# read takes no lock; every write is a read-modify-write under the
+# property's own flock, so two writers never lose each other's update.
+# On an object store the lock maps to a conditional put on the
+# property object, the same substitution the manifest publish makes.
+
+
+def _read_property(path: str, name: str, default):
+    """Table property `name`'s value, or `default` when the table has
+    none."""
+    try:
+        with open(os.path.join(path, name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return default
+
+
+def _update_property(path: str, name: str, default, fn):
+    """The one write of a table property: under an exclusive flock on
+    `name`.lock, read the value (`default` when absent), replace it
+    atomically with fn(value) when that differs, and return the new
+    value. `fn` may raise to leave the property unchanged; it must not
+    update the same property (the flock is not re-entrant)."""
+    import fcntl
+
+    with open(os.path.join(path, name + ".lock"), "a") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        try:
+            old = _read_property(path, name, default)
+            new = fn(old)
+            if new != old:
+                _atomic_json(os.path.join(path, name), new)
+            return new
+        finally:
+            fcntl.flock(fh, fcntl.LOCK_UN)
+
+
 # ---- CHECK constraints: write-time row contracts --------------------
 # Delta's `ALTER TABLE ADD CONSTRAINT ... CHECK (expr)` on this
 # format (reference analog: the consumer's range validation,
@@ -350,34 +391,32 @@ class ConstraintViolationError(RuntimeError):
 def table_constraints(path: str) -> dict[str, str]:
     """name → SQL expression of every live constraint (empty dict for
     an unconstrained table — the common case pays one stat call)."""
-    try:
-        with open(os.path.join(path, CONSTRAINTS_FILE)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return {}
+    return _read_property(path, CONSTRAINTS_FILE, {})
 
 
-def _constraints_lock(path: str):
-    """Exclusive advisory lock serializing constraint DDL on one
-    table: the read-modify-write of _CONSTRAINTS.json is otherwise a
-    lost-update hazard between two concurrent ADD/DROPs (ADVICE r13
-    low). flock on a sidecar lockfile — on a real object store this
-    maps to conditional-put on the constraints object, the same
-    substitution the manifest OCC documents."""
-    import fcntl
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _held():
-        fh = open(os.path.join(path, CONSTRAINTS_FILE + ".lock"), "a")
+def _check_snapshot(
+    spark: SparkSession, path: str, version: int, cons: dict, refusal: str
+) -> None:
+    """Refuse (ConstraintViolationError, ending with `refusal`) unless
+    snapshot `version` satisfies every constraint in `cons`: one
+    early-exit scan per constraint, NULL passing as in SQL CHECK. A
+    constraint the snapshot's schema cannot evaluate refuses too."""
+    snap = read_version(spark, path, version)
+    for cname in sorted(cons):
+        expr = cons[cname]
+        ok = F.coalesce(F.expr(expr), F.lit(True))
         try:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fh, fcntl.LOCK_UN)
-            fh.close()
-
-    return _held()
+            bad = snap.filter(~ok).limit(1).collect()
+        except Exception as e:  # noqa: BLE001 — analysis failure
+            raise ConstraintViolationError(
+                f"{_CHECK_MARKER} {cname!r} ({expr}) cannot be evaluated "
+                f"against v{version}'s schema; {refusal}"
+            ) from e
+        if bad:
+            raise ConstraintViolationError(
+                f"{_CHECK_MARKER} {cname!r} ({expr}) is violated by "
+                f"v{version} row {bad[0].asDict()}; {refusal}"
+            )
 
 
 def add_constraint(
@@ -390,46 +429,43 @@ def add_constraint(
     """Attach a CHECK constraint. Like Delta, the EXISTING snapshot
     must already satisfy it — validated with one early-exit scan
     before the constraint file swaps (a constraint the data violates
-    never becomes live). DDL-vs-DDL races are serialized by
-    _constraints_lock; DDL-vs-data-write races are bounded by an OCC
+    never becomes live). DDL-vs-DDL races are serialized by the
+    property lock; DDL-vs-data-write races are bounded by an OCC
     version check on BOTH sides of the validation scan (a commit
     landing mid-validation aborts the DDL — the scan's verdict no
     longer describes the current snapshot). Residual: a data write
     PLANNED before the swap but committing after enforces the old
     set — the same in-flight window Delta closes only by running
     both through one log."""
-    with _constraints_lock(path):
+
+    def add(cons: dict) -> dict:
         _occ_check(path, expected_current)
         v0 = current_version(path)
-        cons = table_constraints(path)
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
         if v0 > 0:
-            ok = F.coalesce(F.expr(expr), F.lit(True))
-            bad = read_version(spark, path, v0).filter(~ok).limit(1).collect()
-            if bad:
-                raise ConstraintViolationError(
-                    f"{_CHECK_MARKER} {name} ({expr}) is violated by "
-                    f"existing row {bad[0].asDict()}; not added"
-                )
+            _check_snapshot(spark, path, v0, {name: expr}, "not added")
         if current_version(path) != v0:
             raise ConcurrentCommitError(
                 f"table advanced past v{v0} during constraint "
                 "validation; retry add_constraint against the new "
                 "snapshot"
             )
-        cons[name] = expr
-        _atomic_json(os.path.join(path, CONSTRAINTS_FILE), cons)
+        return {**cons, name: expr}
+
+    _update_property(path, CONSTRAINTS_FILE, {}, add)
 
 
 def drop_constraint(
     path: str, name: str, expected_current: int | None = None
 ) -> None:
-    with _constraints_lock(path):
+    def drop(cons: dict) -> dict:
         _occ_check(path, expected_current)
-        cons = table_constraints(path)
-        del cons[name]
-        _atomic_json(os.path.join(path, CONSTRAINTS_FILE), cons)
+        if name not in cons:
+            raise ValueError(f"no such constraint {name!r}")
+        return {k: e for k, e in cons.items() if k != name}
+
+    _update_property(path, CONSTRAINTS_FILE, {}, drop)
 
 
 def _guard_constraints(df: DataFrame, path: str) -> DataFrame:
@@ -709,6 +745,134 @@ def _occ_check(path: str, expected_current: int | None) -> None:
         )
 
 
+def _column_ddl(
+    path: str,
+    expected_current: int | None,
+    change: Callable[[dict, object], dict | None],
+    *,
+    adds: tuple[str, ...] = (),
+    alters: str | None = None,
+    retire: bool = False,
+) -> int:
+    """The one metadata-only commit of the column DDLs (evolve_schema,
+    drop_column, widen_column_type, rename_column): the new manifest
+    references every current data file unchanged and records what
+    change(m, schema) returns — _next_manifest overrides (the new
+    schema, meta, ...) or None for a no-op, which commits nothing.
+
+    Guards, before anything is written. A name in `adds` must be new:
+    not in the schema, not retired, and not the layout column (a day
+    table's PART_COL is a directory column outside the schema; a
+    schema column of that name would never be read). The `alters`
+    column must exist and must not be the layout column or the day
+    layout's ts_col (writers derive the directory from it). A
+    `retire` DDL (DROP, RENAME) also refuses a column a live CHECK
+    constraint names.
+
+    A `retire` DDL retires `alters` BEFORE it publishes: retired-but-
+    still-live is harmless (retirement only gates ADDING a name),
+    while live-DDL-but-unretired would let evolve_schema re-add the
+    name and pre-DDL files resurrect its physical values under it
+    (ADVICE r14). If the publish aborts and is never retried the name
+    stays retired while the column stays live; unretire_column is the
+    audited escape hatch (ADVICE r15). After the publish the column's
+    index pointers follow the name added in its place (RENAME) or go
+    with it (DROP). `expected_current` is commit_version's OCC: the
+    DDL aborts before any shared-name write if another writer
+    published meanwhile. Returns the version the table is at."""
+    import re as _re
+
+    from pyspark.sql import types as T
+
+    _occ_check(path, expected_current)
+    cur = current_version(path)
+    if cur == 0:
+        raise ValueError("cannot evolve an empty table")
+    m = _manifest(path, cur)
+    schema = T.StructType.fromJson(json.loads(m["schema"]))
+    names = {f.name for f in schema.fields}
+    pc = _layout_col(m)
+    if alters is not None:
+        if alters not in names:
+            raise ValueError(f"no such column {alters!r}")
+        if alters == pc:
+            raise ValueError(
+                f"{alters!r} is the partition/cluster column; its values "
+                "live in the directory layout — repartition the table "
+                "instead"
+            )
+        # legacy day manifests without ts_col: any timestamp column
+        # may be the one the layout derives from
+        derives = m.get("ts_col")
+        if pc == PART_COL and (
+            alters == derives
+            or (not derives and schema[alters].dataType.typeName() == "timestamp")
+        ):
+            raise ValueError(
+                f"{alters!r} derives the table's day-partition layout "
+                "and writers name it explicitly (ts_col) — changing it "
+                "would break every later partitioned write; repartition "
+                "the table instead"
+            )
+        if retire:
+            for cname, expr in table_constraints(path).items():
+                if _re.search(rf"\b{_re.escape(alters)}\b", expr):
+                    raise ValueError(
+                        f"column {alters!r} is referenced by CHECK "
+                        f"constraint {cname!r} ({expr}); drop the "
+                        "constraint first"
+                    )
+    retired = _retired_cols(path)
+    for name in adds:
+        if name in names:
+            raise ValueError(f"column {name} already exists")
+        if name in retired:
+            raise ValueError(
+                f"column name {name!r} was dropped or renamed away and "
+                "is retired (name-mapped format; reusing it would "
+                "resurrect old physical values) — pick a fresh name"
+            )
+        if name == pc:
+            raise ValueError(
+                f"{name!r} is the table's partition column; its values "
+                "come from the directory layout — pick another name"
+            )
+        names.add(name)
+    overrides = change(m, schema)
+    if overrides is None:
+        return cur
+    if retire:
+        _update_property(
+            path, RETIRED_COLS_FILE, [],
+            lambda r: r if alters in r else [*r, alters],
+        )
+    v = cur + 1
+    _publish_manifest(
+        path,
+        v,
+        _next_manifest(m, v, m["files"], **overrides),  # no data write
+        expected_current,
+        prev=m,
+    )
+    if retire:
+        for kind, (_prefix, field) in _INDEX_KINDS.items():
+            src = _pointer_path(path, kind, alters)
+            try:
+                if adds:
+                    with open(src) as fh:
+                        payload = json.load(fh)
+                    # the pointer's column field must follow too, else
+                    # the pointer check never matches again and every
+                    # refresh silently rebuilds (ADVICE r14)
+                    if payload.get(field) == alters:
+                        payload[field] = adds[0]
+                    _atomic_json(_pointer_path(path, kind, adds[0]), payload)
+                os.remove(src)
+            except (OSError, json.JSONDecodeError):
+                pass
+    return v
+
+
 def evolve_schema(
     spark: SparkSession,
     path: str,
@@ -722,60 +886,34 @@ def evolve_schema(
     project old files through it, null-filling the added columns
     (`read_version`'s project_schema path). Cost is O(manifest), zero
     data movement — at 100 TB this is the difference between an
-    instant DDL and a full-table rewrite. Columns must be new names;
-    added columns are always nullable (the only widening that needs
-    no rewrite). Returns the new version. `expected_current` enables
-    the same optimistic-concurrency protocol as commit_version: the
-    DDL aborts before any shared-name write if another writer
-    published meanwhile.
+    instant DDL and a full-table rewrite. Columns must be new names
+    (never a retired one: pre-drop files still hold the old physical
+    column under it); added columns are always nullable (the only
+    widening that needs no rewrite). Returns the new version.
+    `expected_current` enables the same optimistic-concurrency
+    protocol as commit_version: the DDL aborts before any shared-name
+    write if another writer published meanwhile.
     """
-    from pyspark.sql import types as T
 
-    _occ_check(path, expected_current)
-    cur = current_version(path)
-    if cur == 0:
-        raise ValueError("cannot evolve an empty table")
-    m = _manifest(path, cur)
-    schema = T.StructType.fromJson(json.loads(m["schema"]))
-    existing = {f.name for f in schema.fields}
-    retired = set(_retired_cols(path))
-    for name, dtype in added_cols:
-        if name in existing:
-            raise ValueError(f"column {name} already exists")
-        if name in retired:
-            # name-based column mapping: pre-drop files still hold the
-            # old physical column under this name, and re-adding it
-            # would resurrect those values into the "new" column
-            raise ValueError(
-                f"column name {name!r} was dropped and is retired "
-                "(name-mapped format; reusing it would resurrect "
-                "pre-drop values) — pick a fresh name"
-            )
-        schema = schema.add(name, dtype, nullable=True)
-    v = cur + 1
-    _publish_manifest(
-        path,
-        v,
-        _next_manifest(
-            m, v, m["files"],  # by reference — no data write
-            schema=schema.json(), project_schema=True,
-            meta={"evolved": [c for c, _ in added_cols]},
-        ),
-        expected_current,
-        prev=m,
+    def change(m: dict, schema) -> dict:
+        for name, dtype in added_cols:
+            schema = schema.add(name, dtype, nullable=True)
+        return {
+            "schema": schema.json(),
+            "project_schema": True,
+            "meta": {"evolved": [c for c, _ in added_cols]},
+        }
+
+    return _column_ddl(
+        path, expected_current, change, adds=tuple(c for c, _ in added_cols)
     )
-    return v
 
 
 RETIRED_COLS_FILE = "_RETIRED_COLS.json"
 
 
 def _retired_cols(path: str) -> list[str]:
-    try:
-        with open(os.path.join(path, RETIRED_COLS_FILE)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return []
+    return _read_property(path, RETIRED_COLS_FILE, [])
 
 
 def unretire_column(path: str, col: str, force: bool = False) -> None:
@@ -796,8 +934,7 @@ def unretire_column(path: str, col: str, force: bool = False) -> None:
     stale values — so it is refused unless ``force=True`` (for
     operators who have purged/rewritten every pre-DDL file and
     verified no live file carries the physical column)."""
-    retired = _retired_cols(path)
-    if col not in retired:
+    if col not in _retired_cols(path):
         return
     if not force:
         from pyspark.sql import types as T
@@ -816,9 +953,8 @@ def unretire_column(path: str, col: str, force: bool = False) -> None:
                 "pre-DDL files; pass force=True only after rewriting "
                 "every file that still carries it"
             )
-    _atomic_json(
-        os.path.join(path, RETIRED_COLS_FILE),
-        [c for c in retired if c != col],
+    _update_property(
+        path, RETIRED_COLS_FILE, [], lambda r: [c for c in r if c != col]
     )
 
 
@@ -841,92 +977,27 @@ def drop_column(
     physical columns BY NAME (Delta needs column-mapping IDs to allow
     DROP; we are name-mapped), so re-adding a dropped name would
     silently RESURRECT the old physical values from pre-drop files.
-    Dropped names are therefore retired in `_RETIRED_COLS.json`
-    (atomically-swapped table property, same pattern as CHECK
-    constraints) and evolve_schema refuses them forever. Also
-    refused: partition/cluster columns (their values live in the
-    directory layout), columns referenced by a live CHECK constraint,
-    and dropping the last column. Index pointers on the column are
-    removed (they self-invalidate on version bump anyway)."""
-    import re as _re
-
+    Dropped names are therefore retired in `_RETIRED_COLS.json` (a
+    table property, like CHECK constraints) and evolve_schema refuses
+    them forever. Also refused: partition/cluster columns (their
+    values live in the directory layout), the day layout's ts_col,
+    columns referenced by a live CHECK constraint, and dropping the
+    last column. Index pointers on the column are removed (they
+    self-invalidate on version bump anyway)."""
     from pyspark.sql import types as T
 
-    _occ_check(path, expected_current)
-    cur = current_version(path)
-    if cur == 0:
-        raise ValueError("cannot evolve an empty table")
-    m = _manifest(path, cur)
-    schema = T.StructType.fromJson(json.loads(m["schema"]))
-    if col not in {f.name for f in schema.fields}:
-        raise ValueError(f"no such column {col!r}")
-    if len(schema.fields) == 1:
-        raise ValueError("cannot drop the last column")
-    pc = _layout_col(m)
-    if pc and col == pc:
-        raise ValueError(
-            f"{col!r} is the partition/cluster column; its values live "
-            "in the directory layout — repartition the table instead"
-        )
-    if pc == PART_COL:
-        # day-partitioned tables strip PART_COL before recording the
-        # schema, so the column the layout actually DERIVES from is
-        # the manifest's ts_col (recorded at commit since r14) — and
-        # dropping it would retire the name and permanently brick
-        # every subsequent COW/MERGE write (ADVICE r13 medium).
-        # Legacy manifests without ts_col: conservatively refuse any
-        # timestamp-typed column.
-        derives = m.get("ts_col")
-        field_type = {f.name: f.dataType.typeName() for f in schema.fields}
-        if (derives and col == derives) or (
-            not derives and field_type.get(col) == "timestamp"
-        ):
-            raise ValueError(
-                f"{col!r} derives the table's day-partition layout "
-                "(with_partition_col); dropping it would break every "
-                "subsequent partitioned write and the retired name "
-                "could never be re-added — repartition the table "
-                "instead"
-            )
-    for name, expr in table_constraints(path).items():
-        if _re.search(rf"\b{_re.escape(col)}\b", expr):
-            raise ValueError(
-                f"column {col!r} is referenced by CHECK constraint "
-                f"{name!r} ({expr}); drop the constraint first"
-            )
-    new_schema = T.StructType([f for f in schema.fields if f.name != col])
-    v = cur + 1
-    # Retire BEFORE publish — same crash-window ordering as
-    # rename_column: retired-but-still-live is harmless (retirement
-    # only gates ADDING a name), dropped-but-unretired lets a later
-    # evolve_schema re-add the name and resurrect pre-drop physical
-    # values (ADVICE r14). Residue note (ADVICE r15): if the publish
-    # below ABORTS (ConcurrentCommitError) and is never retried, the
-    # retirement persists while the column stays live — unversioned
-    # state from an aborted commit. Deliberate trade against the
-    # resurrection hazard; unretire_column is the audited escape hatch.
-    retired = _retired_cols(path)
-    if col not in retired:
-        _atomic_json(
-            os.path.join(path, RETIRED_COLS_FILE), retired + [col]
-        )
-    _publish_manifest(
-        path,
-        v,
-        _next_manifest(
-            m, v, m["files"],  # by reference — no data write
-            schema=new_schema.json(), project_schema=True,
-            meta={"dropped": [col]},
-        ),
-        expected_current,
-        prev=m,
-    )
-    for kind in _INDEX_KINDS:
-        try:
-            os.remove(_pointer_path(path, kind, col))
-        except FileNotFoundError:
-            pass
-    return v
+    def change(m: dict, schema) -> dict:
+        if len(schema.fields) == 1:
+            raise ValueError("cannot drop the last column")
+        return {
+            "schema": T.StructType(
+                [f for f in schema.fields if f.name != col]
+            ).json(),
+            "project_schema": True,
+            "meta": {"dropped": [col]},
+        }
+
+    return _column_ddl(path, expected_current, change, alters=col, retire=True)
 
 
 RENAMES_DIR = "_renames"
@@ -990,50 +1061,31 @@ def widen_column_type(
     render-stable."""
     from pyspark.sql import types as T
 
-    _occ_check(path, expected_current)
-    cur = current_version(path)
-    if cur == 0:
-        raise ValueError("cannot evolve an empty table")
-    m = _manifest(path, cur)
-    schema = T.StructType.fromJson(json.loads(m["schema"]))
-    by_name = {f.name: f for f in schema.fields}
-    if col not in by_name:
-        raise ValueError(f"no such column {col!r}")
-    target = getattr(T, "_parse_datatype_string")(new_type)
-    frm = by_name[col].dataType
-    if frm == target:
-        return cur  # nothing to do: no churn commit
-    if not _is_widening(frm, target):
-        raise ValueError(
-            f"cannot change {col!r} from {frm.simpleString()} to "
-            f"{target.simpleString()}: only lossless widenings are "
-            "metadata-only (rewrite the table for anything else)"
-        )
-    if col == _layout_col(m):
-        raise ValueError(
-            f"{col!r} is the partition/cluster column; its values live "
-            "in the directory layout"
-        )
-    new_fields = [
-        T.StructField(
-            f.name, target if f.name == col else f.dataType, f.nullable,
-            f.metadata,
-        )
-        for f in schema.fields
-    ]
-    v = cur + 1
-    widened = {"col": col, "from": frm.simpleString(), "to": target.simpleString()}
-    _publish_manifest(
-        path,
-        v,
-        _next_manifest(
-            m, v, m["files"],  # by reference — no data write
-            schema=T.StructType(new_fields).json(), meta={"widened": widened},
-        ),
-        expected_current,
-        prev=m,
-    )
-    return v
+    def change(m: dict, schema) -> dict | None:
+        target = getattr(T, "_parse_datatype_string")(new_type)
+        frm = schema[col].dataType
+        if frm == target:
+            return None  # nothing to do: no churn commit
+        if not _is_widening(frm, target):
+            raise ValueError(
+                f"cannot change {col!r} from {frm.simpleString()} to "
+                f"{target.simpleString()}: only lossless widenings are "
+                "metadata-only (rewrite the table for anything else)"
+            )
+        fields = [
+            T.StructField(
+                f.name, target if f.name == col else f.dataType, f.nullable,
+                f.metadata,
+            )
+            for f in schema.fields
+        ]
+        widened = {"col": col, "from": frm.simpleString(), "to": target.simpleString()}
+        return {
+            "schema": T.StructType(fields).json(),
+            "meta": {"widened": widened},
+        }
+
+    return _column_ddl(path, expected_current, change, alters=col)
 
 
 def rename_column(
@@ -1073,141 +1125,57 @@ def rename_column(
     by regex is not a contract). Index pointers follow the rename
     (pointer file + recorded col name); their sidecar rows are
     column-agnostic (file/min/max), so incremental refresh keeps
-    working across the rename. Reference analog: column ownership in
+    working across the rename. So does the column's identity
+    high-water mark. Reference analog: column ownership in
     migrations/db.sql:5-15 (the reference alters its schema with SQL
     DDL; this format's DDL story needed the same verb)."""
-    import re as _re
-
     from pyspark.sql import types as T
 
-    _occ_check(path, expected_current)
-    cur = current_version(path)
-    if cur == 0:
-        raise ValueError("cannot evolve an empty table")
-    m = _manifest(path, cur)
-    schema = T.StructType.fromJson(json.loads(m["schema"]))
-    names = {f.name for f in schema.fields}
-    if old not in names:
-        raise ValueError(f"no such column {old!r}")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    if new in _retired_cols(path):
-        raise ValueError(
-            f"column name {new!r} was dropped or renamed away and is "
-            "retired (name-mapped format; reusing it would resurrect "
-            "old physical values) — pick a fresh name"
-        )
-    pc = _layout_col(m)
-    if pc and old == pc:
-        raise ValueError(
-            f"{old!r} is the partition/cluster column; its values live "
-            "in the directory layout — repartition the table instead"
-        )
-    if pc == PART_COL:
-        derives = m.get("ts_col")
-        field_type = {f.name: f.dataType.typeName() for f in schema.fields}
-        if (derives and old == derives) or (
-            not derives and field_type.get(old) == "timestamp"
-        ):
-            raise ValueError(
-                f"{old!r} derives the table's day-partition layout and "
-                "writers name it explicitly (ts_col) — renaming it "
-                "would break every subsequent partitioned write"
+    def change(m: dict, schema) -> dict:
+        prev_ren = dict(m.get("renames") or {})
+        chain = list(prev_ren.pop(old, []))
+        already: set[str] = set()
+        for e in chain:
+            already |= _load_rename_files(path, e["files_ref"])
+        # every current file not mapped by a PRIOR rename of this
+        # column physically carries `old` (it was written while `old`
+        # was the logical name)
+        carry_old = sorted(f for f in m["files"] if f not in already)
+        entries = chain
+        if carry_old:
+            os.makedirs(os.path.join(path, RENAMES_DIR), exist_ok=True)
+            ref = os.path.join(
+                RENAMES_DIR, f"v{m['version'] + 1}-{old}-to-{new}.json"
             )
-    for cname, expr in table_constraints(path).items():
-        if _re.search(rf"\b{_re.escape(old)}\b", expr):
-            raise ValueError(
-                f"column {old!r} is referenced by CHECK constraint "
-                f"{cname!r} ({expr}); drop the constraint first"
+            _atomic_json(os.path.join(path, ref), carry_old)
+            entries = chain + [{"from": old, "files_ref": ref}]
+        fields = [
+            T.StructField(
+                new if f.name == old else f.name, f.dataType, f.nullable,
+                f.metadata,
             )
+            for f in schema.fields
+        ]
+        return {
+            "schema": T.StructType(fields).json(),
+            "renames": {**prev_ren, **({new: entries} if entries else {})},
+            "meta": {"renamed": {"from": old, "to": new}},
+        }
 
-    prev_ren = dict(m.get("renames") or {})
-    chain = list(prev_ren.pop(old, []))
-    already: set[str] = set()
-    for e in chain:
-        already |= _load_rename_files(path, e["files_ref"])
-    # every current file not mapped by a PRIOR rename of this column
-    # physically carries `old` (it was written while `old` was the
-    # logical name)
-    carry_old = sorted(f for f in m["files"] if f not in already)
-    v = cur + 1
-    entries = chain
-    if carry_old:
-        os.makedirs(os.path.join(path, RENAMES_DIR), exist_ok=True)
-        ref = os.path.join(RENAMES_DIR, f"v{v}-{old}-to-{new}.json")
-        _atomic_json(os.path.join(path, ref), carry_old)
-        entries = chain + [{"from": old, "files_ref": ref}]
-    new_fields = [
-        T.StructField(
-            new if f.name == old else f.name,
-            f.dataType,
-            f.nullable,
-            f.metadata,
-        )
-        for f in schema.fields
-    ]
-    renames = {**prev_ren, **({new: entries} if entries else {})}
-    # Retire the old name BEFORE publishing the rename manifest: a
-    # crash between the two must err on the side of the name being
-    # retired-but-still-live (harmless — evolve_schema only consults
-    # retirement when ADDING a name, and a live column is never
-    # re-added), never rename-live-but-unretired, where a later
-    # evolve_schema could re-add `old` and pre-rename files would
-    # serve a physical read schema with duplicate field names — the
-    # resurrection hazard retirement exists to block (ADVICE r14).
-    # Residue note (ADVICE r15): an ABORTED publish
-    # (ConcurrentCommitError, never retried) leaves `old` retired but
-    # still live — unretire_column is the audited escape hatch.
-    retired = _retired_cols(path)
-    if old not in retired:
-        _atomic_json(os.path.join(path, RETIRED_COLS_FILE), retired + [old])
-    _publish_manifest(
-        path,
-        v,
-        _next_manifest(
-            m, v, m["files"],  # by reference — no data write
-            schema=T.StructType(new_fields).json(), renames=renames,
-            meta={"renamed": {"from": old, "to": new}},
-        ),
-        expected_current,
-        prev=m,
+    v = _column_ddl(
+        path, expected_current, change, adds=(new,), alters=old, retire=True
     )
-    for kind, (_prefix, field) in _INDEX_KINDS.items():
-        src = _pointer_path(path, kind, old)
-        if os.path.isfile(src):
-            try:
-                with open(src) as fh:
-                    payload = json.load(fh)
-                # the pointer's column field must follow too, else the
-                # pointer check never matches again and the advertised
-                # pointer-follow silently degrades to a full rebuild
-                # on every refresh (ADVICE r14).
-                if payload.get(field) == old:
-                    payload[field] = new
-                _atomic_json(_pointer_path(path, kind, new), payload)
-                os.remove(src)
-            except (OSError, json.JSONDecodeError):
-                pass
+
     # identity high-water follows the rename (r15: the property is
     # keyed by column name; a stranded key would read as hwm 0 under
-    # the new name and the next append would reuse assigned ids).
-    # Whole read-modify-write under the identity flock — the same
-    # lost-update argument as advance_identity.
-    import fcntl as _fcntl
+    # the new name and the next append would reuse assigned ids)
+    def move(ident: dict) -> dict:
+        if old not in ident:
+            return ident
+        rest = {k: n for k, n in ident.items() if k != old}
+        return {**rest, new: max(int(ident.get(new, 0)), int(ident[old]))}
 
-    with open(os.path.join(path, IDENTITY_FILE + ".lock"), "a") as lf:
-        _fcntl.flock(lf, _fcntl.LOCK_EX)
-        try:
-            try:
-                with open(os.path.join(path, IDENTITY_FILE)) as fh:
-                    ident = json.load(fh)
-            except FileNotFoundError:
-                ident = {}
-            if old in ident:
-                ident[new] = max(int(ident.get(new, 0)), int(ident.pop(old)))
-                _atomic_json(os.path.join(path, IDENTITY_FILE), ident)
-        finally:
-            _fcntl.flock(lf, _fcntl.LOCK_UN)
+    _update_property(path, IDENTITY_FILE, {}, move)
     return v
 
 
@@ -1343,9 +1311,9 @@ def _rewrite_files(
     expected_current: int | None = None,
 ) -> int:
     """The one maintenance rewrite, shared by compact_files,
-    materialize_deletes and both z-order passes: replace `files` of
-    snapshot `m` with fresh files holding the same live rows, and
-    publish version m + 1 from `m`.
+    materialize_deletes, both z-order passes and localize_clone:
+    replace `files` of snapshot `m` with fresh files holding the same
+    live rows, and publish version m + 1 from `m`.
 
     The live rows come through the snapshot scan (_live_tagged: the
     DV applied, renamed columns under their logical names, the
@@ -3535,11 +3503,7 @@ def vacuum(
     already in flight. Manifest rewrites here are atomic
     (write-tmp-then-rename), so no reader can observe a torn file.
     """
-    try:
-        with open(os.path.join(path, "_TAGS.json")) as fh:
-            pinned = set(json.load(fh).values())
-    except FileNotFoundError:
-        pinned = set()
+    pinned = set(_read_property(path, TAGS_FILE, {}).values())
 
     removed = []
     keep_versions = set()
@@ -5768,25 +5732,11 @@ def clone_table(
     # publishes.
     cons = table_constraints(src)
     if cons and version is not None and version != current_version(src):
-        snap = read_version(spark, src, version)
-        for cname in sorted(cons):
-            expr = cons[cname]
-            ok = F.coalesce(F.expr(expr), F.lit(True))
-            try:
-                bad = snap.filter(~ok).limit(1).collect()
-            except Exception as e:  # noqa: BLE001 — analysis failure
-                raise ConstraintViolationError(
-                    f"constraint {cname!r} ({expr}) cannot be evaluated "
-                    f"against v{version}'s schema; drop it on the source "
-                    "or clone the current version"
-                ) from e
-            if bad:
-                raise ConstraintViolationError(
-                    f"clone of v{version} would carry live constraint "
-                    f"{cname!r} ({expr}) violated by row "
-                    f"{bad[0].asDict()}; drop the constraint or clone "
-                    "the current version"
-                )
+        _check_snapshot(
+            spark, src, version, cons,
+            f"a clone of v{version} would carry it — drop the "
+            "constraint on the source or clone the current version",
+        )
     manifest = _next_manifest(
         None, 1, [], {rel_of[f]: tags.get(f) for f in m["files"]},
         partition_col=_layout_col(m), schema=m["schema"],
@@ -5795,19 +5745,13 @@ def clone_table(
         meta={**(meta or {}), "cloned_from": src_abs, "source_version": m["version"]},
     )
     _publish_manifest(dst_abs, 1, manifest, expected_current=0)
-    if cons:
-        _atomic_json(os.path.join(dst_abs, CONSTRAINTS_FILE), cons)
-    retired = _retired_cols(src)
-    if retired:
-        _atomic_json(os.path.join(dst_abs, RETIRED_COLS_FILE), retired)
-    # identity high-water carries over (table property): the clone's
-    # future appends must not reuse ids the source already assigned
-    # to rows the clone references
-    try:
-        with open(os.path.join(src_abs, IDENTITY_FILE)) as fh:
-            _atomic_json(os.path.join(dst_abs, IDENTITY_FILE), json.load(fh))
-    except FileNotFoundError:
-        pass
+    # the identity high-water carries too: the clone's future appends
+    # must not reuse ids the source already assigned to rows the
+    # clone references
+    for name in (CONSTRAINTS_FILE, RETIRED_COLS_FILE, IDENTITY_FILE):
+        value = _read_property(src_abs, name, None)
+        if value:
+            _update_property(dst_abs, name, None, lambda _: value)
     return 1
 
 
@@ -5817,88 +5761,60 @@ def localize_clone(
     """Deep-clone completion: rewrite every externally-referenced
     file into the clone's own data directory — O(external bytes)
     once, after which DV/MOR DDL, index builds and purge become
-    available and the source can be vacuumed freely. Reads go through
-    the full snapshot contract (deletion vector applied, renamed
-    columns resolved), so soft-deleted rows do not resurrect and the
-    localized files carry CURRENT logical column names; local files
-    carry by reference. Partition layout is preserved by re-writing
-    each external partition group under its directory tag (job count
-    = external partition count — a one-time materialization pass)."""
+    available and the source can be vacuumed freely. It is one
+    maintenance rewrite (_rewrite_files) of the external files: the
+    snapshot scan applies the deletion vector and resolves renamed
+    columns, so soft-deleted rows do not resurrect and the localized
+    files carry CURRENT logical column names under their partition
+    tags. Local files carry by reference, and so does the DV pointer:
+    its rows for the rewritten external files match no manifest file
+    any more."""
     m = _manifest(path)
     ext = [f for f in m["files"] if f.startswith("..")]
     if not ext:
         return m["version"]
-    carried = [f for f in m["files"] if not f.startswith("..")]
-    v = m["version"] + 1
-    data_dir = _attempt_data_dir(path, v)
-    pc = _layout_col(m)
-    by_tag: dict = {}
-    for f in ext:
-        by_tag.setdefault(m.get("partitions", {}).get(f), []).append(f)
-    for tag, fs in sorted(by_tag.items(), key=lambda kv: (kv[0] is None, kv[0])):
-        out_dir = (
-            os.path.join(data_dir, f"{pc}={tag}")
-            if tag is not None and pc
-            else data_dir
-        )
-        df = _read_files_as_snapshot(
-            spark, m, [os.path.join(path, f) for f in fs], path=path
-        )
-        _guarded_write(
-            df, path, lambda g, d=out_dir: g.write.mode("append").parquet(d)
-        )
-    new_files = {f: _partition_of(f, pc) for f in _walk_rel_parquet(data_dir, path)}
-    # DV rows for rewritten externals never match again (deletes were
-    # materialized through the read); carried locals keep theirs
-    dv = None
-    if m.get("dv") and carried:
-        dead = [
-            f for f in m["dv"].get("dead_files", []) if f in set(carried)
-        ]
-        dv = {
-            "sidecar": m["dv"]["sidecar"],
-            "rows": m["dv"]["rows"],
-            **({"dead_files": dead} if dead else {}),
-        }
-    manifest = _next_manifest(
-        m, v, carried, new_files, dv=dv,
-        meta={**(meta or {}), "localized": len(ext)},
+    return _rewrite_files(
+        spark, path, m, ext, meta={**(meta or {}), "localized": len(ext)}
     )
-    _publish_manifest(path, v, manifest, None, prev=m)
-    return v
 
 
 # ---- snapshot tags: named dataset releases -------------------------
 
 
+TAGS_FILE = "_TAGS.json"
+
+
+def _retained_version(path: str, version: int) -> int:
+    """Refuse a `version` the table cannot serve — not yet committed,
+    or vacuumed past the retention horizon — and return the current
+    version."""
+    cur = current_version(path)
+    if version < 1 or version > cur:
+        raise ValueError(
+            f"v{version} is not a version of this table (current v{cur})"
+        )
+    if not os.path.isfile(_manifest_path(path, version)):
+        raise ValueError(
+            f"v{version} was vacuumed past the retention horizon; "
+            "its files may no longer exist"
+        )
+    return cur
+
+
 def tag_version(path: str, name: str, version: int | None = None) -> int:
-    """Attach a named ref to a snapshot (Iceberg tag / git-tag
-    analog): "corpus-v1.2" pins the exact file set a model trained
-    on, surviving any number of later commits until vacuumed. Tags
-    are one JSON file updated atomically; re-tagging a name moves
-    it."""
+    """Attach a named ref to a retained snapshot (Iceberg tag /
+    git-tag analog): "corpus-v1.2" pins the exact file set a model
+    trained on, surviving any number of later commits until vacuumed.
+    Tags are one table property; re-tagging a name moves it."""
     v = current_version(path) if version is None else version
-    if v == 0:
-        raise ValueError("cannot tag an empty table")
-    tags_p = os.path.join(path, "_TAGS.json")
-    try:
-        with open(tags_p) as fh:
-            tags = json.load(fh)
-    except FileNotFoundError:
-        tags = {}
-    tags[name] = v
-    tmp = tags_p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(tags, fh)
-    os.replace(tmp, tags_p)
+    _retained_version(path, v)
+    _update_property(path, TAGS_FILE, {}, lambda tags: {**tags, name: v})
     return v
 
 
 def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
     """Read the snapshot a tag names."""
-    with open(os.path.join(path, "_TAGS.json")) as fh:
-        tags = json.load(fh)
-    return read_version(spark, path, tags[name])
+    return read_version(spark, path, _read_property(path, TAGS_FILE, {})[name])
 
 
 def purge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6383,14 +6299,7 @@ def restore_version(
     reference counting every carried-file commit relies on. Same OCC
     protocol as commit_version."""
     _occ_check(path, expected_current)
-    cur = current_version(path)
-    if to_version < 1 or to_version > cur:
-        raise ValueError(f"cannot restore to v{to_version} (current v{cur})")
-    if not os.path.isfile(_manifest_path(path, to_version)):
-        raise ValueError(
-            f"v{to_version} was vacuumed past the retention horizon; "
-            "its files may no longer exist"
-        )
+    cur = _retained_version(path, to_version)
     t = _manifest(path, to_version)
     # Live CHECK constraints were validated against the snapshot that
     # existed when they were ADDED — a restore to an earlier version
@@ -6403,24 +6312,11 @@ def restore_version(
     # refuses too. Unconstrained tables pay one stat call.
     cons = table_constraints(path)
     if cons:
-        snap = read_version(spark, path, to_version)
-        for cname in sorted(cons):
-            expr = cons[cname]
-            ok = F.coalesce(F.expr(expr), F.lit(True))
-            try:
-                bad = snap.filter(~ok).limit(1).collect()
-            except Exception as e:  # noqa: BLE001 — analysis failure
-                raise ConstraintViolationError(
-                    f"constraint {cname!r} ({expr}) cannot be evaluated "
-                    f"against v{to_version}'s schema; drop it before "
-                    "restoring"
-                ) from e
-            if bad:
-                raise ConstraintViolationError(
-                    f"restore to v{to_version} would resurrect a row "
-                    f"violating live constraint {cname!r} ({expr}): "
-                    f"{bad[0].asDict()}; drop the constraint first"
-                )
+        _check_snapshot(
+            spark, path, to_version, cons,
+            f"restore to v{to_version} would resurrect it — drop the "
+            "constraint first",
+        )
     v = cur + 1
     # the new manifest follows the TARGET snapshot, not the current
     # one: its files, layout, schema, DV pointer, ts_col and rename
@@ -6591,11 +6487,7 @@ def identity_high_water(path: str, id_col: str) -> int:
     compaction), after which the next append would silently REUSE
     ids. Delta stores identity state in column metadata for the same
     reason: it is per-column table state, not per-commit payload."""
-    try:
-        with open(os.path.join(path, IDENTITY_FILE)) as fh:
-            return int(json.load(fh).get(id_col, 0))
-    except FileNotFoundError:
-        return 0
+    return int(_read_property(path, IDENTITY_FILE, {}).get(id_col, 0))
 
 
 def advance_identity(path: str, id_col: str, new_hwm: int) -> int:
@@ -6603,41 +6495,31 @@ def advance_identity(path: str, id_col: str, new_hwm: int) -> int:
     is refused, because assigned ids may already live in downstream
     systems (Delta's identity contract: values are never reused, not
     even across RESTORE — the sidecar deliberately survives restore/
-    DDL untouched). Serialized under flock: the read-modify-write is
-    otherwise a lost-update hazard between two concurrent appenders
-    (the constraint-DDL argument; maps to conditional-put on an
-    object store). Call AFTER the append commit publishes: a crash
-    between the two leaves the mark low and the retry re-advances —
-    at worst ids are assigned twice to the SAME rows of a commit that
-    never published, never to two different commits."""
-    import fcntl
+    DDL untouched). One locked property update, so two concurrent
+    appenders never lose each other's advance. Call AFTER the append
+    commit publishes: a crash between the two leaves the mark low and
+    the retry re-advances — at worst ids are assigned twice to the
+    SAME rows of a commit that never published, never to two
+    different commits."""
 
-    with open(os.path.join(path, IDENTITY_FILE + ".lock"), "a") as fh:
-        fcntl.flock(fh, fcntl.LOCK_EX)
-        try:
-            try:
-                with open(os.path.join(path, IDENTITY_FILE)) as f2:
-                    state = json.load(f2)
-            except FileNotFoundError:
-                state = {}
-            cur = int(state.get(id_col, 0))
-            if new_hwm < cur:
-                raise ValueError(
-                    f"identity {id_col!r} high-water is {cur}; refusing "
-                    f"to regress to {new_hwm} (assigned ids are never "
-                    "reused)"
-                )
-            state[id_col] = int(new_hwm)
-            _atomic_json(os.path.join(path, IDENTITY_FILE), state)
-            return int(new_hwm)
-        finally:
-            fcntl.flock(fh, fcntl.LOCK_UN)
+    def advance(state: dict) -> dict:
+        cur = int(state.get(id_col, 0))
+        if new_hwm < cur:
+            raise ValueError(
+                f"identity {id_col!r} high-water is {cur}; refusing "
+                f"to regress to {new_hwm} (assigned ids are never "
+                "reused)"
+            )
+        return {**state, id_col: int(new_hwm)}
+
+    _update_property(path, IDENTITY_FILE, {}, advance)
+    return int(new_hwm)
 
 
 def reserve_identity(path: str, id_col: str, n: int) -> int:
     """Atomically reserve the id range [start, start+n) — the
-    CONCURRENT-WRITER identity protocol: the read-and-advance runs
-    under the property flock, so two appenders' ranges are disjoint
+    CONCURRENT-WRITER identity protocol: the read-and-advance is one
+    locked property update, so two appenders' ranges are disjoint
     BEFORE either commits (their blind appends then commute through
     the rebase path). A writer that crashes after reserving leaves a
     GAP in the id space, never a duplicate — exactly Delta's identity
@@ -6645,24 +6527,13 @@ def reserve_identity(path: str, id_col: str, n: int) -> int:
     that want gap-free density call advance_identity AFTER the
     publish instead (identity_column_appends does); the two modes
     share the same monotonic property file. Returns start."""
-    import fcntl
-
     if n < 0:
         raise ValueError(f"cannot reserve a negative range ({n})")
-    with open(os.path.join(path, IDENTITY_FILE + ".lock"), "a") as fh:
-        fcntl.flock(fh, fcntl.LOCK_EX)
-        try:
-            try:
-                with open(os.path.join(path, IDENTITY_FILE)) as f2:
-                    state = json.load(f2)
-            except FileNotFoundError:
-                state = {}
-            start = int(state.get(id_col, 0))
-            state[id_col] = start + int(n)
-            _atomic_json(os.path.join(path, IDENTITY_FILE), state)
-            return start
-        finally:
-            fcntl.flock(fh, fcntl.LOCK_UN)
+    state = _update_property(
+        path, IDENTITY_FILE, {},
+        lambda s: {**s, id_col: int(s.get(id_col, 0)) + int(n)},
+    )
+    return state[id_col] - int(n)
 
 
 def assign_identity(
