@@ -17,16 +17,29 @@ through functions/result_cache.py — a TTL'd parquet-backed cache
 keyed by the normalized optimized plan, so two textually different
 but plan-identical queries share an entry, and any parameter change
 misses.
+
+Building a request's DataFrame runs no Spark job: a ``QueryAPI``
+reads the raw events schema once, on first use, and every request
+scans with that schema (``load_table(..., schema)``), so only the
+inference is skipped — the files are still listed per request and a
+rewritten ``events.parquet`` is seen. Cache entries carry their own
+schema too, so a cache hit's build runs no job either and its
+collect runs one.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.functions.exact import dec_avg
-from data_ingestion_pipeline_spark.operators.queries import parse_time_bound
-from data_ingestion_pipeline_spark.sources.tables import load_table
+from data_ingestion_pipeline_spark.operators.queries import (
+    latest_of,
+    parse_time_bound,
+)
+from data_ingestion_pipeline_spark.sources.tables import load_table, raw_schema
 
 
 class QueryAPI:
@@ -39,9 +52,14 @@ class QueryAPI:
         self.spark = spark
         self.sf_dir = sf_dir
         self.cache = cache
+        self._raw_schema = None
+        self._schema_lock = threading.Lock()  # clients share one facade
 
     def _events(self) -> DataFrame:
-        return load_table(self.spark, self.sf_dir, "events")
+        with self._schema_lock:
+            if self._raw_schema is None:
+                self._raw_schema = raw_schema(self.spark, self.sf_dir, "events")
+        return load_table(self.spark, self.sf_dir, "events", self._raw_schema)
 
     def _finish(self, df: DataFrame) -> DataFrame:
         if not self.cache:
@@ -128,11 +146,7 @@ class QueryAPI:
 
     def latest(self) -> DataFrame:
         """The stored-proc latest-per-station (DISTINCT ON analog)."""
-        from data_ingestion_pipeline_spark.operators.queries import (
-            latest_per_station,
-        )
-
-        return self._finish(latest_per_station(self.spark, self.sf_dir))
+        return self._finish(latest_of(self._events()))
 
     # The toolkit surface (a TimescaleDB user's `CREATE EXTENSION`
     # territory) delegates to the oracle-verified operators — exposed

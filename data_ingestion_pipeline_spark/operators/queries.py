@@ -222,7 +222,12 @@ def latest_per_station(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key window; ties broken by event_id so the result is
     deterministic under any partitioning.
     """
-    ev = load_table(spark, sf_dir, "events")
+    return latest_of(load_table(spark, sf_dir, "events"))
+
+
+def latest_of(ev: DataFrame) -> DataFrame:
+    """latest_per_station over an already-loaded events frame (the
+    serving facade passes its pinned-schema scan)."""
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     return (
         ev.withColumn("rn", F.row_number().over(w))

@@ -377,8 +377,8 @@ def _update_property(path: str, name: str, default, fn):
 # semantics: a constraint evaluating to NULL passes (unknown ≠
 # violated). Enforced by every path that ingests NEW rows
 # (commit/append/upsert/COW/MOR-update/MERGE); maintenance rewrites
-# of already-admitted rows (compact, zorder, purge, materialize) are
-# exempt by construction.
+# of already-admitted rows (compact, zorder, materialize, localize —
+# every _rewrite_files caller — and purge) write unguarded.
 
 CONSTRAINTS_FILE = "_CONSTRAINTS.json"
 _CHECK_MARKER = "CHECK constraint"
@@ -527,6 +527,7 @@ def _write_version_files(
     partition_col: str | None = None,
     cluster: bool = True,
     data_dir: str | None = None,
+    _admitted: bool = False,
 ) -> dict[str, str | None]:
     """The one versioned file writer: df lands constraint-guarded in a
     fresh attempt directory for version v (partitionBy(partition_col)
@@ -535,7 +536,9 @@ def _write_version_files(
     by distribute_for_write (below the guard, so the guard filters the
     distributed rows) unless the caller passes cluster=False to keep
     its own layout. A caller that must remove the attempt on failure
-    names it (`data_dir`, from _attempt_data_dir)."""
+    names it (`data_dir`, from _attempt_data_dir). Only _rewrite_files
+    passes `_admitted`: its rows were checked when they were committed,
+    so it writes them without the guard."""
     data_dir = data_dir or _attempt_data_dir(path, v)
     if partition_col and cluster:
         df = distribute_for_write(df, partition_col)
@@ -544,7 +547,10 @@ def _write_version_files(
         w = g.write.mode("overwrite")
         (w.partitionBy(partition_col) if partition_col else w).parquet(data_dir)
 
-    _guarded_write(df, path, write)
+    if _admitted:
+        write(df)
+    else:
+        _guarded_write(df, path, write)
     return {
         f: _partition_of(f, partition_col) for f in _walk_rel_parquet(data_dir, path)
     }
@@ -1367,7 +1373,7 @@ def _rewrite_files(
         try:
             added = _write_version_files(
                 path, v, shape(out) if shape else out, pc,
-                cluster=shape is None, data_dir=data_dir,
+                cluster=shape is None, data_dir=data_dir, _admitted=True,
             )
             if any(sentinel in f for f in added) and not any(
                 tags.get(f) == sentinel for f in files
@@ -5814,7 +5820,10 @@ def tag_version(path: str, name: str, version: int | None = None) -> int:
 
 def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
     """Read the snapshot a tag names."""
-    return read_version(spark, path, _read_property(path, TAGS_FILE, {})[name])
+    tags = _read_property(path, TAGS_FILE, {})
+    if name not in tags:
+        raise ValueError(f"no such tag {name!r}; tags: {sorted(tags)}")
+    return read_version(spark, path, tags[name])
 
 
 def purge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

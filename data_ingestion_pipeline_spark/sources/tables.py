@@ -10,6 +10,13 @@ chunk exclusion.
 At 100 TB these loaders are the only scan path, so nothing here may
 defeat pushdown: no ``.cache()`` by default, no schema inference on
 JSON/CSV, no row-level python.
+
+A bare ``spark.read.parquet`` runs a Spark job to infer the file's
+schema on every call. A long-lived reader (the serving facade in
+api.py) reads the raw schema once with ``raw_schema`` and hands it to
+``load_table``, which then scans with ``spark.read.schema(...)``: no
+inference job, while the files are still listed on every call, so a
+rewritten file is still seen.
 """
 
 from __future__ import annotations
@@ -27,8 +34,22 @@ from data_ingestion_pipeline_spark.schemas import TESTDATA_TABLES
 _NANO_TS = {"events": ("ts",)}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The table file's own schema, before load_table's normalization
+    (one inference job)."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+
+
+def load_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Scan one testdata table. Lazy; filters/projections push down.
+    ``schema``, when given, is the table's ``raw_schema``: the scan
+    uses it instead of inferring one, and the normalization below runs
+    on it unchanged.
 
     Timestamp normalization — the ONE place parquet timestamp
     physical-type drift is absorbed. All three flavors the testdata
@@ -39,7 +60,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - TIMESTAMP(MICROS) no-tz   → Spark reads TIMESTAMP_NTZ, cast;
     - TIMESTAMP(MICROS) UTC     → already TimestampType, untouched.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(f"{sf_dir}/{name}.parquet")
     for col in _NANO_TS.get(name, ()):
         if isinstance(df.schema[col].dataType, T.LongType):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))

@@ -33,3 +33,21 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
+
+
+def run_counting_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran): fn runs under its own job
+    group, and the listener bus drains before the status tracker is
+    read, so a job that already ran is never missed."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "counted call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

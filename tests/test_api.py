@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.api import QueryAPI
 from data_ingestion_pipeline_spark.operators import queries
 from data_ingestion_pipeline_spark.operators.queries import END, START, STATION
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, run_counting_jobs
 
 
 def _multiset(df):
@@ -72,6 +72,80 @@ def test_cache_hit_returns_same_result(spark, tmp_path, monkeypatch):
     # and a different parameterization must MISS, not collide
     other = _multiset(api.timeseries(STATION, START, END, "1 hour"))
     assert other != first
+
+
+def test_latest_matches_registry_twin(spark):
+    got = QueryAPI(spark, SF_TEST).latest()
+    want = queries.latest_per_station(spark, SF_TEST)
+    assert _multiset(got) == _multiset(want)
+
+
+def test_second_request_runs_no_schema_inference_job(spark):
+    """The events schema is read once per QueryAPI: after the first
+    request, building a request runs no Spark job."""
+    api = QueryAPI(spark, SF_TEST)
+    api.raw(STATION)
+    for build in (
+        lambda: api.raw(STATION, START, END, limit=5),
+        lambda: api.aggregate(STATION, START, END),
+        lambda: api.timeseries(STATION, START, END, "1 day"),
+        api.latest,
+    ):
+        _, jobs = run_counting_jobs(spark, build)
+        assert jobs == 0
+
+
+def test_cache_hit_request_builds_without_a_job(spark, tmp_path, monkeypatch):
+    import data_ingestion_pipeline_spark.functions.result_cache as rc
+
+    monkeypatch.setattr(rc, "scratch_path", lambda *a: str(tmp_path / "cache"))
+    api = QueryAPI(spark, SF_TEST, cache=True)
+    first = _multiset(api.timeseries(STATION, START, END, "30 minutes"))
+    hit, build_jobs = run_counting_jobs(
+        spark, lambda: api.timeseries(STATION, START, END, "30 minutes")
+    )
+    rows, collect_jobs = run_counting_jobs(spark, hit.collect)
+    assert (build_jobs, collect_jobs) == (0, 1)
+    assert _multiset(hit) == first
+
+
+def test_long_lived_api_sees_a_replaced_events_file(spark, tmp_path, monkeypatch):
+    """Only the schema is pinned: files are listed per request, so an
+    events.parquet replaced after the first request (same schema, more
+    rows) is what the next miss reads."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import data_ingestion_pipeline_spark.functions.result_cache as rc
+
+    monkeypatch.setattr(rc, "scratch_path", lambda *a: str(tmp_path / "cache"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = str(sf / "events.parquet")
+    shutil.copy(os.path.join(SF_TEST, "events.parquet"), events)
+    api = QueryAPI(spark, str(sf), cache=True)
+    before = api.aggregate(STATION, START, END).collect()[0].reading_count
+    assert before > 0
+
+    tbl = pq.read_table(events)
+    extra = tbl.filter(pc.equal(tbl["user_id"], STATION))
+    i = extra.schema.get_field_index("event_id")
+    extra = extra.set_column(
+        i, "event_id", pc.add(extra["event_id"], pa.scalar(10**9, pa.int64()))
+    )
+    pq.write_table(pa.concat_tables([tbl, extra]), str(sf / "_next.parquet"))
+    os.replace(str(sf / "_next.parquet"), events)
+
+    # a parameter tuple not served before: a miss, read from the new file
+    end2 = "2024-01-20 00:00:01"
+    after = api.aggregate(STATION, START, end2).collect()[0].reading_count
+    fresh = QueryAPI(spark, str(sf)).aggregate(STATION, START, end2)
+    assert after == fresh.collect()[0].reading_count
+    assert after >= 2 * before
 
 
 def test_toolkit_delegates_match_twins(spark):
