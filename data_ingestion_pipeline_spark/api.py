@@ -19,17 +19,15 @@ but plan-identical queries share an entry, and any parameter change
 misses.
 
 Building a request's DataFrame runs no Spark job: a ``QueryAPI``
-reads the raw events schema once, on first use, and every request
-scans with that schema (``load_table(..., schema)``), so only the
-inference is skipped — the files are still listed per request and a
-rewritten ``events.parquet`` is seen. Cache entries carry their own
-schema too, so a cache hit's build runs no job either and its
-collect runs one.
+reads the raw events schema once, when it is constructed, and every
+request scans with that schema (``load_table(..., schema)``), so
+only the inference is skipped — the files are still listed per
+request and a rewritten ``events.parquet`` is seen. Cache entries
+are read with the request's own schema too, so a cache hit's build
+runs no job either and its collect runs one.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,13 +50,9 @@ class QueryAPI:
         self.spark = spark
         self.sf_dir = sf_dir
         self.cache = cache
-        self._raw_schema = None
-        self._schema_lock = threading.Lock()  # clients share one facade
+        self._raw_schema = raw_schema(spark, sf_dir, "events")
 
     def _events(self) -> DataFrame:
-        with self._schema_lock:
-            if self._raw_schema is None:
-                self._raw_schema = raw_schema(self.spark, self.sf_dir, "events")
         return load_table(self.spark, self.sf_dir, "events", self._raw_schema)
 
     def _finish(self, df: DataFrame) -> DataFrame:

@@ -15,30 +15,25 @@ the same query text from two sessions hits the same entry. Two
 different queries collide only if their optimized plans are
 identical modulo ids — i.e. they are the same query.
 
-Each entry carries its schema: a miss writes the result, then
-``df.schema`` as ``_SCHEMA.json`` beside ``_SUCCESS``, and both hits
-and misses read the entry with ``spark.read.schema(...)``, so serving
-an entry runs no schema-inference job. An entry counts as fresh only
-when it has both files; one without a schema file is a miss and is
-rewritten.
+An equal key means the same query, so the caller's ``df.schema`` is
+the entry's schema: hits and misses alike read the entry with
+``spark.read.schema(df.schema)``, and serving an entry runs no
+schema-inference job.
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import re
 import shutil
 import time
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 from data_ingestion_pipeline_spark.operators.upsert import scratch_path
 
 DEFAULT_TTL_SECONDS = 300  # the reference's CACHE_TTL
-SCHEMA_FILE = "_SCHEMA.json"  # "_"-prefixed: the parquet scan skips it
 
 
 def plan_key(df: DataFrame) -> str:
@@ -48,16 +43,9 @@ def plan_key(df: DataFrame) -> str:
     return hashlib.sha256(normalized.encode()).hexdigest()
 
 
-def _fresh_schema(path: str, ttl_seconds: int) -> T.StructType | None:
-    """The stored schema of a fresh entry; None — a miss — when the
-    entry is missing, unfinished, expired or has no schema file."""
-    try:
-        if time.time() - os.path.getmtime(os.path.join(path, "_SUCCESS")) >= ttl_seconds:
-            return None
-        with open(os.path.join(path, SCHEMA_FILE)) as fh:
-            return T.StructType.fromJson(json.load(fh))
-    except (OSError, ValueError):
-        return None
+def _is_fresh(path: str, ttl_seconds: int) -> bool:
+    marker = os.path.join(path, "_SUCCESS")
+    return os.path.exists(marker) and (time.time() - os.path.getmtime(marker)) < ttl_seconds
 
 
 def cached(
@@ -75,12 +63,7 @@ def cached(
     spark = df.sparkSession
     root = cache_root or scratch_path("result_cache")
     path = os.path.join(root, plan_key(df))
-    schema = _fresh_schema(path, ttl_seconds)
-    if schema is None:
+    if not _is_fresh(path, ttl_seconds):
         shutil.rmtree(path, ignore_errors=True)
         df.write.mode("overwrite").parquet(path)
-        schema = df.schema
-        # a torn schema file does not parse: that entry reads as a miss
-        with open(os.path.join(path, SCHEMA_FILE), "w") as fh:
-            fh.write(schema.json())
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(df.schema).parquet(path)

@@ -376,9 +376,12 @@ def _update_property(path: str, name: str, default, fn):
 # data directory is a vacuum-reclaimable orphan. SQL CHECK null
 # semantics: a constraint evaluating to NULL passes (unknown ≠
 # violated). Enforced by every path that ingests NEW rows
-# (commit/append/upsert/COW/MOR-update/MERGE); maintenance rewrites
-# of already-admitted rows (compact, zorder, materialize, localize —
-# every _rewrite_files caller — and purge) write unguarded.
+# (commit/append/upsert/COW/MOR-update/MERGE). The maintenance
+# rewrites that go through _rewrite_files (compact, zorder,
+# materialize, localize) write through the same _write_version_files
+# and are guarded too, so a row that slipped past a racing
+# add_constraint fails them rather than being carried over; purge
+# writes its own files unguarded.
 
 CONSTRAINTS_FILE = "_CONSTRAINTS.json"
 _CHECK_MARKER = "CHECK constraint"
@@ -527,7 +530,6 @@ def _write_version_files(
     partition_col: str | None = None,
     cluster: bool = True,
     data_dir: str | None = None,
-    _admitted: bool = False,
 ) -> dict[str, str | None]:
     """The one versioned file writer: df lands constraint-guarded in a
     fresh attempt directory for version v (partitionBy(partition_col)
@@ -536,9 +538,7 @@ def _write_version_files(
     by distribute_for_write (below the guard, so the guard filters the
     distributed rows) unless the caller passes cluster=False to keep
     its own layout. A caller that must remove the attempt on failure
-    names it (`data_dir`, from _attempt_data_dir). Only _rewrite_files
-    passes `_admitted`: its rows were checked when they were committed,
-    so it writes them without the guard."""
+    names it (`data_dir`, from _attempt_data_dir)."""
     data_dir = data_dir or _attempt_data_dir(path, v)
     if partition_col and cluster:
         df = distribute_for_write(df, partition_col)
@@ -547,10 +547,7 @@ def _write_version_files(
         w = g.write.mode("overwrite")
         (w.partitionBy(partition_col) if partition_col else w).parquet(data_dir)
 
-    if _admitted:
-        write(df)
-    else:
-        _guarded_write(df, path, write)
+    _guarded_write(df, path, write)
     return {
         f: _partition_of(f, partition_col) for f in _walk_rel_parquet(data_dir, path)
     }
@@ -1373,7 +1370,7 @@ def _rewrite_files(
         try:
             added = _write_version_files(
                 path, v, shape(out) if shape else out, pc,
-                cluster=shape is None, data_dir=data_dir, _admitted=True,
+                cluster=shape is None, data_dir=data_dir,
             )
             if any(sentinel in f for f in added) and not any(
                 tags.get(f) == sentinel for f in files

@@ -80,12 +80,13 @@ def test_latest_matches_registry_twin(spark):
     assert _multiset(got) == _multiset(want)
 
 
-def test_second_request_runs_no_schema_inference_job(spark):
-    """The events schema is read once per QueryAPI: after the first
-    request, building a request runs no Spark job."""
+def test_requests_run_no_schema_inference_job(spark):
+    """The events schema is read once, when the QueryAPI is built:
+    building any request, the first and every later one, runs no
+    Spark job."""
     api = QueryAPI(spark, SF_TEST)
-    api.raw(STATION)
     for build in (
+        lambda: api.raw(STATION),
         lambda: api.raw(STATION, START, END, limit=5),
         lambda: api.aggregate(STATION, START, END),
         lambda: api.timeseries(STATION, START, END, "1 day"),

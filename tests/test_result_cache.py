@@ -6,11 +6,7 @@ import glob
 import os
 import shutil
 
-from data_ingestion_pipeline_spark.functions.result_cache import (
-    SCHEMA_FILE,
-    cached,
-    plan_key,
-)
+from data_ingestion_pipeline_spark.functions.result_cache import cached, plan_key
 from data_ingestion_pipeline_spark.operators.queries import grouped_agg_all_stations
 from data_ingestion_pipeline_spark.operators.upsert import scratch_path
 from tests.conftest import SF_TEST, run_counting_jobs
@@ -51,8 +47,8 @@ def test_cache_hit_serves_stored_result_and_expires(spark):
 
 
 def test_hit_builds_without_a_job_and_a_miss_runs_only_the_write(spark, tmp_path):
-    """Entries carry their schema, so no read of an entry infers one:
-    a miss runs exactly the jobs of writing the result, a hit's build
+    """An entry is read with the caller's schema, so no read of it
+    infers one: a miss runs exactly the jobs of writing the result, a hit's build
     runs none, and collecting a hit runs one."""
     root = str(tmp_path / "cache")
     df = grouped_agg_all_stations(spark, SF_TEST)
@@ -67,21 +63,3 @@ def test_hit_builds_without_a_job_and_a_miss_runs_only_the_write(spark, tmp_path
     rows, collect_jobs = run_counting_jobs(spark, hit.collect)
     assert (build_jobs, collect_jobs) == (0, 1)
     assert sorted(tuple(r) for r in rows) == expected
-
-
-def test_entry_without_schema_file_is_a_miss(spark, tmp_path):
-    """Fail closed: an entry whose schema file is gone is rewritten,
-    not read by inference and not an error."""
-    root = str(tmp_path / "cache")
-    df = grouped_agg_all_stations(spark, SF_TEST)
-    key = plan_key(df)
-    expected = sorted(tuple(r) for r in df.collect())
-    cached(df, cache_root=root).collect()
-    schema_file = os.path.join(root, key, SCHEMA_FILE)
-    os.remove(schema_file)
-    before = _entry_files(root, key)
-
-    got = sorted(tuple(r) for r in cached(df, cache_root=root).collect())
-    assert got == expected
-    assert os.path.isfile(schema_file)
-    assert _entry_files(root, key) != before

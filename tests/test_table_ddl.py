@@ -152,41 +152,3 @@ def test_read_tag_names_an_unknown_tag(spark, tmp_path):
     with pytest.raises(ValueError, match=r"no such tag 'nope'; tags: \['now'\]"):
         V.read_tag(spark, path, "nope")
     assert V.read_tag(spark, path, "now").count() == 1
-
-
-def test_rewrites_skip_the_check_guard_and_appends_keep_it(
-    spark, tmp_path, monkeypatch
-):
-    """A maintenance rewrite moves rows the table already admitted, so
-    compaction of a constrained table plans no assert_true; an append
-    of new rows to the same table still does."""
-    path = str(tmp_path / "guard")
-    os.makedirs(path)
-    for lo in (0, 50):
-        V.append_version_clustered(
-            spark, path,
-            spark.range(lo, lo + 50, numPartitions=2).selectExpr("id as k"),
-            None,
-        )
-    V.add_constraint(spark, path, "nonneg", "k >= 0")
-
-    cls = type(spark.range(1))
-    write = cls.write
-    plans: list[str] = []
-
-    def spy(df):
-        plans.append(df._jdf.queryExecution().analyzed().toString())
-        return write.fget(df)
-
-    monkeypatch.setattr(cls, "write", property(spy))
-    v = V.current_version(path)
-    V.compact_files(spark, path)
-    assert V.current_version(path) == v + 1 and plans
-    assert not any("assert_true" in p for p in plans)
-    assert V.read_version(spark, path).count() == 100
-
-    plans.clear()
-    V.append_version_clustered(
-        spark, path, spark.range(100, 110).selectExpr("id as k"), None
-    )
-    assert any("assert_true" in p for p in plans)
