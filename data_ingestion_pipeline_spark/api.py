@@ -13,18 +13,19 @@ code path here is the same plan the oracle-verified entries pin.
 
 Caching mirrors the reference's Redis layer (`services/query/
 main.py:60-124`, TTL 300 s): pass ``cache=True`` and results flow
-through functions/result_cache.py — a TTL'd parquet-backed cache
-keyed by the normalized optimized plan, so two textually different
-but plan-identical queries share an entry, and any parameter change
-misses.
+through functions/result_cache.py — a TTL'd cache of whole
+responses, one parquet file each, keyed by the normalized optimized
+plan, so two textually different but plan-identical queries share an
+entry, and any parameter change misses.
 
 Building a request's DataFrame runs no Spark job: a ``QueryAPI``
 reads the raw events schema once, when it is constructed, and every
 request scans with that schema (``load_table(..., schema)``), so
 only the inference is skipped — the files are still listed per
-request and a rewritten ``events.parquet`` is seen. Cache entries
-are read with the request's own schema too, so a cache hit's build
-runs no job either and its collect runs one.
+request and a rewritten ``events.parquet`` is seen. With the cache
+on, a miss runs only the query's own jobs, and every cached response
+is a local relation with the request's own schema and row order: a
+hit's build and its collect run no job at all.
 """
 
 from __future__ import annotations

@@ -1287,7 +1287,7 @@ def _publish_mor(
             "overwrite"
         ).parquet(sidecar_dir)
         n_dv, dead_files = _dv_sidecar_stats(
-            spark, path, sidecar_dir, {"files": [*m["files"], *new_files]}
+            path, sidecar_dir, {"files": [*m["files"], *new_files]}
         )
         dv = None
         if n_dv:
@@ -1468,20 +1468,21 @@ def delete_rows_dv(
 
 
 def _dv_sidecar_stats(
-    spark: SparkSession, path: str, sidecar_dir: str, m: dict
+    path: str, sidecar_dir: str, m: dict
 ) -> tuple[int, list[str]]:
     """(cumulative DV row count, fully-dead file relpaths) for a
-    just-written DV sidecar. The count comes from the sidecar's
-    parquet FOOTERS — driver-side metadata, no Spark job (the r12
+    just-written DV sidecar, computed on the driver with no Spark job.
+    The count comes from the sidecar's parquet FOOTERS (the r12
     spark.read.count() here was VERDICT finding d). Dead-file
     detection (per-file DV counts vs data-file footer row counts)
-    costs one small aggregation job over the sidecar, so it runs ONLY
-    when the table has index pointers to serve from — the tables
-    where unbounded dead-candidate growth actually hurts. Both
-    footer passes touch O(sidecar shards) + O(DV-touched files)
-    metadata, never data pages."""
+    runs ONLY when the table has index pointers to serve from — the
+    tables where unbounded dead-candidate growth actually hurts — and
+    counts the sidecar parts' `file` column with pyarrow, one part at
+    a time. Both footer passes touch O(sidecar shards) + O(DV-touched
+    files) metadata; the count reads one column of the sidecar."""
     import glob as _glob
 
+    import pyarrow.compute as _pc
     import pyarrow.parquet as _pq
 
     parts = sorted(_glob.glob(os.path.join(sidecar_dir, "*.parquet")))
@@ -1490,14 +1491,13 @@ def _dv_sidecar_stats(
         return 0, []
     if not _pointer_files(path):
         return n_dv, []
-    counts = {
-        r.file: r.cnt
-        for r in spark.read.schema("file string, pos bigint")
-        .parquet(sidecar_dir)
-        .groupBy("file")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
+    counts: dict[str, int] = {}
+    for f in parts:
+        vc = _pc.value_counts(_pq.read_table(f, columns=["file"])["file"])
+        for rel, cnt in zip(
+            vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+        ):
+            counts[rel] = counts.get(rel, 0) + cnt
     abs_root = os.path.abspath(path)
     manifest_files = set(m["files"])
     dead = []

@@ -50,6 +50,7 @@ import os
 import shutil
 import threading
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -262,6 +263,27 @@ def _stream_shuffle(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def exactly_once_sink(
+    table: str, sink: Callable[[DataFrame, int], None]
+) -> Callable[[DataFrame, int], None]:
+    """``sink`` as a foreachBatch function on the versioned ``table``
+    that skips a replayed batch (restart recovery, at-least-once
+    delivery): one whose id is at most the ``batch_id`` its sink last
+    committed as meta. The read is ``latest_meta``, not the head
+    manifest's meta: a DV delete, a schema change or a compaction
+    publishes its own meta, and a head-only read would return nothing
+    after one and apply the replay again."""
+    from data_ingestion_pipeline_spark.operators import versioned as V
+
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        last = V.latest_meta(table, "batch_id")
+        if last is not None and batch_id <= last:
+            return  # replayed batch: already committed
+        sink(bdf, batch_id)
+
+    return _sink
 
 
 class _ObservedCounter(StreamingQueryListener):
@@ -1133,8 +1155,6 @@ def stream_session_windows(
         # replayed tombstone re-matches nothing and fails the insert
         # guard — apply_changes_mor's argument).
         sess = bdf.sparkSession
-        if batch_id <= V.manifest_meta(table).get("batch_id", -1):
-            return  # replayed batch: already committed
         if V.current_version(table) == 0:
             V.commit_version(
                 sess,
@@ -1185,7 +1205,7 @@ def stream_session_windows(
 
     with _stream_shuffle(spark):
         query = (
-            stream.writeStream.foreachBatch(_sink)
+            stream.writeStream.foreachBatch(exactly_once_sink(table, _sink))
             .outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -1275,8 +1295,6 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         # debt); min-merge already made replays value-idempotent, and
         # the batch-id meta short-circuits them entirely.
         sess = bdf.sparkSession
-        if batch_id <= V.manifest_meta(table).get("batch_id", -1):
-            return  # replayed batch: already committed
         if V.current_version(table) > 0:
             merged = V.read_version(sess, table).unionByName(bdf)
         else:
@@ -1295,7 +1313,7 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _stream_shuffle(spark):
         query = (
-            stream.writeStream.foreachBatch(_sink)
+            stream.writeStream.foreachBatch(exactly_once_sink(table, _sink))
             .outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -1462,8 +1480,6 @@ def stream_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_feed(spark, sf_dir, feed, with_dups=False)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        if batch_id <= V.manifest_meta(table).get("batch_id", -1):
-            return  # replayed batch: already committed, exactly-once skip
         meta = {"batch_id": batch_id}
         if V.current_version(table) == 0:
             V.commit_version(spark, table, bdf, meta=meta)
@@ -1475,7 +1491,7 @@ def stream_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema(FEED_SCHEMA)
             .option("maxFilesPerTrigger", 2)
             .parquet(feed)
-            .writeStream.foreachBatch(_sink)
+            .writeStream.foreachBatch(exactly_once_sink(table, _sink))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -1531,8 +1547,6 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     build_feed(spark, sf_dir, feed, with_dups=True)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        if batch_id <= V.manifest_meta(table).get("batch_id", -1):
-            return  # replayed batch: already committed, exactly-once skip
         batch = bdf.dropDuplicates(["event_id"])
         carried: list[str] = []
         m = None
@@ -1575,7 +1589,7 @@ def stream_versioned_append_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             spark.readStream.schema(FEED_SCHEMA)
             .option("maxFilesPerTrigger", 2)
             .parquet(feed)
-            .writeStream.foreachBatch(_sink)
+            .writeStream.foreachBatch(exactly_once_sink(table, _sink))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -1673,8 +1687,6 @@ def stream_cdc_merge_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_cdc_feed(spark, sf_dir, feed)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        if batch_id <= V.manifest_meta(table).get("batch_id", -1):
-            return  # replayed batch: already committed, exactly-once skip
         if V.current_version(table) == 0:
             V.commit_version(
                 spark, table, spark.createDataFrame([], FEED_SCHEMA)
@@ -1688,7 +1700,7 @@ def stream_cdc_merge_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema(CDC_FEED_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
-            .writeStream.foreachBatch(_sink)
+            .writeStream.foreachBatch(exactly_once_sink(table, _sink))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()

@@ -106,7 +106,7 @@ def test_cache_hit_request_builds_without_a_job(spark, tmp_path, monkeypatch):
         spark, lambda: api.timeseries(STATION, START, END, "30 minutes")
     )
     rows, collect_jobs = run_counting_jobs(spark, hit.collect)
-    assert (build_jobs, collect_jobs) == (0, 1)
+    assert (build_jobs, collect_jobs) == (0, 0)
     assert _multiset(hit) == first
 
 

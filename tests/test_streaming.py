@@ -235,6 +235,39 @@ def test_session_merge_is_associative():
         assert json.dumps(state) == json.dumps(expected), trial
 
 
+def test_replayed_batch_after_dv_delete_adds_no_rows(spark, tmp_path):
+    """The replay guard reads the newest batch_id any commit carries,
+    not the head manifest's: a DV delete publishes its own meta, and a
+    batch replayed after it must still be skipped. The sink here is a
+    plain append, so a replay the guard let through would add its rows
+    again."""
+    from data_ingestion_pipeline_spark.operators import versioned as V
+    from data_ingestion_pipeline_spark.streaming.pipeline import (
+        exactly_once_sink,
+    )
+
+    table = str(tmp_path / "table")
+    os.makedirs(table)
+    ev = load_table(spark, SF_TEST, "events").select(*FEED_COLS)
+    batch = ev.filter(F.col("event_id") % 20 == 0)
+    sink = exactly_once_sink(
+        table,
+        lambda bdf, batch_id: V.append_version_clustered(
+            spark, table, bdf, None, meta={"batch_id": batch_id}
+        ),
+    )
+    sink(batch, 0)
+    V.delete_rows_dv(spark, table, F.col("event_id") % 40 == 0)
+    assert "batch_id" not in V.manifest_meta(table)  # the head hides it
+    live = V.read_version(spark, table).count()
+    assert 0 < live < batch.count()
+
+    sink(batch, 0)  # replay after the delete
+    assert V.read_version(spark, table).count() == live
+    sink(ev.filter(F.col("event_id") % 20 == 1), 1)  # a new batch lands
+    assert V.read_version(spark, table).count() > live
+
+
 def test_corpus_ingest_replay_idempotent(spark, tmp_path):
     """At-least-once absorption for the corpus ingest: replaying an
     already-applied crawl batch against the table adds zero rows (the

@@ -1768,6 +1768,46 @@ def test_dv_commit_drops_fully_dead_files_from_probes(spark, tmp_path):
     assert got == want
 
 
+def test_dv_stats_step_runs_no_job(spark, tmp_path):
+    """A DV commit on an indexed table finds its fully-dead files on
+    the driver: the stats step reads footers and the sidecar's `file`
+    column with pyarrow and runs no Spark job, and its per-file counts
+    are those of a Spark groupBy over the same sidecar."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import run_counting_jobs
+
+    path = str(tmp_path / "dvstats")
+    os.makedirs(path)
+    ev = _events(spark)
+    versioned.commit_version(
+        spark, path, ev.repartitionByRange(8, "event_id"),
+        stats_cols=["event_id"],
+    )
+    ids = sorted(r.event_id for r in ev.select("event_id").collect())
+    versioned.delete_rows_dv(
+        spark, path, F.col("event_id") <= ids[len(ids) // 3]
+    )
+    m = versioned._manifest(path)
+    sidecar = os.path.join(path, m["dv"]["sidecar"])
+
+    (n_dv, dead), jobs = run_counting_jobs(
+        spark, lambda: versioned._dv_sidecar_stats(path, sidecar, m)
+    )
+    assert jobs == 0
+    assert (n_dv, dead) == (m["dv"]["rows"], m["dv"]["dead_files"])
+
+    per_file = (
+        spark.read.parquet(sidecar).groupBy("file").count().collect()
+    )
+    want = sorted(
+        r.file for r in per_file
+        if r["count"]
+        >= pq.ParquetFile(os.path.join(path, r.file)).metadata.num_rows
+    )
+    assert want and dead == want
+
+
 def test_commit_partitioned_inherits_dv_when_carrying(spark, tmp_path):
     """ADVICE r12: a caller passing `carried` without threading `dv`
     silently dropped the deletion vector and resurrected soft-deleted
